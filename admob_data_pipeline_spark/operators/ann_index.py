@@ -71,23 +71,43 @@ from admob_data_pipeline_spark.operators.similarity import (
 )
 from admob_data_pipeline_spark.sinks.writers import (
     BASE_EPOCH,
-    TOMBSTONE_VEC_SCHEMA,
     _fs_and_path,
-    burn_epoch_id,
     claim_epoch,
-    compact_bucketed_table,
     index_manifest,
     next_epoch,
     overwrite_epoch_partition,
-    purge_applied_tombstones,
     snapshot_tombstones,
     table_location,
     write_epoch_bucketed,
+)
+from admob_data_pipeline_spark.operators.epoch_index import (
+    EpochIndex,
+    drain_stream,
+    drop_index_tables,
+    index_compact,
+    index_delete,
+    scratch_index,
+    write_empty_tombstones,
 )
 from admob_data_pipeline_spark.operators.util import par_ops
 from admob_data_pipeline_spark.sources.tables import load_table
 
 CODES_BUCKETS = 8
+
+# Re-upserts stamp supersession tombstones instead of keeping a version
+# manifest, so compaction expands the stamps against the codes epochs.
+ANN_INDEX = EpochIndex(
+    name="ann_idx",
+    tables=(
+        ("centroids", False),
+        ("codebooks", False),
+        ("codes", True),
+        ("tombstones", False),
+    ),
+    key="vec_id",
+    ledger="codes",
+    rewrites=(("codes", "list_id", CODES_BUCKETS),),
+)
 
 
 def ann_index_build(
@@ -140,8 +160,7 @@ def ann_index_build(
     coded = base.select("vec_id", "v").mapInPandas(kern, schema=code_schema)
 
     spark = emb.sparkSession
-    for t in ("centroids", "codebooks", "codes", "tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{t}")
+    drop_index_tables(spark, ANN_INDEX, table_prefix)
     cb_df = spark.createDataFrame(
         [
             (s, c, book_mats[s][c])
@@ -164,18 +183,6 @@ def ann_index_build(
             "path", f"{path}/codebooks"
         ).saveAsTable(f"{table_prefix}_codebooks")
 
-    def _write_tombstones() -> None:
-        # empty tombstone set: deletes are logical until the next
-        # compaction; each is stamped with the newest ingest epoch at
-        # issue time so as-of reads can reconstruct pre-delete history
-        # (only back to the last compaction — folding epochs discards
-        # the history span)
-        spark.createDataFrame(
-            [], TOMBSTONE_VEC_SCHEMA
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{path}/tombstones"
-        ).saveAsTable(f"{table_prefix}_tombstones")
-
     def _write_codes() -> None:
         code_cols = [F.col(f"c{s}") for s in range(m)]
         write_epoch_bucketed(
@@ -192,7 +199,12 @@ def ann_index_build(
     # (guide §2.6 — overlap independent jobs; measured 3.4 s → ~1.9 s
     # for the build at sf0.1). Build completion = all four committed,
     # same contract as the serial form.
-    par_ops(_write_centroids, _write_codebooks, _write_tombstones, _write_codes)
+    par_ops(
+        _write_centroids,
+        _write_codebooks,
+        lambda: write_empty_tombstones(spark, ANN_INDEX, table_prefix, path),
+        _write_codes,
+    )
 
 
 def _persisted_codebooks(spark: SparkSession, table_prefix: str) -> list:
@@ -283,6 +295,16 @@ def ann_index_upsert(
     corpus with the BASE-trained quantizers — exactly how FAISS-style
     serving handles drift (rebuild cadence is an offline decision; the
     registered oracle pins this equivalence relationally).
+
+    Crash window (dual serve): supersession detection and the codes
+    write run CONCURRENTLY, so epoch e's codes can commit before the
+    tombstones that retire the earlier versions of its revised ids. A
+    crash between the two commits leaves BOTH versions of those ids
+    serving until the batch is replayed; a replay at the same epoch
+    lands the missing tombstones and heals it. Streaming callers get
+    the replay from foreachBatch; a batch caller that does not retry a
+    failed upsert keeps the duplicates until it re-runs the upsert (or
+    deletes the ids).
     """
     spark = delta.sparkSession
     table = f"{table_prefix}_codes"
@@ -581,19 +603,10 @@ def _with_index(spark: SparkSession, sf_dir: str, fn):
     """Build the index in a scratch location, run ``fn(emb, prefix)``,
     collect, and clean up — the same lifecycle pattern as the bucketed
     sink round-trip query."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="ann_index_")
-    prefix = "ann_idx_rt"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(emb, prefix, out)
         return fn(emb, prefix)
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
 
 
 _SEARCH_SCHEMA = "qid bigint, vec_id bigint, adc_e6 bigint, rank int"
@@ -757,22 +770,13 @@ def q_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizers (centroids + codebooks) sampled from the BASE slice
     only, assignment/codes over the WHOLE corpus — so a lost, doubled,
     or re-quantized delta row fails the hash."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_upsert_")
-    prefix = "ann_idx_up"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         ann_index_upsert(delta, prefix)
         rows = ann_index_search(emb, QUERY_IDS, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -787,16 +791,12 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one source file per trigger), so a dropped or replayed epoch fails
     the hash."""
     import os
-    import shutil
-    import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_stream_ingest_")
-    prefix = "ann_idx_st"
-    src = os.path.join(out, "arrivals")
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
+        src = os.path.join(out, "arrivals")
         ann_index_build(base_corpus, prefix, os.path.join(out, "index"))
         # frozen-quantizer contract: load the centroid/codebook
         # artifacts ONCE for the whole stream instead of twice per
@@ -808,31 +808,18 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"(vec_id % {2 * UPSERT_MOD}) div {UPSERT_MOD}")
                 == half
             ).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        # the batch id IS the idempotency key (pinned by the forced-
+        # replay and kill/restart tests in test_ann_index.py)
+        drain_stream(
+            spark,
+            emb.schema,
+            src,
+            os.path.join(out, "ckpt"),
+            lambda batch, eid: ann_index_upsert(
+                batch, prefix, epoch=eid, quantizers=quant
+            ),
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                # the batch id IS the idempotency key: a replayed epoch
-                # rewrites its own partition instead of double-appending
-                # (foreachBatch is at-least-once; pinned by the forced-
-                # replay and kill/restart tests in test_ann_index.py)
-                lambda batch, eid: ann_index_upsert(
-                    batch, prefix, epoch=eid, quantizers=quant
-                )
-            )
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         rows = ann_index_search(emb, QUERY_IDS, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -857,40 +844,17 @@ def q_streaming_ann_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert oracle verbatim — the full delta must be present exactly
     once with compaction invisible to ADC ranking."""
     import os
-    import shutil
-    import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
     sub = F.expr(f"pmod(vec_id div {UPSERT_MOD}, 4)")
-    out = tempfile.mkdtemp(prefix="ann_stream_maint_")
-    prefix = "ann_idx_stm"
-
-    quant: list = []  # loaded once, after the build (frozen thereafter)
-
-    def run_stream(src: str, ckpt: str) -> None:
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda batch, eid: ann_index_upsert(
-                    batch, prefix, epoch=eid, quantizers=quant[0]
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, os.path.join(out, "index"))
         # one frozen-quantizer load serves BOTH streams: the
         # maintenance window between them is a compaction, which never
         # touches the centroid/codebook tables (guide §5)
-        quant.append(load_ann_quantizers(spark, prefix))
+        quant = load_ann_quantizers(spark, prefix)
         for phase, slices in (("one", (0, 1)), ("two", (2, 3))):
             src = os.path.join(out, f"arrivals_{phase}")
             for s in slices:
@@ -902,12 +866,16 @@ def q_streaming_ann_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # WHY a fresh checkpoint's batch ids are safe to reuse
                 ann_index_compact(spark, prefix)
                 assert next_epoch(spark, f"{prefix}_codes") == 0
-            run_stream(src, os.path.join(out, f"ckpt_{phase}"))
+            drain_stream(
+                spark,
+                emb.schema,
+                src,
+                os.path.join(out, f"ckpt_{phase}"),
+                lambda batch, eid: ann_index_upsert(
+                    batch, prefix, epoch=eid, quantizers=quant
+                ),
+            )
         rows = ann_index_search(emb, QUERY_IDS, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1019,9 +987,6 @@ def q_ann_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the purge; the oracle recomputes IVF-PQ over the REVISED corpus
     with quantizers sampled from the ORIGINAL base slice (build
     predates the revision) and query vectors from the raw table."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
@@ -1031,9 +996,7 @@ def q_ann_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: -x).alias("embedding"),
     )
-    out = tempfile.mkdtemp(prefix="ann_index_reupsert_")
-    prefix = "ann_idx_re"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         quant = load_ann_quantizers(spark, prefix)
         ann_index_upsert(delta, prefix, epoch=0, quantizers=quant)
@@ -1055,10 +1018,6 @@ def q_ann_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert dupes == 0, f"{dupes} vectors kept >1 version post-compaction"
         assert n_tomb == 0
         assert rows == pre, "compaction changed ranking"
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1185,17 +1144,7 @@ def ann_index_delete(
     ingest window (epoch 0), so an as-of read at the build epoch
     (BASE_EPOCH) always returns the pristine build — base history is
     immutable (pinned in tests/test_ann_index.py)."""
-    stamp = max(next_epoch(spark, f"{table_prefix}_codes") - 1, BASE_EPOCH + 1)
-    # the stamp id is BURNED in the ledger: a later auto-minted ingest
-    # epoch is strictly greater, so re-ingesting the id RESURRECTS it
-    # (epoch-aware mask) instead of landing at epoch == stamp
-    burn_epoch_id(spark, f"{table_prefix}_codes", stamp)
-    vec_ids.select(
-        F.col("vec_id").cast("long"),
-        F.lit(int(stamp)).cast("long").alias("deleted_at_epoch"),
-    ).write.mode("append").format("parquet").saveAsTable(
-        f"{table_prefix}_tombstones"
-    )
+    index_delete(spark, ANN_INDEX, vec_ids, table_prefix)
 
 
 def ann_index_compact(spark: SparkSession, table_prefix: str) -> tuple[int, int]:
@@ -1203,40 +1152,19 @@ def ann_index_compact(spark: SparkSession, table_prefix: str) -> tuple[int, int]
     epoch of the code table back into the base partition, PURGE
     tombstoned rows, and rewrite one-file-per-bucket (same bucket spec
     — the zero-Exchange probe join survives, pinned in
-    tests/test_ann_index.py). The tombstone set is then truncated
-    SELECTIVELY: the rewrite anti-joins a MATERIALIZED snapshot of the
-    tombstones and only those snapshot rows are dropped afterward — a
-    delete appended concurrently with the rewrite survives to the next
-    cycle instead of being silently wiped unpurged (no resurrection
-    race). Post-compaction the logical and physical views coincide for
-    every tombstone that existed at entry. Run only when no replay of
-    the folded epochs is possible (the stream is stopped or its
-    checkpoint has committed past them); folding also voids as-of
-    history for the folded span — see compact_bucketed_table."""
-    tomb = f"{table_prefix}_tombstones"
-    snap, applied = snapshot_tombstones(spark, tomb, TOMBSTONE_VEC_SCHEMA)
-    # EPOCH-AWARE purge (mirrors the serving mask): a tombstone stamped
-    # e kills only rows ingested at epoch ≤ e, so a version re-ingested
-    # AFTER a delete or a re-upsert survives the rewrite. Expand the
-    # snapshot against the table's (few, ≤ compaction-cadence) distinct
-    # epochs into exact (vec_id, epoch) purge pairs — the composite
-    # anti-join equality compact_bucketed_table can push.
-    epochs = spark.table(f"{table_prefix}_codes").select("epoch").distinct()
-    pairs = (
-        snap.crossJoin(epochs)
-        .where(F.col("epoch") <= F.col("deleted_at_epoch"))
-        .select("vec_id", "epoch")
+    tests/test_ann_index.py). Only the tombstone files the rewrite
+    applied are then deleted — a delete appended concurrently with the
+    rewrite survives to the next cycle instead of being silently wiped
+    unpurged (no resurrection race). Post-compaction the logical and
+    physical views coincide for every tombstone that existed at entry.
+    Run only when no replay of the folded epochs is possible (the
+    stream is stopped or its checkpoint has committed past them);
+    folding also voids as-of history for the folded span — see
+    compact_bucketed_table."""
+    tombs = snapshot_tombstones(
+        spark, f"{table_prefix}_tombstones", ANN_INDEX.tomb_schema
     )
-    out = compact_bucketed_table(
-        spark,
-        f"{table_prefix}_codes",
-        key="list_id",
-        n_buckets=CODES_BUCKETS,
-        fold_partition=("epoch", BASE_EPOCH),
-        anti=(["vec_id", "epoch"], pairs),
-    )
-    purge_applied_tombstones(spark, tomb, applied)
-    return out
+    return index_compact(spark, ANN_INDEX, table_prefix, tombs)[0]
 
 
 def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1247,15 +1175,10 @@ def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the file count must strictly drop (folded into the result so a
     no-op compaction fails the hash: n_files_after < n_files_before is
     asserted by construction, the row carries both counts)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_compact_")
-    prefix = "ann_idx_cp"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         quant = load_ann_quantizers(spark, prefix)
         for half in (0, 1):
@@ -1271,10 +1194,6 @@ def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         before, after = ann_index_compact(spark, prefix)
         assert after < before, (before, after)
         rows = ann_index_search(emb, QUERY_IDS, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1323,22 +1242,13 @@ def q_ann_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-list drift. The oracle recomputes both layers' assignments from
     first principles with BASE-frozen centroids, so a vector counted in
     the wrong layer or list fails the hash."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_drift_")
-    prefix = "ann_idx_drift"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         ann_index_upsert(delta, prefix, epoch=0)
         rows = ann_index_drift(spark, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "list_id bigint, n_base bigint, n_delta bigint,"
@@ -1670,15 +1580,10 @@ def q_ann_index_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so a vector moved to the wrong child, a touched untouched list,
     or an epoch-layer leak fails the hash. The wrapper also asserts the
     remedy acted: each flagged list strictly shed members."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_split_")
-    prefix = "ann_idx_split"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         ann_index_upsert(delta, prefix, epoch=0)
         pre = ann_index_drift(spark, prefix).collect()
@@ -1694,10 +1599,6 @@ def q_ann_index_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         post_n = {r["list_id"]: r["n_base"] + r["n_delta"] for r in rows}
         for lid in flagged:
             assert post_n.get(lid, 0) < pre_n[lid], (lid, pre_n, post_n)
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "list_id bigint, n_base bigint, n_delta bigint,"
@@ -1859,15 +1760,10 @@ def q_ann_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the epoch fold (every row in the base layer, zero delta) — so
     a remedy that failed to fire, fired on the wrong lists, purged the
     wrong rows, or leaked an epoch fails the hash."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_autopilot_")
-    prefix = "ann_idx_auto"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         # quantizers frozen across the three ingest epochs (the split
         # in the later autopilot cycle retrains, but no upsert follows
@@ -1894,10 +1790,6 @@ def q_ann_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert len(actions) == 2 and actions[0].startswith("split:"), actions
         assert actions[1] == "compact", actions
         rows = ann_index_drift(spark, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "list_id bigint, n_base bigint, n_delta bigint,"
@@ -2006,24 +1898,15 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion injected into the candidate set, so a tombstone that
     leaks (or over-masks) fails the hash. The delete is applied TWICE
     to pin that duplicate tombstones are harmless."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="ann_index_delete_")
-    prefix = "ann_idx_del"
     doomed = emb.where(
         F.col("vec_id") % DELETE_MOD == DELETE_REM
     ).select("vec_id")
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(emb, prefix, out)
         ann_index_delete(spark, doomed, prefix)
         ann_index_delete(spark, doomed, prefix)  # replayed delete: no-op
         rows = ann_index_search(emb, QUERY_IDS, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -2047,24 +1930,15 @@ def q_ann_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction folds them into the base partition and physically
     applies deletes, voiding older as-of points (the LSM
     snapshot-expiry trade, see compact_bucketed_table)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
-    out = tempfile.mkdtemp(prefix="ann_index_asof_")
-    prefix = "ann_idx_asof"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         ann_index_upsert(delta, prefix, epoch=0)
         rows = ann_index_search(
             emb, QUERY_IDS, prefix, as_of_epoch=BASE_EPOCH
         ).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -2083,16 +1957,7 @@ def ann_index_manifest(spark: SparkSession, table_prefix: str) -> DataFrame:
     """DESCRIBE-INDEX for the ANN index (shared helper in
     sinks/writers.py): per-table logical row counts + ingest-epoch
     spans, read from the index alone."""
-    return index_manifest(
-        spark,
-        table_prefix,
-        [
-            ("centroids", False),
-            ("codebooks", False),
-            ("codes", True),
-            ("tombstones", False),
-        ],
-    )
+    return index_manifest(spark, table_prefix, ANN_INDEX.tables)
 
 
 def q_ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2100,26 +1965,17 @@ def q_ann_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice, read the manifest. The oracle recomputes every logical count
     from the raw corpus with the same splits (centroid sampling rule,
     m·kc codebook rows, per-epoch code rows, tombstone volume)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     base_corpus = emb.where(F.col("vec_id") % UPSERT_MOD != UPSERT_MOD - 1)
     delta = emb.where(F.col("vec_id") % UPSERT_MOD == UPSERT_MOD - 1)
     doomed = emb.where(
         F.col("vec_id") % DELETE_MOD == DELETE_REM
     ).select("vec_id")
-    out = tempfile.mkdtemp(prefix="ann_index_manifest_")
-    prefix = "ann_idx_mf"
-    try:
+    with scratch_index(spark, ANN_INDEX) as (out, prefix):
         ann_index_build(base_corpus, prefix, out)
         ann_index_upsert(delta, prefix, epoch=0)
         ann_index_delete(spark, doomed, prefix)
         rows = ann_index_manifest(spark, prefix).collect()
-    finally:
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "table_name string, n_rows bigint, n_epochs bigint,"
@@ -2160,18 +2016,15 @@ def serving_plans(spark: SparkSession, sf_dir: str):
     must be audited against a prebuilt scratch index. Returns
     ``(name → thunk-of-lazy-DataFrame, cleanup)``; the auditor explains
     each thunk's frame and then calls cleanup."""
-    import shutil
-    import tempfile
+    from contextlib import ExitStack
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="ann_index_audit_")
-    prefix = "ann_idx_audit"
-    ann_index_build(emb, prefix, out)
-
-    def cleanup():
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+    with ExitStack() as scratch:
+        out, prefix = scratch.enter_context(
+            scratch_index(spark, ANN_INDEX)
+        )
+        ann_index_build(emb, prefix, out)
+        cleanup = scratch.pop_all().close
 
     return {
         "ann_index_search": lambda: ann_index_search(

@@ -51,6 +51,15 @@ from admob_data_pipeline_spark.operators.dedup import (
     lsh_band_keys,
     minhash_signatures,
 )
+from admob_data_pipeline_spark.operators.epoch_index import (
+    EpochIndex,
+    drain_stream,
+    drop_index_tables,
+    index_compact,
+    index_delete,
+    scratch_index,
+    write_empty_tombstones,
+)
 from admob_data_pipeline_spark.operators.util import (
     BROADCAST_ROW_LIMIT,
     join_small,
@@ -58,21 +67,38 @@ from admob_data_pipeline_spark.operators.util import (
 )
 from admob_data_pipeline_spark.sinks.writers import (
     BASE_EPOCH,
-    TOMBSTONE_DOC_SCHEMA,
-    burn_epoch_id,
     claim_epoch,
-    compact_bucketed_table,
     index_manifest,
     next_epoch,
     overwrite_epoch_partition,
     overwrite_epoch_partitions,
-    purge_applied_tombstones,
     snapshot_tombstones,
     write_epoch_bucketed,
 )
 from admob_data_pipeline_spark.sources.tables import load_table
 
 DEDUP_IDX_BUCKETS = 8
+
+# shsizes is the version manifest (one row per ingested version of a
+# doc): the probe masks stale versions there, compaction purges them.
+DEDUP_INDEX = EpochIndex(
+    name="dedup_idx",
+    tables=(
+        ("bands", True),
+        ("shingles", True),
+        ("shsizes", True),
+        ("banned", False),
+        ("tombstones", False),
+    ),
+    key="doc_id",
+    ledger="bands",
+    rewrites=(
+        ("bands", "band_key", DEDUP_IDX_BUCKETS),
+        ("shingles", "doc_id", DEDUP_IDX_BUCKETS),
+        ("shsizes", None, None),
+    ),
+    versions="shsizes",
+)
 PROBE_MOD = 5  # batch = doc_id % 5 == 0 (same split as dedup_incremental)
 DEDUP_DELETE_MOD, DEDUP_DELETE_REM = 10, 1  # deleted slice (inside base)
 
@@ -99,18 +125,7 @@ def dedup_index_build(
     )
     sh = join_small(sh_all, banned, "shingle", "left_anti").localCheckpoint()
     bands = lsh_band_keys(minhash_signatures(sh), band_in_key=True)
-    for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{t}")
-
-    def _write_tombstones() -> None:
-        # empty tombstone set: deletes are logical until the next
-        # compaction; stamped with the newest ingest epoch at issue time
-        # (as-of reads mask only deletes issued up to their epoch)
-        spark.createDataFrame(
-            [], TOMBSTONE_DOC_SCHEMA
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{path}/tombstones"
-        ).saveAsTable(f"{table_prefix}_tombstones")
+    drop_index_tables(spark, DEDUP_INDEX, table_prefix)
 
     def _write_bands() -> None:
         write_epoch_bucketed(
@@ -150,7 +165,7 @@ def dedup_index_build(
     # writes' DDL+commit latency (guide §2.6; same pattern as
     # ann_index_build's measured 3.4 s → ~1.9 s).
     par_ops(
-        _write_tombstones,
+        lambda: write_empty_tombstones(spark, DEDUP_INDEX, table_prefix, path),
         _write_bands,
         _write_shingles,
         _write_shsizes,
@@ -403,17 +418,7 @@ def dedup_index_delete(
     ingested at-or-before the stamp), so a doc re-upserted AFTER its
     delete resurrects — LSM ordering decides, uniformly across the
     index families."""
-    stamp = max(next_epoch(spark, f"{table_prefix}_bands") - 1, BASE_EPOCH + 1)
-    # burn the stamp id in the ledger (see writers.burn_epoch_id): a
-    # later auto-minted ingest epoch is strictly greater, so re-ingest
-    # resurrects instead of landing at epoch == stamp
-    burn_epoch_id(spark, f"{table_prefix}_bands", stamp)
-    doc_ids.select(
-        F.col("doc_id").cast("long"),
-        F.lit(int(stamp)).cast("long").alias("deleted_at_epoch"),
-    ).write.mode("append").format("parquet").saveAsTable(
-        f"{table_prefix}_tombstones"
-    )
+    index_delete(spark, DEDUP_INDEX, doc_ids, table_prefix)
 
 
 BAN_HOT_TOPN = 20  # the wrapper bans the 20 hottest stored shingles
@@ -574,66 +579,18 @@ def dedup_index_compact(spark: SparkSession, table_prefix: str):
     """Maintenance pass for a long-running dedup ingest: rewrite the
     appended band and shingle tables one-file-per-bucket with their
     bucket specs intact (the shuffle-free probe join survives — pinned
-    in tests/test_dedup_index.py). The tombstone snapshot is
-    MATERIALIZED once before the three rewrites and only those snapshot
-    rows are truncated afterward — a delete appended concurrently with
-    the rewrites survives to the next cycle instead of being silently
-    wiped unpurged."""
-    tomb, applied = snapshot_tombstones(
-        spark, f"{table_prefix}_tombstones", TOMBSTONE_DOC_SCHEMA
+    in tests/test_dedup_index.py). The tombstone snapshot is pinned
+    once before the three rewrites and only its files are deleted
+    afterward — a delete appended concurrently with the rewrites
+    survives to the next cycle instead of being silently wiped
+    unpurged. Stale versions superseded by a re-upsert (the shsizes
+    manifest) purge alongside, so the fold leaves one version per
+    doc."""
+    tombs = snapshot_tombstones(
+        spark, f"{table_prefix}_tombstones", DEDUP_INDEX.tomb_schema
     )
-    # EPOCH-AWARE purge, mirroring the probe's LSM mask: a tombstone
-    # stamped e kills only versions ingested at epoch <= e (a doc
-    # re-ingested after its delete survives), and STALE VERSIONS
-    # superseded by a later re-upsert (every (doc_id, epoch) below the
-    # doc's max in the shsizes manifest) die so the fold leaves exactly
-    # one version per doc. Both sets are snapshot-pinned before the
-    # three rewrites purge the same consistent state.
-    shs = spark.table(f"{table_prefix}_shsizes")
-    stale = (
-        shs.join(
-            shs.groupBy("doc_id").agg(F.max("epoch").alias("latest")),
-            "doc_id",
-        )
-        .where(F.col("epoch") < F.col("latest"))
-        .select("doc_id", "epoch")
-        .localCheckpoint()
-    )
-    # pinned (localCheckpoint) like ``stale``: the pair expansion reads
-    # the shsizes table, which the concurrent shsizes rewrite below
-    # swaps out mid-pass — all three rewrites must purge the same
-    # consistent snapshot regardless of completion order. Bounded by
-    # |tombstones| × |epochs|, not index size.
-    tomb_pairs = (
-        tomb.crossJoin(shs.select("epoch").distinct())
-        .where(F.col("epoch") <= F.col("deleted_at_epoch"))
-        .select("doc_id", "epoch")
-        .localCheckpoint()
-    )
-    purge = [(["doc_id", "epoch"], tomb_pairs), (["doc_id", "epoch"], stale)]
-
-    # The three per-table rewrites are independent (distinct tables,
-    # per-table staging names inside compact_bucketed_table) and every
-    # shared input (tomb snapshot, stale set, tomb_pairs) is pinned, so
-    # they run concurrently — the bands and shingles bucket shuffles
-    # overlap and the swap DDL latency hides under them (guide §2.6).
-    def _c(suffix: str, key: str | None, n_buckets: int | None):
-        return compact_bucketed_table(
-            spark,
-            f"{table_prefix}_{suffix}",
-            key=key,
-            n_buckets=n_buckets,
-            fold_partition=("epoch", BASE_EPOCH),
-            anti=purge,
-        )
-
-    a, b, _ = par_ops(
-        lambda: _c("bands", "band_key", DEDUP_IDX_BUCKETS),
-        lambda: _c("shingles", "doc_id", DEDUP_IDX_BUCKETS),
-        lambda: _c("shsizes", None, None),
-    )
-    purge_applied_tombstones(spark, f"{table_prefix}_tombstones", applied)
-    return a, b
+    bands, shingles, _ = index_compact(spark, DEDUP_INDEX, table_prefix, tombs)
+    return bands, shingles
 
 
 _PROBE_SCHEMA = "batch_doc bigint, index_doc bigint, jaccard double"
@@ -644,21 +601,12 @@ def q_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out batch. The oracle recomputes the FROZEN-cap semantics from
     first principles: the hot-shingle census runs over the base slice
     only, and both sides are filtered by that stored list."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % PROBE_MOD != 0)
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_index_")
-    prefix = "dedup_idx_rt"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(base, prefix, out)
         rows = dedup_index_probe(batch, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -667,14 +615,9 @@ def q_dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed layout: entries, distinct keys, and the largest bucket per
     band (the skew number an LSH deployment watches — a hot bucket is
     quadratic candidate work)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % PROBE_MOD != 0)
-    out = tempfile.mkdtemp(prefix="dedup_index_")
-    prefix = "dedup_idx_rt"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(base, prefix, out)
         per_key = (
             spark.table(f"{prefix}_bands")
@@ -691,10 +634,6 @@ def q_dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("band")
             .collect()
         )
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "band int, n_entries bigint, n_keys bigint, max_bucket bigint"
     )
@@ -841,8 +780,6 @@ UPSERT_MODS = (1, 2)  # build slice; (3, 4) arrive as the upsert delta
 
 
 def _run_upsert_lifecycle(spark: SparkSession, sf_dir: str, compact: bool):
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
@@ -852,9 +789,7 @@ def _run_upsert_lifecycle(spark: SparkSession, sf_dir: str, compact: bool):
         ~(F.col("doc_id") % PROBE_MOD).isin([0] + [int(x) for x in UPSERT_MODS])
     )
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_index_up_")
-    prefix = "dedup_idx_up"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         # frozen stop list: one load serves both upserts and the probe
         # (no ban_hot in this span — guide §5, see load_dedup_stoplist)
@@ -872,10 +807,6 @@ def _run_upsert_lifecycle(spark: SparkSession, sf_dir: str, compact: bool):
             (bb, ba), (sb, sa) = dedup_index_compact(spark, prefix)
             assert ba < bb and sa < sb, ((bb, ba), (sb, sa))
         rows = dedup_index_probe(batch, prefix, stoplist=stop).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -907,17 +838,12 @@ def q_dedup_index_ban_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature not recomputed, a survivor shingle dropped, or an
     untouched doc rewritten all fail the hash. The wrapper asserts the
     remedy acted (stop list strictly grew)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
         (F.col("doc_id") % PROBE_MOD).isin([int(x) for x in UPSERT_MODS])
     )
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_index_ban_")
-    prefix = "dedup_idx_ban"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         # the cache stops at the ban_hot below: the probe after the
         # repair must see the EXTENDED stop list, so it reloads
@@ -938,10 +864,6 @@ def q_dedup_index_ban_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
             == n_banned_pre + n_hot
         )
         rows = dedup_index_probe(batch, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -991,8 +913,6 @@ def q_dedup_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus with the stop-list census FROZEN over the ORIGINAL build
     slice."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
@@ -1003,9 +923,7 @@ def q_dedup_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % PROBE_MOD != 0)
         & (F.col("doc_id") % DEDUP_REUPSERT_MOD == DEDUP_REUPSERT_REM)
     ).select("doc_id", F.concat_ws(" ", "text", "text").alias("text"))
-    out = tempfile.mkdtemp(prefix="dedup_reupsert_")
-    prefix = "dedup_idx_re"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, os.path.join(out, "index"))
         # frozen stop list across the whole span (compaction never
         # touches the banned table)
@@ -1030,10 +948,6 @@ def q_dedup_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert dupes == 0, f"{dupes} docs kept >1 version post-compaction"
         assert rows == pre, "compaction changed the probe"
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1102,26 +1016,17 @@ def q_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface as candidates; the frozen stop list keeps its build-time
     census. The oracle injects the same exclusion into the candidate
     set only."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % PROBE_MOD != 0)
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
     doomed = base.where(
         F.col("doc_id") % DEDUP_DELETE_MOD == DEDUP_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="dedup_index_del_")
-    prefix = "dedup_idx_del"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(base, prefix, out)
         dedup_index_delete(spark, doomed, prefix)
         dedup_index_delete(spark, doomed, prefix)  # replayed: no-op
         rows = dedup_index_probe(batch, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1170,9 +1075,6 @@ def q_dedup_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
     census + stored-set top-N re-census) with the delete exclusion —
     a remedy that failed to fire, a purge that missed a doc, or a
     repair that mangled a signature fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
         (F.col("doc_id") % PROBE_MOD).isin([int(x) for x in UPSERT_MODS])
@@ -1181,9 +1083,7 @@ def q_dedup_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = docs.where(
         F.col("doc_id") % DEDUP_DELETE_MOD == DEDUP_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="dedup_autopilot_")
-    prefix = "dedup_idx_auto"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         # cache scope ends at the autopilot: its ban_hot extends the
         # stop list, so the post-cycle probe reloads (default path)
@@ -1200,10 +1100,6 @@ def q_dedup_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         actions = dedup_index_autopilot(spark, prefix, max_epochs=1)
         assert actions == [f"ban_hot:{BAN_HOT_TOPN}", "compact"], actions
         rows = dedup_index_probe(batch, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1217,8 +1113,6 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim, but the delta arrives across MULTIPLE epochs so a dropped
     or replayed one fails the hash."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
@@ -1226,10 +1120,8 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta = docs.where((F.col("doc_id") % PROBE_MOD).isin([3, 4]))
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_stream_ingest_")
-    prefix = "dedup_idx_st"
-    src = os.path.join(out, "arrivals")
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
+        src = os.path.join(out, "arrivals")
         dedup_index_build(build, prefix, os.path.join(out, "index"))
         # frozen stop list: one load serves every micro-batch + probe
         stop = load_dedup_stoplist(spark, prefix)
@@ -1237,25 +1129,16 @@ def q_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta.where(F.col("doc_id") % PROBE_MOD == part).coalesce(
                 1
             ).write.mode("append").parquet(src)
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda b, eid: dedup_index_upsert(
-                    b, prefix, epoch=eid, stoplist=stop
-                )
-            )
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_stream(
+            spark,
+            docs.schema,
+            src,
+            os.path.join(out, "ckpt"),
+            lambda b, eid: dedup_index_upsert(
+                b, prefix, epoch=eid, stoplist=stop
+            ),
         )
-        q.awaitTermination()
         rows = dedup_index_probe(batch, prefix, stoplist=stop).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1281,8 +1164,6 @@ def q_streaming_dedup_maintained(
     frozen-stop-list upsert oracle verbatim — the full delta present
     exactly once, compaction invisible to the probe."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
@@ -1290,31 +1171,11 @@ def q_streaming_dedup_maintained(
     )
     delta = docs.where((F.col("doc_id") % PROBE_MOD).isin([3, 4]))
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_stream_maint_")
-    prefix = "dedup_idx_stm"
-
-    stop: list = []  # loaded once, after the build (frozen thereafter;
-    # the maintenance-window compaction never touches the stop list)
-
-    def run_stream(src: str, ckpt: str) -> None:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda b, eid: dedup_index_upsert(
-                    b, prefix, epoch=eid, stoplist=stop[0]
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, os.path.join(out, "index"))
-        stop.append(load_dedup_stoplist(spark, prefix))
+        # loaded once, after the build (frozen thereafter; the
+        # maintenance-window compaction never touches the stop list)
+        stop = load_dedup_stoplist(spark, prefix)
         for phase, part in (("one", 3), ("two", 4)):
             src = os.path.join(out, f"arrivals_{phase}")
             for half in (0, 1):
@@ -1327,12 +1188,16 @@ def q_streaming_dedup_maintained(
                 # WHY a fresh checkpoint's batch ids are safe to reuse
                 dedup_index_compact(spark, prefix)
                 assert next_epoch(spark, f"{prefix}_bands") == 0
-            run_stream(src, os.path.join(out, f"ckpt_{phase}"))
-        rows = dedup_index_probe(batch, prefix, stoplist=stop[0]).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+            drain_stream(
+                spark,
+                docs.schema,
+                src,
+                os.path.join(out, f"ckpt_{phase}"),
+                lambda b, eid: dedup_index_upsert(
+                    b, prefix, epoch=eid, stoplist=stop
+                ),
+            )
+        rows = dedup_index_probe(batch, prefix, stoplist=stop).collect()
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1376,16 +1241,11 @@ def q_dedup_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build over doc_id%5 ∈ {1,2}, ingest {3,4}, audit stop-list
     staleness. The oracle recomputes the frozen census over the build
     slice and the post-ingest shingle dfs from the raw corpus."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
         (F.col("doc_id") % PROBE_MOD).isin([int(x) for x in UPSERT_MODS])
     )
-    out = tempfile.mkdtemp(prefix="dedup_drift_")
-    prefix = "dedup_idx_drift"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         stop = load_dedup_stoplist(spark, prefix)
         dedup_index_upsert(
@@ -1397,10 +1257,6 @@ def q_dedup_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             stoplist=stop,
         )
         rows = dedup_index_drift(spark, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "n_banned_frozen bigint, n_newly_hot bigint, hot_rows bigint,"
@@ -1448,27 +1304,18 @@ def q_dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricts candidates to the build slice (stop list is build-frozen
     either way). History spans only epochs since the last compaction —
     folding voids older as-of points (see compact_bucketed_table)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
         (F.col("doc_id") % PROBE_MOD).isin([int(x) for x in UPSERT_MODS])
     )
     delta = docs.where((F.col("doc_id") % PROBE_MOD).isin([3, 4]))
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_asof_")
-    prefix = "dedup_idx_asof"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         dedup_index_upsert(delta, prefix, epoch=0)
         rows = dedup_index_probe(
             batch, prefix, as_of_epoch=BASE_EPOCH
         ).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 
 
@@ -1523,17 +1370,7 @@ assert _ORACLE_DEDUP_ASOF != _ORACLE_DEDUP_UPSERT
 def dedup_index_manifest(spark: SparkSession, table_prefix: str) -> DataFrame:
     """DESCRIBE-INDEX for the dedup index (shared helper in
     sinks/writers.py)."""
-    return index_manifest(
-        spark,
-        table_prefix,
-        [
-            ("bands", True),
-            ("shingles", True),
-            ("shsizes", True),
-            ("banned", False),
-            ("tombstones", False),
-        ],
-    )
+    return index_manifest(spark, table_prefix, DEDUP_INDEX.tables)
 
 
 def q_dedup_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1542,9 +1379,6 @@ def q_dedup_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen-cap semantics: band rows = signed docs × N_BANDS, shingle
     rows = surviving (doc, shingle) pairs, sizes = signed docs, banned
     = build-slice hot census, tombstone volume from the delete rule."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     build = docs.where(
         (F.col("doc_id") % PROBE_MOD).isin([int(x) for x in UPSERT_MODS])
@@ -1553,17 +1387,11 @@ def q_dedup_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = build.where(
         F.col("doc_id") % DEDUP_DELETE_MOD == DEDUP_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="dedup_manifest_")
-    prefix = "dedup_idx_mf"
-    try:
+    with scratch_index(spark, DEDUP_INDEX) as (out, prefix):
         dedup_index_build(build, prefix, out)
         dedup_index_upsert(delta, prefix, epoch=0)
         dedup_index_delete(spark, doomed, prefix)
         rows = dedup_index_manifest(spark, prefix).collect()
-    finally:
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "table_name string, n_rows bigint, n_epochs bigint,"
@@ -1603,20 +1431,17 @@ FROM counts ORDER BY table_name
 def serving_plans(spark: SparkSession, sf_dir: str):
     """Plan-audit hook: the real index-serving plan (see
     ann_index.serving_plans for the contract)."""
-    import shutil
-    import tempfile
+    from contextlib import ExitStack
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % PROBE_MOD != 0)
     batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    out = tempfile.mkdtemp(prefix="dedup_index_audit_")
-    prefix = "dedup_idx_audit"
-    dedup_index_build(base, prefix, out)
-
-    def cleanup():
-        for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+    with ExitStack() as scratch:
+        out, prefix = scratch.enter_context(
+            scratch_index(spark, DEDUP_INDEX)
+        )
+        dedup_index_build(base, prefix, out)
+        cleanup = scratch.pop_all().close
 
     return {
         "dedup_index_probe": lambda: dedup_index_probe(batch, prefix),

@@ -1,0 +1,201 @@
+"""The epoch-index core shared by the three persisted index families
+(ANN: operators/ann_index.py, BM25: operators/retrieval_index.py,
+MinHash dedup: operators/dedup_index.py).
+
+Every family stores its index as catalog tables named
+``<prefix>_<suffix>``, lands each ingest batch as an ``epoch``
+partition, deletes by appending stamped tombstones and compacts by
+folding the epochs back into the base layer. That mutation semantics is
+one contract (ARCHITECTURE.md, "Replace / delete contract"), so it is
+implemented once here, driven by a frozen :class:`EpochIndex` spec that
+each family declares next to its own code. The families keep only what
+differs: build, encode, serve, drift and their remedies.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from admob_data_pipeline_spark.operators.util import par_ops
+from admob_data_pipeline_spark.sinks.writers import (
+    BASE_EPOCH,
+    burn_epoch_id,
+    compact_bucketed_table,
+    next_epoch,
+    purge_applied_tombstones,
+)
+
+
+@dataclass(frozen=True)
+class EpochIndex:
+    """What the shared lifecycle needs to know about one index family.
+
+    ``tables``: every ``(suffix, carries_epoch)`` the build creates —
+    the manifest rows, the scratch teardown and the build's pre-drop.
+    ``key``: the id column the tombstones carry. ``ledger``: the table
+    whose newest epoch a delete stamps and whose epoch ledger burns the
+    stamp. ``rewrites``: the ``(suffix, bucket key, n_buckets)`` tables
+    compaction folds (``None`` key: a plain epoch-partitioned side
+    table). ``versions``: the per-key version manifest whose superseded
+    ``(key, epoch)`` rows compaction purges as stale versions (``None``
+    when re-upserts stamp supersession tombstones instead, as ANN's do);
+    it is also the table whose epochs expand the tombstone stamps, the
+    ledger table otherwise."""
+
+    name: str
+    tables: tuple[tuple[str, bool], ...]
+    key: str
+    ledger: str
+    rewrites: tuple[tuple[str, str | None, int | None], ...]
+    versions: str | None = None
+
+    @property
+    def tomb_schema(self) -> str:
+        return f"{self.key} bigint, deleted_at_epoch bigint"
+
+
+def drop_index_tables(spark: SparkSession, spec: EpochIndex, prefix: str) -> None:
+    for t, _ in spec.tables:
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
+def write_empty_tombstones(
+    spark: SparkSession, spec: EpochIndex, prefix: str, path: str
+) -> None:
+    """The build's empty tombstone set: deletes are logical until the
+    next compaction; each is stamped with the newest ingest epoch at
+    issue time, so as-of reads mask only deletes issued up to their
+    epoch (back to the last compaction — folding discards that span)."""
+    spark.createDataFrame([], spec.tomb_schema).write.mode("overwrite").format(
+        "parquet"
+    ).option("path", f"{path}/tombstones").saveAsTable(f"{prefix}_tombstones")
+
+
+def index_delete(
+    spark: SparkSession, spec: EpochIndex, ids: DataFrame, prefix: str
+) -> None:
+    """LOGICAL delete: append ``ids`` to the tombstone set (duplicates
+    harmless — anti-join semantics make the append replay-safe). The
+    stamp is the newest ingest epoch at issue time, never below epoch
+    0: a delete issued while only the base layer exists belongs to the
+    open ingest window, so an as-of read at BASE_EPOCH always sees the
+    pristine build. The stamp id is BURNED in the ledger, so a later
+    auto-minted ingest epoch is strictly greater and re-ingesting the
+    key RESURRECTS it (the epoch-aware mask) instead of landing at
+    epoch == stamp."""
+    ledger = f"{prefix}_{spec.ledger}"
+    stamp = max(next_epoch(spark, ledger) - 1, BASE_EPOCH + 1)
+    burn_epoch_id(spark, ledger, stamp)
+    ids.select(
+        F.col(spec.key).cast("long"),
+        F.lit(int(stamp)).cast("long").alias("deleted_at_epoch"),
+    ).write.mode("append").format("parquet").saveAsTable(f"{prefix}_tombstones")
+
+
+def index_compact(
+    spark: SparkSession, spec: EpochIndex, prefix: str, tombstones: tuple
+) -> list:
+    """Fold every ingest epoch of ``spec.rewrites`` into the base layer,
+    one file per bucket with the bucket specs intact, PURGING what
+    serving masks, then drop exactly the tombstone files the purge
+    applied. Returns each rewrite's ``(files_before, files_after)`` in
+    ``spec.rewrites`` order.
+
+    ``tombstones`` is the ``(rows, files)`` pin that
+    :func:`snapshot_tombstones` took of ``<prefix>_tombstones``. The
+    family wrapper takes it, through its own module binding, so a test
+    can land a delete right after the pin and check it survives.
+
+    The purge is EPOCH-AWARE like the serving masks: a tombstone
+    stamped e kills only rows ingested at epoch ≤ e, so the file-pinned
+    tombstone snapshot is expanded against the table's (few) distinct
+    epochs into exact ``(key, epoch)`` pairs. With a version manifest,
+    every ``(key, epoch)`` below the key's latest epoch is a STALE
+    version and dies too: the fold moves every row into BASE_EPOCH,
+    where no epoch could tell the versions apart any more, so it must
+    leave exactly one version per key. Several rewrites run concurrently, and one of them may swap
+    out the manifest the purge sets read mid-pass, so those sets are
+    pinned (localCheckpoint — bounded by deletes × epochs and by
+    superseded versions, not by index size) whenever there is more than
+    one rewrite. A delete appended during the pass lands in files
+    created after the pin and survives to the next cycle."""
+    snap, applied = tombstones
+    pin = len(spec.rewrites) > 1
+
+    def pinned(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint() if pin else df
+
+    key = spec.key
+    source = spark.table(f"{prefix}_{spec.versions or spec.ledger}")
+    pairs = (
+        snap.crossJoin(source.select("epoch").distinct())
+        .where(F.col("epoch") <= F.col("deleted_at_epoch"))
+        .select(key, "epoch")
+    )
+    purge = [([key, "epoch"], pinned(pairs))]
+    if spec.versions is not None:
+        stale = (
+            source.join(
+                source.groupBy(key).agg(F.max("epoch").alias("latest")), key
+            )
+            .where(F.col("epoch") < F.col("latest"))
+            .select(key, "epoch")
+        )
+        purge.append(([key, "epoch"], pinned(stale)))
+
+    def rewrite(suffix: str, bucket_key: str | None, n_buckets: int | None):
+        return lambda: compact_bucketed_table(
+            spark,
+            f"{prefix}_{suffix}",
+            key=bucket_key,
+            n_buckets=n_buckets,
+            fold_partition=("epoch", BASE_EPOCH),
+            anti=purge,
+        )
+
+    thunks = [rewrite(*r) for r in spec.rewrites]
+    out = par_ops(*thunks) if pin else [t() for t in thunks]
+    purge_applied_tombstones(spark, f"{prefix}_tombstones", applied)
+    return out
+
+
+@contextmanager
+def scratch_index(spark: SparkSession, *specs: EpochIndex):
+    """A throwaway index location: yields ``(dir, prefix, ...)`` — one
+    fresh temp dir and one unique table prefix per spec — and on exit,
+    however the body ends, drops every spec table under those prefixes
+    and removes the dir."""
+    out = tempfile.mkdtemp(prefix="epoch_index_")
+    tag = os.path.basename(out)[len("epoch_index_") :]
+    prefixes = [f"{s.name}_{tag}" for s in specs]
+    try:
+        yield (out, *prefixes)
+    finally:
+        for s, p in zip(specs, prefixes):
+            drop_index_tables(spark, s, p)
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def drain_stream(spark: SparkSession, schema, src: str, ckpt: str, body) -> None:
+    """Stream the parquet files under ``src`` through ``body(batch,
+    batch_id)`` one file per micro-batch (``availableNow``) and block
+    until the backlog is drained. The batch id is the idempotency epoch:
+    a replayed batch rewrites its own partition (foreachBatch is
+    at-least-once)."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from admob_data_pipeline_spark.operators.ann_index import (
     _ORACLE_INDEX_UPSERT,
+    ANN_INDEX,
     ann_index_build,
     ann_index_compact,
     ann_index_delete,
@@ -47,7 +48,12 @@ from admob_data_pipeline_spark.operators.corpus import (
     _bm25_rank_postings,
     _bm25_score,
 )
+from admob_data_pipeline_spark.operators.epoch_index import (
+    drain_stream,
+    scratch_index,
+)
 from admob_data_pipeline_spark.operators.retrieval_index import (
+    BM25_INDEX,
     bm25_index_build,
     bm25_index_compact,
     bm25_index_delete,
@@ -66,23 +72,14 @@ from admob_data_pipeline_spark.sources.tables import load_table
 VEC_SHORTLIST = 2 * RRF_POOL  # ADC shortlist feeding the exact rerank
 
 
-def _par(*thunks) -> None:
-    """Run independent per-family index operations CONCURRENTLY (guide
-    §2.6 — overlap independent jobs). The hybrid lifecycle is a sequence
-    of (bm25-op, ann-op) pairs over DISJOINT tables/paths/epoch ledgers;
-    within a pair the two ops share nothing, so the lexical
-    tokenize/shuffle and the vector kernel/codebook passes overlap on
-    idle cores instead of serializing. Exceptions propagate (both legs
-    are awaited; the first failure re-raises after both settle).
-    Delegates to the shared :func:`par_ops` — see its docstring for the
-    session-conf invariant the overlapped legs must keep."""
-    par_ops(*thunks)
-
-
 def _build_both(docs, bp: str, bm25_path: str, emb, ap: str, ann_path: str) -> None:
-    """Build the two side-by-side indexes concurrently (see :func:`_par`;
-    each build's internal table writes are already pooled)."""
-    _par(
+    """Build the two side-by-side indexes concurrently. The hybrid
+    lifecycle is a sequence of (bm25-op, ann-op) pairs over DISJOINT
+    tables, paths and epoch ledgers, so each pair runs through
+    :func:`par_ops` and the lexical tokenize/shuffle overlaps the vector
+    kernel on idle cores (guide §2.6); each build's internal table
+    writes are already pooled."""
+    par_ops(
         lambda: bm25_index_build(docs, bp, bm25_path),
         lambda: ann_index_build(emb, ap, ann_path),
     )
@@ -246,22 +243,11 @@ def q_hybrid_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg (identical to the inline one — same corpus, same frozen-scalar
     derivation) fused with the IVF-PQ-shortlist exact-rerank vector
     leg."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="hybrid_index_")
-    bp, ap = "hybrid_bm25_idx", "hybrid_ann_idx"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         _build_both(docs, bp, f"{out}/bm25", emb, ap, f"{out}/ann")
         rows = hybrid_index_search(spark, emb, bp, ap).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "doc_id bigint, lex_rank int, vec_rank int, rrf_score bigint,"
@@ -384,7 +370,7 @@ def _interleaved_lifecycle(spark, sf_dir: str, bp: str, ap: str, out: str):
         ap,
         f"{out}/ann",
     )
-    _par(
+    par_ops(
         lambda: bm25_index_upsert(
             docs.where(F.col("doc_id") % PARITY_DELTA_MOD == 3), bp
         ),
@@ -394,7 +380,7 @@ def _interleaved_lifecycle(spark, sf_dir: str, bp: str, ap: str, out: str):
     )
     # the two deletes touch disjoint tombstone tables/ledgers — overlap
     # them like the (bm25, ann) upsert pair above (guide §2.6)
-    _par(
+    par_ops(
         lambda: bm25_index_delete(
             spark,
             docs.where(F.col("doc_id") % 10 == PARITY_DEL_BOTH).select(
@@ -426,12 +412,7 @@ def q_hybrid_index_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. The wrapper also asserts the serving invariant the audit
     protects: the hybrid RRF output contains no consistently-deleted
     doc (each leg masks its own tombstones)."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="hybrid_parity_")
-    bp, ap = "hybrid_par_bm25", "hybrid_par_ann"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         docs, emb = _interleaved_lifecycle(spark, sf_dir, bp, ap, out)
         # the audit and the serving check are independent post-lifecycle
         # READS (no session conf touched) — overlap them (guide §2.6)
@@ -442,12 +423,6 @@ def q_hybrid_index_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert not any(r.doc_id % 10 == PARITY_DEL_BOTH for r in served), (
             "hybrid surfaced a consistently-deleted doc"
         )
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "n_bm25_live bigint, n_ann_live bigint, n_both bigint,"
@@ -524,7 +499,7 @@ def hybrid_index_repair(
         bm_only.localCheckpoint, ann_only.localCheckpoint
     )
     n_bm, n_ann = par_ops(bm_only.count, ann_only.count)
-    _par(
+    par_ops(
         lambda: n_bm
         and bm25_index_delete(spark, bm_only.select("doc_id"), bm25_prefix),
         lambda: n_ann
@@ -546,12 +521,7 @@ def q_hybrid_index_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences), so a repair that under- or over-deletes fails the
     hash. The wrapper also asserts zero one-sided docs remain and that
     the hybrid serving output stays inside the reconciled universe."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="hybrid_repair_")
-    bp, ap = "hybrid_rep_bm25", "hybrid_rep_ann"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         docs, emb = _interleaved_lifecycle(spark, sf_dir, bp, ap, out)
         n_bm, n_ann = hybrid_index_repair(spark, bp, ap)
         # the injected ANN-only delete MUST surface as BM25-only live
@@ -577,12 +547,6 @@ def q_hybrid_index_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count()
         )
         assert n_live_hits == len(served_ids), (n_live_hits, served_ids)
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "n_bm25_live bigint, n_ann_live bigint, n_both bigint,"
@@ -610,8 +574,6 @@ def q_streaming_hybrid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine reranked — a dropped or replayed epoch on EITHER side
     fails the hash."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -621,10 +583,8 @@ def q_streaming_hybrid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_docs = docs.join(
         emb.select(F.col("vec_id").alias("doc_id")), "doc_id"
     )
-    out = tempfile.mkdtemp(prefix="hybrid_stream_")
-    bp, ap = "hybrid_st_bm25", "hybrid_st_ann"
-    src = os.path.join(out, "arrivals")
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
+        src = os.path.join(out, "arrivals")
         _build_both(
             corpus_docs.where(F.col("doc_id") % PARITY_DELTA_MOD != 3),
             bp,
@@ -654,7 +614,7 @@ def q_streaming_hybrid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # partition on each side, so the pair converges together
             # (explicit epoch — no ledger mint — so the two family
             # ingests are independent and overlap, guide §2.6)
-            _par(
+            par_ops(
                 lambda: bm25_index_upsert(
                     batch.select("doc_id", "text"), bp, epoch=eid
                 ),
@@ -666,28 +626,13 @@ def q_streaming_hybrid_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-        stream = (
-            spark.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        drain_stream(
+            spark, arrivals.schema, src, os.path.join(out, "ckpt"), ingest_both
         )
-        q = (
-            stream.writeStream.foreachBatch(ingest_both)
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         # the transport cannot skew the pair — audit before serving
         row = hybrid_index_parity(spark, bp, ap).first()
         assert row["n_bm25_only"] == 0 and row["n_ann_only"] == 0, row
         rows = hybrid_index_search(spark, emb, bp, ap).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "doc_id bigint, lex_rank int, vec_rank int, rrf_score bigint,"
@@ -717,15 +662,7 @@ def q_streaming_hybrid_maintained(
     verbatim — the full delta present exactly once on both sides,
     compaction invisible to RRF."""
     import os
-    import shutil
-    import tempfile
 
-    from admob_data_pipeline_spark.operators.ann_index import (
-        ann_index_compact,
-    )
-    from admob_data_pipeline_spark.operators.retrieval_index import (
-        bm25_index_compact,
-    )
     from admob_data_pipeline_spark.sinks.writers import next_epoch
 
     docs = load_table(spark, sf_dir, "documents")
@@ -733,37 +670,7 @@ def q_streaming_hybrid_maintained(
     corpus_docs = docs.join(
         emb.select(F.col("vec_id").alias("doc_id")), "doc_id"
     )
-    out = tempfile.mkdtemp(prefix="hybrid_stream_maint_")
-    bp, ap = "hybrid_stm_bm25", "hybrid_stm_ann"
-
-    quant: list = []  # loaded once, after the build (frozen thereafter;
-    # the maintenance-window compaction never touches the quantizers)
-
-    def ingest_both(batch, eid):
-        # ONE epoch id for BOTH indexes (see q_streaming_hybrid_ingest)
-        _par(
-            lambda: bm25_index_upsert(batch.select("doc_id", "text"), bp, epoch=eid),
-            lambda: ann_index_upsert(
-                batch.select(F.col("doc_id").alias("vec_id"), "embedding"),
-                ap,
-                epoch=eid,
-                quantizers=quant[0],
-            ),
-        )
-
-    def run_stream(arrivals_schema, src: str, ckpt: str) -> None:
-        q = (
-            spark.readStream.schema(arrivals_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(ingest_both)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         _build_both(
             corpus_docs.where(F.col("doc_id") % PARITY_DELTA_MOD != 3),
             bp,
@@ -772,7 +679,22 @@ def q_streaming_hybrid_maintained(
             ap,
             f"{out}/ann",
         )
-        quant.append(load_ann_quantizers(spark, ap))
+        # loaded once, after the build (frozen thereafter; the
+        # maintenance-window compaction never touches the quantizers)
+        quant = load_ann_quantizers(spark, ap)
+
+        def ingest_both(batch, eid):
+            # ONE epoch id for BOTH indexes (see q_streaming_hybrid_ingest)
+            par_ops(
+                lambda: bm25_index_upsert(batch.select("doc_id", "text"), bp, epoch=eid),
+                lambda: ann_index_upsert(
+                    batch.select(F.col("doc_id").alias("vec_id"), "embedding"),
+                    ap,
+                    epoch=eid,
+                    quantizers=quant,
+                ),
+            )
+
         arrivals = corpus_docs.where(
             F.col("doc_id") % PARITY_DELTA_MOD == 3
         ).join(
@@ -789,7 +711,7 @@ def q_streaming_hybrid_maintained(
             if phase == "two":
                 # maintenance window: BOTH sides must fold before the
                 # fresh checkpoint reuses batch id 0
-                _par(
+                par_ops(
                     lambda: bm25_index_compact(spark, bp),
                     lambda: ann_index_compact(spark, ap),
                 )
@@ -797,16 +719,16 @@ def q_streaming_hybrid_maintained(
                 assert next_epoch(spark, f"{ap}_codes") == 0
                 row = hybrid_index_parity(spark, bp, ap).first()
                 assert row["n_bm25_only"] == 0 and row["n_ann_only"] == 0, row
-            run_stream(arrivals.schema, src, os.path.join(out, f"ckpt_{phase}"))
+            drain_stream(
+                spark,
+                arrivals.schema,
+                src,
+                os.path.join(out, f"ckpt_{phase}"),
+                ingest_both,
+            )
         row = hybrid_index_parity(spark, bp, ap).first()
         assert row["n_bm25_only"] == 0 and row["n_ann_only"] == 0, row
         rows = hybrid_index_search(spark, emb, bp, ap).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "doc_id bigint, lex_rank int, vec_rank int, rrf_score bigint,"
@@ -999,12 +921,7 @@ def q_hybrid_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
     A second ``always`` cycle must be a no-op (idempotence). The oracle
     is the post-repair reconciliation recomputed from the raw tables
     (shared with hybrid_index_repair)."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="hybrid_autopilot_")
-    bp, ap = "hybrid_auto_bm25", "hybrid_auto_ann"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         _interleaved_lifecycle(spark, sf_dir, bp, ap, out)
         before = hybrid_index_parity(spark, bp, ap).first()
         acts = hybrid_index_autopilot(spark, bp, ap)  # default: report
@@ -1023,12 +940,6 @@ def q_hybrid_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
             hybrid_index_autopilot(spark, bp, ap, reconcile="always") == []
         )  # idempotent
         rows = hybrid_index_parity(spark, bp, ap).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "n_bm25_live bigint, n_ann_live bigint, n_both bigint,"
@@ -1182,9 +1093,6 @@ def q_hybrid_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL corpus, IVF centroids and PQ codebooks sampled from the
     ORIGINAL vectors — and query/rerank vectors from the raw table
     (serving passes the raw ``embeddings`` corpus for both)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     revised_docs = docs.where(
@@ -1193,16 +1101,14 @@ def q_hybrid_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     revised_emb = emb.where(
         F.col("vec_id") % HYB_RE_MOD == HYB_RE_REM
     ).select("vec_id", F.transform("embedding", lambda x: -x).alias("embedding"))
-    out = tempfile.mkdtemp(prefix="hybrid_index_re_")
-    bp, ap = "hybrid_bm25_re", "hybrid_ann_re"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         _build_both(docs, bp, f"{out}/bm25", emb, ap, f"{out}/ann")
-        _par(
+        par_ops(
             lambda: bm25_index_upsert(revised_docs, bp),
             lambda: ann_index_upsert(revised_emb, ap),
         )
         pre = hybrid_index_search(spark, emb, bp, ap).collect()
-        _par(
+        par_ops(
             lambda: bm25_index_compact(spark, bp),
             lambda: ann_index_compact(spark, ap),
         )
@@ -1230,12 +1136,6 @@ def q_hybrid_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert n_tb == 0
         assert n_ta == 0
         assert rows == pre, "compaction changed the fused ranking"
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "doc_id bigint, lex_rank int, vec_rank int, rrf_score bigint,"
@@ -1331,21 +1231,16 @@ def serving_plans(spark: SparkSession, sf_dir: str):
     """Plan-audit hook: the registered wrapper collects internally for
     scratch cleanup; expose the real LAZY hybrid plan over prebuilt
     scratch indexes (see ann_index.serving_plans for the contract)."""
-    import shutil
-    import tempfile
+    from contextlib import ExitStack
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="hybrid_index_audit_")
-    bp, ap = "hybrid_bm25_audit", "hybrid_ann_audit"
-    _build_both(docs, bp, f"{out}/bm25", emb, ap, f"{out}/ann")
-
-    def cleanup():
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+    with ExitStack() as scratch:
+        out, bp, ap = scratch.enter_context(
+            scratch_index(spark, BM25_INDEX, ANN_INDEX)
+        )
+        _build_both(docs, bp, f"{out}/bm25", emb, ap, f"{out}/ann")
+        cleanup = scratch.pop_all().close
 
     return {
         "hybrid_index_search": lambda: hybrid_index_search(
@@ -1381,12 +1276,7 @@ def q_hybrid_index_autopilot_guarded(
     recomputes the end state from the raw corpus: live sets, the
     intact asymmetric surface, and tombstone counts that grow by
     exactly the operational slice on each side."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="hybrid_guard_")
-    bp, ap = "hybrid_guard_bm25", "hybrid_guard_ann"
-    try:
+    with scratch_index(spark, BM25_INDEX, ANN_INDEX) as (out, bp, ap):
         docs = load_table(spark, sf_dir, "documents")
         emb = load_table(spark, sf_dir, "embeddings")
         text_only = F.col("vec_id") % GUARD_TEXT_ONLY_MOD == (
@@ -1426,12 +1316,6 @@ def q_hybrid_index_autopilot_guarded(
         # the declared text-only surface survived the whole loop
         n_declared = declared.count()
         assert rows[0]["n_bm25_only"] == n_declared, (rows, n_declared)
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {bp}_{t}")
-        for t in ("centroids", "codebooks", "codes", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {ap}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "n_bm25_live bigint, n_ann_live bigint, n_both bigint,"

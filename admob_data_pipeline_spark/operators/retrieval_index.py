@@ -56,23 +56,49 @@ from admob_data_pipeline_spark.operators.corpus import (
     _bm25_stats,
     _bm25_tf,
 )
+from admob_data_pipeline_spark.operators.epoch_index import (
+    EpochIndex,
+    drain_stream,
+    drop_index_tables,
+    index_compact,
+    index_delete,
+    scratch_index,
+    write_empty_tombstones,
+)
 from admob_data_pipeline_spark.operators.util import par_ops
 from admob_data_pipeline_spark.sinks.writers import (
     BASE_EPOCH,
-    TOMBSTONE_DOC_SCHEMA,
-    burn_epoch_id,
     claim_epoch,
-    compact_bucketed_table,
     index_manifest,
     next_epoch,
     overwrite_epoch_partition,
-    purge_applied_tombstones,
     snapshot_tombstones,
     write_epoch_bucketed,
 )
 from admob_data_pipeline_spark.sources.tables import load_table
 
 POSTINGS_BUCKETS = 8
+
+# doclen is the version manifest: serving masks every version of a doc
+# below its latest epoch there, and compaction purges those versions.
+BM25_INDEX = EpochIndex(
+    name="bm25_idx",
+    tables=(
+        ("postings", True),
+        ("doclen", True),
+        ("positions", True),
+        ("stats", False),
+        ("tombstones", False),
+    ),
+    key="doc_id",
+    ledger="postings",
+    rewrites=(
+        ("postings", "token", POSTINGS_BUCKETS),
+        ("doclen", "doc_id", POSTINGS_BUCKETS),
+        ("positions", "token", POSTINGS_BUCKETS),
+    ),
+    versions="doclen",
+)
 
 
 def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
@@ -83,18 +109,7 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
     postings."""
     spark = docs.sparkSession
     tf = _bm25_tf(docs, "text")
-    for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{t}")
-
-    def _write_tombstones() -> None:
-        # empty tombstone set: deletes are logical until the next
-        # compaction; stamped with the newest ingest epoch at issue time
-        # (as-of reads mask only deletes issued up to their epoch)
-        spark.createDataFrame(
-            [], TOMBSTONE_DOC_SCHEMA
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{path}/tombstones"
-        ).saveAsTable(f"{table_prefix}_tombstones")
+    drop_index_tables(spark, BM25_INDEX, table_prefix)
 
     def _write_postings() -> None:
         write_epoch_bucketed(
@@ -136,7 +151,7 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
     # parallel on idle cores instead of serializing behind a checkpoint
     # barrier (the measured call of OPTIMIZATION_r12 "rejected #1").
     par_ops(
-        _write_tombstones,
+        lambda: write_empty_tombstones(spark, BM25_INDEX, table_prefix, path),
         _write_postings,
         _write_doclen,
         _write_positions,
@@ -428,19 +443,10 @@ def q_bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index serving, oracled for EXACT parity with the
     inline ``bm25_search`` (same SQL verbatim): build writes the three
     index tables, search reads only them."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="bm25_index_")
-    prefix = "bm25_idx_rt"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(docs, prefix, out)
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -449,13 +455,8 @@ def q_bm25_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed layout: per-token document frequency and total term
     count. The oracle recomputes the inverted index from the raw corpus,
     so a dropped, duplicated, or mis-bucketed posting fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="bm25_index_")
-    prefix = "bm25_idx_rt"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(docs, prefix, out)
         rows = (
             spark.table(f"{prefix}_postings")
@@ -467,10 +468,6 @@ def q_bm25_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("token")
             .collect()
         )
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, "token string, df bigint, tf_sum bigint")
 
 
@@ -490,22 +487,13 @@ def q_bm25_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index and legitimately grow with ingest), the (n_docs, avgdl)
     scalars over the BASE slice only — so a lost or doubled posting,
     a rescaled length, or an un-frozen scalar fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_upsert_")
-    prefix = "bm25_idx_up"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         bm25_index_upsert(delta, prefix)
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -520,9 +508,6 @@ def q_bm25_index_upsert_arbiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker → drop cycle runs twice; serving must equal the fs-arbitrated
     result exactly (shared oracle). The wrapper also asserts the mutex
     left no claim-table litter and the ledger recorded both ids."""
-    import shutil
-    import tempfile
-
     from admob_data_pipeline_spark.sinks.writers import (
         EPOCH_ARBITER_CONF,
         EPOCH_LEDGER_DIR,
@@ -533,36 +518,34 @@ def q_bm25_index_upsert_arbiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_upsert_arb_")
-    prefix = "bm25_idx_uparb"
-    spark.conf.set(EPOCH_ARBITER_CONF, "catalog")
-    try:
-        bm25_index_build(base, prefix, out)
-        for e in range(2):  # auto-epoch: each claims through the catalog
-            bm25_index_upsert(
-                delta.where(F.expr(f"pmod(doc_id div {UPSERT_DOC_MOD}, 2)") == e),
-                prefix,
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
+        spark.conf.set(EPOCH_ARBITER_CONF, "catalog")
+        try:
+            bm25_index_build(base, prefix, out)
+            for e in range(2):  # auto-epoch: each claims through the catalog
+                bm25_index_upsert(
+                    delta.where(
+                        F.expr(f"pmod(doc_id div {UPSERT_DOC_MOD}, 2)") == e
+                    ),
+                    prefix,
+                )
+            loc = table_location(spark, f"{prefix}_postings").rstrip("/")
+            fs, ldir = _fs_and_path(spark, f"{loc}/{EPOCH_LEDGER_DIR}")
+            minted = sorted(
+                int(st.getPath().getName()[len("epoch-"):])
+                for st in fs.listStatus(ldir)
+                if st.getPath().getName().startswith("epoch-")
             )
-        loc = table_location(spark, f"{prefix}_postings").rstrip("/")
-        fs, ldir = _fs_and_path(spark, f"{loc}/{EPOCH_LEDGER_DIR}")
-        minted = sorted(
-            int(st.getPath().getName()[len("epoch-"):])
-            for st in fs.listStatus(ldir)
-            if st.getPath().getName().startswith("epoch-")
-        )
-        assert minted == [0, 1], minted  # both ids recorded, densely
-        litter = [
-            t.name
-            for t in spark.catalog.listTables()
-            if "__epoch_claim_" in t.name
-        ]
-        assert litter == [], litter  # mutex tables all dropped
-        rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        spark.conf.unset(EPOCH_ARBITER_CONF)
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+            assert minted == [0, 1], minted  # both ids recorded, densely
+            litter = [
+                t.name
+                for t in spark.catalog.listTables()
+                if "__epoch_claim_" in t.name
+            ]
+            assert litter == [], litter  # mutex tables all dropped
+            rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
+        finally:
+            spark.conf.unset(EPOCH_ARBITER_CONF)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -623,18 +606,13 @@ def q_bm25_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_docs, avgdl) scalars frozen over the ORIGINAL base slice (build
     time predates the revision), so a double-counted tf/df, a stale
     dl, a duplicated candidate, or an unfrozen scalar fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
     revised = docs.where(F.col("doc_id") % REUPSERT_MOD == REUPSERT_REM).select(
         "doc_id", F.concat_ws(" ", "text", "text").alias("text")
     )
-    out = tempfile.mkdtemp(prefix="bm25_reupsert_")
-    prefix = "bm25_idx_re"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         bm25_index_upsert(delta, prefix)
         bm25_index_upsert(revised, prefix)
@@ -652,10 +630,6 @@ def q_bm25_index_reupsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert dupes == 0, f"{dupes} docs kept >1 version post-compaction"
         assert rows == pre, "compaction changed ranking"
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -778,19 +752,7 @@ def bm25_index_delete(
     only versions ingested at-or-before the stamp), so a doc
     re-upserted AFTER its delete resurrects — the delete removes what
     existed when it was issued, LSM ordering decides the rest."""
-    stamp = max(
-        next_epoch(spark, f"{table_prefix}_postings") - 1, BASE_EPOCH + 1
-    )
-    # burn the stamp id in the ledger (see writers.burn_epoch_id): a
-    # later auto-minted ingest epoch is strictly greater, so re-ingest
-    # resurrects instead of landing at epoch == stamp
-    burn_epoch_id(spark, f"{table_prefix}_postings", stamp)
-    doc_ids.select(
-        F.col("doc_id").cast("long"),
-        F.lit(int(stamp)).cast("long").alias("deleted_at_epoch"),
-    ).write.mode("append").format("parquet").saveAsTable(
-        f"{table_prefix}_tombstones"
-    )
+    index_delete(spark, BM25_INDEX, doc_ids, table_prefix)
 
 
 def bm25_index_compact(spark: SparkSession, table_prefix: str):
@@ -799,81 +761,21 @@ def bm25_index_compact(spark: SparkSession, table_prefix: str):
     their bucket specs intact (the pruned, shuffle-free serving scans
     survive — pinned in tests/test_retrieval_index.py). The frozen
     corpus scalars are one row and never need compaction. The tombstone
-    snapshot is MATERIALIZED once before the three rewrites (all three
-    tables purge the same consistent delete set) and only those
-    snapshot rows are truncated afterward — a delete appended
-    concurrently with the rewrites survives to the next cycle instead
-    of being silently wiped unpurged. Alongside tombstones it purges
+    snapshot is pinned once before the three rewrites (all three tables
+    purge the same consistent delete set) and only its files are
+    deleted afterward — a delete appended concurrently with the
+    rewrites survives to the next cycle instead of being silently wiped
+    unpurged. Alongside tombstones it purges
     STALE VERSIONS (rows of a (doc_id, epoch) superseded by a later
     re-upsert of the same doc), so the epoch fold leaves exactly one
     version per doc — the invariant bm25_index_refresh_stats' and the
     serving mask's latest-epoch dedup rely on (post-compaction ties at
     BASE_EPOCH are impossible)."""
-    tomb, applied = snapshot_tombstones(
-        spark, f"{table_prefix}_tombstones", TOMBSTONE_DOC_SCHEMA
+    tombs = snapshot_tombstones(
+        spark, f"{table_prefix}_tombstones", BM25_INDEX.tomb_schema
     )
-    # stale-version purge (re-upsert = replace): a doc re-ingested into
-    # a later epoch left its superseded postings/doclen/positions rows
-    # in earlier partitions — serving masks them by latest epoch, the
-    # fold below would collapse them into the SAME base partition where
-    # no epoch can distinguish versions, so they must die HERE. The
-    # doclen table is the version manifest: every (doc_id, epoch) below
-    # the doc's max is a stale version. Snapshot the pair set once
-    # (localCheckpoint — bounded by the count of superseded versions,
-    # not index size) so all three rewrites purge the same consistent
-    # set; the rollup runs on the bucket key, no exchange.
-    doclen_t = spark.table(f"{table_prefix}_doclen")
-    stale = (
-        doclen_t.join(
-            doclen_t.groupBy("doc_id").agg(F.max("epoch").alias("latest")),
-            "doc_id",
-        )
-        .where(F.col("epoch") < F.col("latest"))
-        .select("doc_id", "epoch")
-        .localCheckpoint()
-    )
-    # tombstone purge is EPOCH-AWARE (mirrors the serving mask): a
-    # delete stamped e kills only versions ingested at epoch ≤ e, so a
-    # doc re-upserted after its delete survives the rewrite. Expand the
-    # snapshot against the table's few distinct epochs into exact
-    # (doc_id, epoch) pairs for the composite anti.
-    epochs = doclen_t.select("epoch").distinct()
-    # pinned (localCheckpoint) like ``stale``: the pair expansion reads
-    # the doclen table, which the concurrent doclen rewrite below swaps
-    # out mid-pass — all three rewrites must purge the same consistent
-    # snapshot regardless of completion order. Bounded by
-    # |tombstones| × |epochs|, not index size.
-    tomb_pairs = (
-        tomb.crossJoin(epochs)
-        .where(F.col("epoch") <= F.col("deleted_at_epoch"))
-        .select("doc_id", "epoch")
-        .localCheckpoint()
-    )
-    purge = [(["doc_id", "epoch"], tomb_pairs), (["doc_id", "epoch"], stale)]
-
-    # The three per-table rewrites are independent (distinct tables,
-    # per-table staging names inside compact_bucketed_table) and every
-    # shared input (tomb snapshot, stale set, tomb_pairs) is pinned, so
-    # they run concurrently — the two token-bucketed shuffles overlap
-    # and the swap DDL latency hides under them (guide §2.6; the same
-    # measured pattern as the pooled index builds).
-    def _c(suffix: str, key: str):
-        return compact_bucketed_table(
-            spark,
-            f"{table_prefix}_{suffix}",
-            key=key,
-            n_buckets=POSTINGS_BUCKETS,
-            fold_partition=("epoch", BASE_EPOCH),
-            anti=purge,
-        )
-
-    a, b, _ = par_ops(
-        lambda: _c("postings", "token"),
-        lambda: _c("doclen", "doc_id"),
-        lambda: _c("positions", "token"),
-    )
-    purge_applied_tombstones(spark, f"{table_prefix}_tombstones", applied)
-    return a, b
+    postings, doclen, _ = index_compact(spark, BM25_INDEX, table_prefix, tombs)
+    return postings, doclen
 
 
 def q_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,15 +784,10 @@ def q_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPACT both bucketed tables, then serve the standard term query.
     The oracle is the upsert oracle verbatim — compaction must be
     invisible to ranking — and both file counts must strictly drop."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_compact_")
-    prefix = "bm25_idx_cp"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         for half in (0, 1):
             bm25_index_upsert(
@@ -905,10 +802,6 @@ def q_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         (pb, pa), (db, da) = bm25_index_compact(spark, prefix)
         assert pa < pb and da < db, ((pb, pa), (db, da))
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -922,24 +815,15 @@ def q_bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     never match AND df must count only surviving postings, while the
     frozen (n_docs, avgdl) scalars keep their build-time values — the
     oracle recomputes exactly that split."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     doomed = docs.where(
         F.col("doc_id") % BM25_DELETE_MOD == BM25_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="bm25_delete_")
-    prefix = "bm25_idx_del"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(docs, prefix, out)
         bm25_index_delete(spark, doomed, prefix)
         bm25_index_delete(spark, doomed, prefix)  # replayed: no-op
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1041,27 +925,18 @@ def q_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the refresh must make serving equal to; a stale scalar (the
     pre-refresh frozen value) or an over/under-counted survivor set
     fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
     doomed = docs.where(
         F.col("doc_id") % BM25_DELETE_MOD == BM25_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="bm25_refresh_")
-    prefix = "bm25_idx_rf"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         bm25_index_upsert(delta, prefix)
         bm25_index_delete(spark, doomed, prefix)
         bm25_index_refresh_stats(spark, prefix)
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1143,18 +1018,13 @@ def q_bm25_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL (refresh makes serving equal a from-scratch rebuild; compaction
     must be invisible) — a remedy that failed to fire or a compact that
     lost/duplicated a posting fails the hash."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
     doomed = docs.where(
         F.col("doc_id") % BM25_DELETE_MOD == BM25_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="bm25_autopilot_")
-    prefix = "bm25_idx_auto"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         for e in range(2):
             bm25_index_upsert(
@@ -1168,10 +1038,6 @@ def q_bm25_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         actions = bm25_index_autopilot(spark, prefix, max_epochs=1)
         assert actions == ["refresh_stats", "compact"], actions
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1185,16 +1051,12 @@ def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta arrives across MULTIPLE epochs so a dropped or replayed one
     fails the hash."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_stream_ingest_")
-    prefix = "bm25_idx_st"
-    src = os.path.join(out, "arrivals")
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
+        src = os.path.join(out, "arrivals")
         bm25_index_build(base, prefix, os.path.join(out, "index"))
         for half in (0, 1):
             delta.where(
@@ -1203,23 +1065,14 @@ def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 == half
             ).coalesce(1).write.mode("append").parquet(src)
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda batch, eid: bm25_index_upsert(batch, prefix, epoch=eid)
-            )
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_stream(
+            spark,
+            docs.schema,
+            src,
+            os.path.join(out, "ckpt"),
+            lambda batch, eid: bm25_index_upsert(batch, prefix, epoch=eid),
         )
-        q.awaitTermination()
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1250,31 +1103,12 @@ def q_streaming_bm25_maintained(
     either side of the window, or an unfolded partition all fail the
     hash."""
     import os
-    import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
     sub = F.expr(f"pmod(doc_id div {UPSERT_DOC_MOD}, 4)")
-    out = tempfile.mkdtemp(prefix="bm25_stream_maint_")
-    prefix = "bm25_idx_stm"
-
-    def run_stream(src: str, ckpt: str) -> None:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda batch, eid: bm25_index_upsert(batch, prefix, epoch=eid)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, os.path.join(out, "index"))
         for phase, slices in (("one", (0, 1)), ("two", (2, 3))):
             src = os.path.join(out, f"arrivals_{phase}")
@@ -1289,12 +1123,14 @@ def q_streaming_bm25_maintained(
                 # the fold is WHY a fresh checkpoint's batch ids are
                 # safe to reuse as epochs
                 assert next_epoch(spark, f"{prefix}_postings") == 0
-            run_stream(src, os.path.join(out, f"ckpt_{phase}"))
+            drain_stream(
+                spark,
+                docs.schema,
+                src,
+                os.path.join(out, f"ckpt_{phase}"),
+                lambda batch, eid: bm25_index_upsert(batch, prefix, epoch=eid),
+            )
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1303,19 +1139,10 @@ def q_bm25_index_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity with the inline ``bm25_phrase_search`` (same SQL verbatim):
     build writes the positional table once, the phrase query reads only
     the index."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="bm25_phrase_idx_")
-    prefix = "bm25_idx_ph"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(docs, prefix, out)
         rows = bm25_index_phrase(spark, BM25_PHRASE, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "doc_id bigint, tf bigint, score_scaled bigint, rnk int"
     )
@@ -1367,15 +1194,10 @@ def q_bm25_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build over the base slice, ingest the held-out quarter as two
     epochs, audit per-epoch vocabulary drift. The oracle recomputes the
     per-epoch vocabularies from the raw corpus with the same split."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_drift_")
-    prefix = "bm25_idx_drift"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         for half in (0, 1):
             bm25_index_upsert(
@@ -1389,10 +1211,6 @@ def q_bm25_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 epoch=half,
             )
         rows = bm25_index_drift(spark, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "epoch bigint, n_postings bigint, n_tokens bigint,"
@@ -1446,24 +1264,15 @@ def q_bm25_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch fails the hash. History spans only epochs since the last
     compaction — folding voids older as-of points (see
     compact_bucketed_table)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
-    out = tempfile.mkdtemp(prefix="bm25_asof_")
-    prefix = "bm25_idx_asof"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         bm25_index_upsert(delta, prefix, epoch=0)
         rows = bm25_index_search(
             spark, BM25_QUERY, prefix, as_of_epoch=BASE_EPOCH
         ).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 
 
@@ -1480,17 +1289,7 @@ assert _ORACLE_INDEX_ASOF != _ORACLE_BM25_SEARCH
 def bm25_index_manifest(spark: SparkSession, table_prefix: str) -> DataFrame:
     """DESCRIBE-INDEX for the text index (shared helper in
     sinks/writers.py)."""
-    return index_manifest(
-        spark,
-        table_prefix,
-        [
-            ("postings", True),
-            ("doclen", True),
-            ("positions", True),
-            ("stats", False),
-            ("tombstones", False),
-        ],
-    )
+    return index_manifest(spark, table_prefix, BM25_INDEX.tables)
 
 
 def q_bm25_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1498,26 +1297,17 @@ def q_bm25_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice, read the manifest. The oracle recomputes every logical count
     from the raw corpus (distinct (doc,token) postings, distinct docs,
     token occurrences, one stats row, tombstone volume)."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % UPSERT_DOC_MOD != UPSERT_DOC_MOD - 1)
     delta = docs.where(F.col("doc_id") % UPSERT_DOC_MOD == UPSERT_DOC_MOD - 1)
     doomed = docs.where(
         F.col("doc_id") % BM25_DELETE_MOD == BM25_DELETE_REM
     ).select("doc_id")
-    out = tempfile.mkdtemp(prefix="bm25_manifest_")
-    prefix = "bm25_idx_mf"
-    try:
+    with scratch_index(spark, BM25_INDEX) as (out, prefix):
         bm25_index_build(base, prefix, out)
         bm25_index_upsert(delta, prefix, epoch=0)
         bm25_index_delete(spark, doomed, prefix)
         rows = bm25_index_manifest(spark, prefix).collect()
-    finally:
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "table_name string, n_rows bigint, n_epochs bigint,"
@@ -1559,18 +1349,15 @@ FROM counts ORDER BY table_name
 def serving_plans(spark: SparkSession, sf_dir: str):
     """Plan-audit hook: the real index-serving plan (see
     ann_index.serving_plans for the contract)."""
-    import shutil
-    import tempfile
+    from contextlib import ExitStack
 
     docs = load_table(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="bm25_index_audit_")
-    prefix = "bm25_idx_audit"
-    bm25_index_build(docs, prefix, out)
-
-    def cleanup():
-        for t in ("postings", "doclen", "stats", "positions", "tombstones"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-        shutil.rmtree(out, ignore_errors=True)
+    with ExitStack() as scratch:
+        out, prefix = scratch.enter_context(
+            scratch_index(spark, BM25_INDEX)
+        )
+        bm25_index_build(docs, prefix, out)
+        cleanup = scratch.pop_all().close
 
     return {
         "bm25_index_search": lambda: bm25_index_search(

@@ -575,13 +575,6 @@ def vacuum_stale_epoch_claims(
     return dropped
 
 
-# One definition per id-space of the tombstone DDL — the build, delete,
-# compact, and truncate sites of each index family all reference these,
-# so a family's schema literal can never drift from its table.
-TOMBSTONE_DOC_SCHEMA = "doc_id bigint, deleted_at_epoch bigint"
-TOMBSTONE_VEC_SCHEMA = "vec_id bigint, deleted_at_epoch bigint"
-
-
 def snapshot_tombstones(spark, tomb_table: str, schema: str):
     """Pin the tombstone set a compaction will PURGE: returns
     ``(snapshot_df, snapshot_files)`` — a DataFrame to anti-join during

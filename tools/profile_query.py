@@ -73,7 +73,6 @@ def main() -> None:
         best = float("inf")
         jobs_before = jobs_after = 0
         for _ in range(max(1, args.runs)):
-            j0 = len(status.getJobIdsForGroup(None)) if False else None
             ids0 = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
             n0 = len(list(ids0))
             t0 = time.perf_counter()
