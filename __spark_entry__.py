@@ -21,8 +21,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from admob_data_pipeline_spark.operators.alerts import ctr_anomaly_sql
 
-    # threshold=0 keeps every scored row (the driver only smoke-checks
-    # rows>0; the ±25% alert flag is still computed per row).
+    # Every scored row comes back at any threshold; the threshold only
+    # sets the ±25% is_alert flag (the driver only smoke-checks rows>0).
     return ctr_anomaly_sql(spark, SF0001, threshold=25.0)
 
 

@@ -49,7 +49,7 @@ MAX_DF = 400  # stop-shingle cap (docs per shingle) at test scale
 # widening the BAND, not adding bands, is what controls candidate
 # volume — 15-bit bands give 32768 buckets per band (vs 256 at 8-bit,
 # 16 at the original 4-bit nibbles: each widening round was measured,
-# see ROUND_NOTES r4). At N docs the expected band-join volume is
+# see ARCHITECTURE.md). At N docs the expected band-join volume is
 # ~4·N²/2^band_bits, so 15-bit bands are a further 128× collision cut
 # over 8-bit at identical recall, and hamming ≤ 3 of 60 bits is a
 # tighter (more production-faithful) near-dup notion than 3 of 32.
@@ -511,7 +511,7 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     substring/instr string parses with integer shift-ANDs — strictly
     less per-token work. (The fresh-session cost of this operator is
     dominated by one-time codegen of the 60-wide aggregate, not by the
-    per-token math — measured, see ROUND_NOTES r4 / ARCHITECTURE.md.)"""
+    per-token math — measured, see ARCHITECTURE.md.)"""
     tok = widen_if_narrow(docs).select(
         "doc_id", F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok")
     )
@@ -552,7 +552,7 @@ def simhash_pairs(docs: DataFrame, hamming_max: int = HAMMING_MAX) -> DataFrame:
     # materialized (r12): the band self-join's two sides each re-plan
     # their branch, so without the checkpoint the tokenize + md5 + 60-
     # wide majority-vote aggregate (and its one-time codegen, the
-    # dominant fresh-session cost per ROUND_NOTES r4) executed TWICE.
+    # dominant fresh-session cost, see simhash()) executed TWICE.
     # (doc_id, simhash) is two BIGINTs per doc.
     s = simhash(docs).localCheckpoint()
     band_vals = s.select(

@@ -61,7 +61,7 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     write_empty_tombstones,
 )
 from admob_data_pipeline_spark.operators.util import (
-    BROADCAST_ROW_LIMIT,
+    broadcast_if_small,
     join_small,
     par_ops,
 )
@@ -194,9 +194,7 @@ def _stoplist_filter(sh_all: DataFrame, banned: DataFrame, stoplist: tuple | Non
     if stoplist is None:
         return join_small(sh_all, banned, "shingle", "left_anti")
     pre, n = stoplist
-    if n <= BROADCAST_ROW_LIMIT:
-        return sh_all.join(F.broadcast(pre), "shingle", "left_anti")
-    return sh_all.join(pre, "shingle", "left_anti")
+    return sh_all.join(broadcast_if_small(pre, n), "shingle", "left_anti")
 
 
 def dedup_index_probe(

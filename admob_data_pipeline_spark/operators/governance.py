@@ -81,9 +81,9 @@ def erasure_audit(
     # One count decides BOTH legs (the semi and anti join can never
     # legitimately want different strategies for the same build side) —
     # join_small twice would launch the count job twice.
-    from admob_data_pipeline_spark.operators.util import BROADCAST_ROW_LIMIT
+    from admob_data_pipeline_spark.operators.util import broadcast_if_small
 
-    build = F.broadcast(fkeys) if fkeys.count() <= BROADCAST_ROW_LIMIT else fkeys
+    build = broadcast_if_small(fkeys, fkeys.count())
     erased = events.join(build, key, "left_semi")
     kept = events.join(build, key, "left_anti").withColumn(
         "frag",

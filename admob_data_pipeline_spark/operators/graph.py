@@ -150,7 +150,8 @@ def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     materialized result, not another join.
 
     (History: the r5 pointer-jump attempt was measured a no-win under
-    that round's join+agg+join round shape — see ROUND_NOTES r5. The r12
+    that round's join+agg+join round shape — see round 5 in
+    ``git show 1a9d101:ROUND_NOTES.md``. The r12
     round-shape rewrite below made the jump nearly free — one extra
     broadcast-shaped join per round — and it now measurably cuts rounds
     (mutual-kNN CC 12 → 7); the jump in this function is the KEPT r12
@@ -1270,7 +1271,7 @@ def negative_samples(
     positive collision check is one anti-join on (user, item).
     """
     from admob_data_pipeline_spark.operators.util import (
-        BROADCAST_ROW_LIMIT,
+        broadcast_if_small,
         dense_global_index,
     )
 
@@ -1306,13 +1307,8 @@ def negative_samples(
     )
     # n_items already counted idx above — pick the join strategy from it
     # directly instead of paying join_small's second count job.
-    looked_up = (
-        cand.join(F.broadcast(idx), "idx")
-        if n_items <= BROADCAST_ROW_LIMIT
-        else cand.join(idx, "idx")
-    )
     return (
-        looked_up
+        cand.join(broadcast_if_small(idx, n_items), "idx")
         .join(
             positives.select("c", F.col("p").alias("item")),
             ["c", "item"],

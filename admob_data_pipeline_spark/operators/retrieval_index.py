@@ -149,7 +149,7 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
     # bucketed postings write (guide §2.6 — overlap independent jobs;
     # same pattern as ann_index_build). The tokenize subtrees execute in
     # parallel on idle cores instead of serializing behind a checkpoint
-    # barrier (the measured call of OPTIMIZATION_r12 "rejected #1").
+    # barrier (ROUND_NOTES.md, measured loser #3).
     par_ops(
         lambda: write_empty_tombstones(spark, BM25_INDEX, table_prefix, path),
         _write_postings,

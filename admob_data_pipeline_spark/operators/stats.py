@@ -46,10 +46,10 @@ def _signed_ppm_expr(num: str = "num", den: str = "den") -> Column:
     """sign(num) · (|num|·1e6 DIV den) with two-stage ×1000 scaling
     (playbook #23: |num|·1e6 can overflow where |num|·1000 cannot) and
     the sign split out so integer division never sees a negative operand
-    (playbook #26: Spark DIV truncates negatives toward zero, DuckDB //
-    floors). Takes column NAMES — Spark's integer ``DIV`` is only
-    reachable through SQL expression text, and float division would lose
-    bits above 2^53."""
+    (playbook #26: Spark DIV and DuckDB // both truncate toward zero and
+    drop the remainder on negatives). Takes column NAMES — Spark's
+    integer ``DIV`` is only reachable through SQL expression text, and
+    float division would lose bits above 2^53."""
     return F.expr(
         f"CAST((CASE WHEN {num} < 0 THEN -1 ELSE 1 END)"
         f" * ((ABS({num}) * 1000 DIV {den}) * 1000"
@@ -495,7 +495,7 @@ def ewma_from_daily(daily: DataFrame, group_col: str = "event_type") -> DataFram
     )
     t = t.withColumn("ewma_num", ewma_num.cast("long"))
     # sign-split (playbook #26): vm < 0 (refund/chargeback days) must not
-    # reach integer division — Spark DIV truncates, DuckDB // floors
+    # reach integer division — Spark DIV and DuckDB // both truncate
     ratio = F.expr(
         f"CAST((CASE WHEN vm < 0 THEN -1 ELSE 1 END)"
         f" * ((ABS(vm) * {EWMA_DEN} * 1000 DIV ewma_num) * 1000"

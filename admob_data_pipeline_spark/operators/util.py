@@ -84,10 +84,18 @@ def join_small(
     aggregated/materialized (localCheckpoint'd upstream) so the job is
     cheap relative to the corpus scan it guards.
     """
+    return big.join(broadcast_if_small(small, small.count(), max_rows), on, how)
+
+
+def broadcast_if_small(
+    small: DataFrame, n_rows: int, max_rows: int | None = None
+) -> DataFrame:
+    """``small`` with a broadcast hint when its row count ``n_rows`` (one
+    the caller already has) is within the limit, else unchanged so the
+    planner picks the join strategy — the one broadcast-or-shuffle
+    decision behind :func:`join_small` and every preloaded-count join."""
     limit = BROADCAST_ROW_LIMIT if max_rows is None else max_rows
-    if small.count() <= limit:
-        return big.join(F.broadcast(small), on, how)
-    return big.join(small, on, how)
+    return F.broadcast(small) if n_rows <= limit else small
 
 
 def dense_global_index(

@@ -2,8 +2,8 @@
 
 Each domain module contributes ``QUERIES`` (name → (spark, sf_dir) →
 DataFrame) and ``ORACLES`` (name → DuckDB SQL). Names are unique across
-modules; a query without an oracle gets the driver's weaker rows-only
-check (reserved for genuinely non-SQL-expressible ops).
+modules, and every query has an oracle (tests/test_queries_oracle.py
+fails on a query without one).
 """
 
 from __future__ import annotations
@@ -28,12 +28,7 @@ from admob_data_pipeline_spark.plans import analytics_ext, relational
 from admob_data_pipeline_spark.sinks import roundtrip
 from admob_data_pipeline_spark.streaming import alerts as streaming_alerts
 
-# Order matters for the driver's 50-query correctness window (see
-# DRIVER_GREEN below): within the "fresh" group, modules earlier in this
-# list are checked first. relational (pivot_revenue's fixed oracle) and the
-# LLM-pipeline operators are the never-driver-checked surface, so they lead;
-# analytics_ext's latest additions queue behind them for next round's
-# rotation.
+# Registry order is this module order, then each module's own order.
 _MODULES = [
     relational,
     ann_index,
@@ -66,551 +61,7 @@ def _merged(attr: str) -> dict:
     return out
 
 
-# Names with a driver-green CORRECTNESS row on record (round 1, sf0.01).
-# The external correctness gate samples only the first 50 registry entries
-# per round, so queries WITHOUT a green record are ordered first and the
-# already-verified set last; append each round's green names here to rotate
-# fresh queries into the checked window until every entry has a record.
-DRIVER_GREEN: frozenset[str] = frozenset(
-    {
-        # r01 + r02 driver-green rows (CORRECTNESS_r01/r02); appending
-        # each round rotates still-unchecked queries into the 50-slot
-        # window. pivot_revenue failed r01 (HUGEINT hash) but is green
-        # in r02.
-        "alert_messages",
-        "ann_bruteforce_topk",
-        "ann_ivf_topk",
-        "ann_lsh_topk",
-        "asof_join",
-        "bloom_pruned_join",
-        "calendar_rollup",
-        "chunk_flatten",
-        "cm_sketch_freq",
-        "cohort_retention",
-        "collect_by_group",
-        "corr_stats",
-        "ctr_anomaly_backfill",
-        "ctr_anomaly_df",
-        "ctr_anomaly_sql",
-        "ctr_anomaly_window",
-        "cube_summary",
-        "customers_without_orders",
-        "dedup_clusters",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "dim_join_filter",
-        "disjunctive_revenue",
-        "distinct_priorities",
-        "doc_chunking",
-        "doc_packing",
-        "embedding_class_centroids",
-        "embedding_neardup",
-        "embedding_neardup_lsh",
-        "embedding_quantize_int8",
-        "full_outer_coverage",
-        "funnel_conversion",
-        "global_revenue",
-        "grouping_sets_calendar",
-        "heavy_hitters",
-        "hll_distinct",
-        "idle_high_balance",
-        "incremental_rollup",
-        "kmv_distinct",
-        "kmv_overlap",
-        "large_volume_customers",
-        "merge_latest",
-        "min_cost_per_brand",
-        "multimodal_frame_dedup",
-        "multimodal_frames",
-        "multimodal_metadata",
-        "nation_volume_trade",
-        "pivot_revenue",
-        "pricing_summary",
-        "priority_shipmix",
-        "profile_orders",
-        "promo_revenue_ratio",
-        "props_json",
-        "quantile_stats",
-        "range_join",
-        "regional_revenue",
-        "report_spec",
-        "report_spec_mediation",
-        "resample_daily",
-        "revenue_histogram",
-        "salted_agg",
-        "salted_join",
-        "scalar_functions",
-        "scd2_intervals",
-        "semi_join",
-        "sessionize_batch",
-        "shipping_priority",
-        "sink_csv_roundtrip",
-        "sink_jsonl_roundtrip",
-        "sink_partition_overwrite",
-        "sink_sorted_layout",
-        "stratified_sample",
-        "streaming_attribution",
-        "streaming_daily_rates",
-        "streaming_dedup",
-        "streaming_sessionize",
-        "streaming_sessionize_sink",
-        "streaming_stateful_rates",
-        "text_bm25",
-        "text_corpus_filter",
-        "text_dataset_split",
-        "text_decontaminate",
-        "text_fingerprints",
-        "text_hashing_vectorizer",
-        "text_language_id",
-        "text_pii_redact",
-        "text_quality_scores",
-        "text_repetition",
-        "text_tfidf",
-        "text_token_stats",
-        "text_vocabulary",
-        "top_orders",
-        "trailing_date_range",
-        "union_reports",
-        "waiting_suppliers",
-        "window_analytics",
-        "window_ranks",
-        # r03 driver-green rows (CORRECTNESS_r03, 50/50 green).
-        "ann_mips_topk",
-        "as_of_snapshot",
-        "conversion_latency",
-        "copurchase_pairs",
-        "ctr_anomaly_bq_verbatim",
-        "dedup_paragraph",
-        "dedup_prefix_filter",
-        "dow_seasonality",
-        "embedding_pq",
-        "event_transitions",
-        "fk_integrity_audit",
-        "forecast_revenue_change",
-        "hll_rollup",
-        "length_bucket_sample",
-        "market_share",
-        "merge_upsert",
-        "multimodal_features",
-        "multimodal_resize",
-        "order_count_distribution",
-        "order_priority_check",
-        "packing_efficiency",
-        "product_profit",
-        "props_variant",
-        "recursive_reachability",
-        "report_rollup",
-        "returned_items",
-        "revenue_pareto",
-        "sink_compaction",
-        "sink_global_sort",
-        "sink_orc_roundtrip",
-        "sink_zorder_layout",
-        "skew_stress_join",
-        "sliding_distinct_users",
-        "sliding_window_rates",
-        "small_quantity_revenue",
-        "snapshot_diff",
-        "source_divergence",
-        "streaming_enrich",
-        "streaming_kmv_sink",
-        "supplier_share",
-        "supplier_variety",
-        "text_bpe_encode",
-        "text_bpe_merge_pairs",
-        "text_bpe_train",
-        "text_lm_score",
-        "text_normalize",
-        "top_supplier",
-        "triangle_count",
-        "user_rfm",
-        "weighted_sample",
-        # r04 driver-green rows (CORRECTNESS_r04, 50/50 green).
-        "ann_ivfpq_topk",
-        "ann_pq_adc_topk",
-        "ann_recall_audit",
-        "association_rules",
-        "contrastive_negatives",
-        "coreset_kcenter",
-        "curation_funnel",
-        "dedup_cluster_stats",
-        "dedup_containment",
-        "dedup_incremental",
-        "dedup_keep_best",
-        "dedup_lsh_sweep",
-        "dedup_minimizer",
-        "dedup_recall_audit",
-        "dedup_semantic_clusters",
-        "dedup_split_leakage",
-        "dedup_substring",
-        "dedup_weighted_jaccard",
-        "embedding_covariance",
-        "embedding_dim_stats",
-        "embedding_random_projection",
-        "embedding_standardize",
-        "frequent_triples",
-        "graph_assortativity",
-        "graph_clustering_coeff",
-        "graph_components",
-        "graph_hits",
-        "graph_kcore",
-        "graph_link_prediction",
-        "graph_pagerank",
-        "group_kfold",
-        "importance_weights",
-        "kmeans_lloyd",
-        "label_noise_audit",
-        "langid_confusion",
-        "mad_outliers",
-        "mixture_weights",
-        "multimodal_packing",
-        "mutual_information",
-        "negative_samples",
-        "ngram_novelty",
-        "ols_trend",
-        "recsys_hitrate",
-        "source_cap_sample",
-        "text_bigram_lm",
-        "text_char_entropy",
-        "text_collocations",
-        "text_vocab_coverage",
-        "text_word_dropout",
-        "tokenizer_fertility",
-        # r05 driver-green rows (CORRECTNESS_r05) — the 4 mediation
-        # queries, the full 45-name backlog, and knn_graph (slot 50).
-        "ab_assignment_srm",
-        "approx_quantile_audit",
-        "autocorr_lag1",
-        "benford_audit",
-        "chi_square",
-        "churn_labels",
-        "cohort_ltv",
-        "cusum_changepoint",
-        "daily_quantiles",
-        "dow_adjusted_spikes",
-        "dq_constraints",
-        "drift_psi",
-        "equidepth_histogram",
-        "erasure_audit",
-        "event_gaps",
-        "event_sequences",
-        "ewma_spikes",
-        "feature_info_gain",
-        "heavy_changers",
-        "jackknife_replicates",
-        "k_anonymity_audit",
-        "knn_graph",
-        "ks_test",
-        "l_diversity_audit",
-        "lag_features",
-        "mediation_ecpm_rollup",
-        "mediation_fill_rate",
-        "mediation_top_source",
-        "pareto_frontier",
-        "quantile_binning",
-        "rank_sum_test",
-        "report_warehouse_mediation",
-        "revenue_gini",
-        "rolling_zscore",
-        "sampled_quantiles",
-        "sequence_patterns",
-        "series_correlation",
-        "sink_bucketed_join",
-        "sink_manifest",
-        "sink_permissive_csv",
-        "sink_wap",
-        "streaming_drift_psi",
-        "streaming_ewma_spikes",
-        "streaming_topk",
-        "survival_km",
-        "t_closeness_audit",
-        "temporal_split",
-        "theil_sen_trend",
-        "typo_pairs",
-        "winsorized_stats",
-        # r06 driver-green rows (CORRECTNESS_r06, 50/50 green). With this
-        # append every registry entry has a driver-confirmed verdict —
-        # unchecked backlog is ZERO for the first time.
-        "attribution_linear",
-        "bm25_phrase_search",
-        "bm25_search",
-        "bm25_search_and",
-        "ctr_anomaly_warehouse",
-        "curation_gate",
-        "dedup_mutual_knn_clusters",
-        "dedup_tfidf_cosine",
-        "embedding_neardup_sweep",
-        "knn_graph_recall",
-        "knn_hubness",
-        "knn_mutual_edges",
-        "knn_recall_by_label",
-        "mediation_group_share",
-        "network_dpp_join",
-        "network_match_rate",
-        "network_missing_cells",
-        "network_rpm_rollup",
-        "report_warehouse_network",
-        "streaming_mediation_ecpm",
-        "streaming_network_funnel",
-        # r07 driver-green rows (CORRECTNESS_r07, 50/50 green: 38 fresh
-        # names below + the 6-name knn RECHECK re-verified + 6 green
-        # re-checks). Backlog stays ZERO — all 308 registry entries are
-        # driver-confirmed.
-        "attribution_decay_sweep",
-        "attribution_model_compare",
-        "attribution_position",
-        "attribution_salted",
-        "attribution_timedecay",
-        "attribution_touch_models",
-        "curation_agreement",
-        "dominant_suppliers",
-        "embedding_decontaminate",
-        "embedding_drift_psi",
-        "hybrid_search_rrf",
-        "interval_overlap_join",
-        "ivm_join_delta",
-        "knn_label_modularity",
-        "knn_probe_lift",
-        "knn_recall_by_source",
-        "lateral_top_orders",
-        "mediation_dpp_join",
-        "mediation_missing_cells",
-        "mediation_rollup_grain",
-        "nullsafe_day_over_day",
-        "quality_classifier",
-        "reload_reconcile",
-        "report_sink_python_roundtrip",
-        "report_source_pushdown",
-        "report_source_scan",
-        "retrieval_mrr",
-        "retrieval_ndcg",
-        "sink_schema_evolution",
-        "skew_audit",
-        "source_similarity_matrix",
-        "stratified_split_exact",
-        "streaming_curation_gate",
-        "streaming_quality_classifier",
-        "streaming_report_sink_roundtrip",
-        "streaming_report_source",
-        "streaming_skew_audit",
-        "warehouse_funnel_compare",
-        # r08 driver-green rows (CORRECTNESS_r08, 50/50 green: 21 fresh
-        # names below + the 9-name knn RECHECK re-verified + 20 green
-        # re-checks). Backlog stays ZERO — all 329 registry entries are
-        # driver-confirmed.
-        "ann_index_build",
-        "ann_index_rerank",
-        "ann_index_search",
-        "ann_index_upsert",
-        "bm25_index_build",
-        "bm25_index_search",
-        "bm25_index_upsert",
-        "curation_pipeline_audit",
-        "dedup_index_build",
-        "dedup_index_probe",
-        "graph_label_propagation",
-        "ivm_retract_delta",
-        "mixture_epoch_plan",
-        "multimodal_bmp_decode",
-        "multimodal_wav_decode",
-        "semdedup_kmeans",
-        "semdedup_kmeans_lsh",
-        "sink_xml_roundtrip",
-        "source_binaryfile_scan",
-        "streaming_ann_ingest",
-        "streaming_late_data_audit",
-        # r09 driver-green rows (CORRECTNESS_r09, 50/50 green: 23 fresh
-        # names below + the 19-name RECHECK re-verified + 8 green
-        # re-checks). Backlog stays ZERO — all 352 registry entries are
-        # driver-confirmed.
-        "ann_index_asof",
-        "ann_index_compact",
-        "ann_index_delete",
-        "ann_index_drift",
-        "ann_index_manifest",
-        "bm25_index_asof",
-        "bm25_index_compact",
-        "bm25_index_delete",
-        "bm25_index_drift",
-        "bm25_index_manifest",
-        "bm25_index_phrase",
-        "dedup_index_asof",
-        "dedup_index_compact",
-        "dedup_index_delete",
-        "dedup_index_drift",
-        "dedup_index_manifest",
-        "dedup_index_upsert",
-        "hybrid_index_search",
-        "multimodal_audio_frames",
-        "multimodal_audio_vad",
-        "multimodal_image_tiles",
-        "streaming_bm25_ingest",
-        "streaming_dedup_ingest",
-        # r10 driver-green rows (CORRECTNESS_r10): the round-10 wave of
-        # index-lifecycle ops plus the hybrid ingest/parity/repair set.
-        "ann_index_autopilot",
-        "ann_index_split",
-        "bm25_index_autopilot",
-        "bm25_index_refresh",
-        "dedup_index_autopilot",
-        "dedup_index_ban_hot",
-        "hybrid_index_autopilot",
-        "hybrid_index_parity",
-        "hybrid_index_repair",
-        "streaming_hybrid_ingest",
-        # r11 driver-green rows (CORRECTNESS_r11): the mid-stream
-        # maintenance composition, the guarded autopilot policy, and the
-        # catalog-arbitrated upsert; plus fresh re-verification of the
-        # whole 14-name RECHECK set (drained below).
-        "streaming_bm25_maintained",
-        "hybrid_index_autopilot_guarded",
-        "bm25_index_upsert_arbiter",
-        # r12 driver-green rows (CORRECTNESS_r12, 50/50 green): the
-        # round-12 reupsert/maintained wave earned its first verdicts,
-        # and the whole 35-name r12 RECHECK set re-verified (drained
-        # below). Backlog stays ZERO — all 372 entries driver-confirmed.
-        "ann_index_reupsert",
-        "bm25_index_reupsert",
-        "dedup_index_reupsert",
-        "hybrid_index_reupsert",
-        "streaming_ann_maintained",
-        "streaming_dedup_maintained",
-        "streaming_hybrid_maintained",
-    }
-)
-
-
-# Queries that have NEVER had a driver verdict (6 after r5 — the round-5
-# wave-2 additions that landed behind the backlog). They lead round 6's
-# correctness window; once driver-green, the whole registry is externally
-# confirmed. New queries land at the FRONT of this tuple while free window
-# slots exist (50 − len(unchecked)), BEHIND the backlog otherwise, so a
-# never-checked name is never pushed out of the driver's 50-query window.
-# Names absent from the registry are ignored, so this list never breaks on
-# renames.
-FRESH_FIRST: tuple[str, ...] = (
-    # round-13 added no new queries (optimization round); the round-12
-    # wave drained into DRIVER_GREEN via CORRECTNESS_r12. New names land
-    # here, newest first.
-)
-
-
-# Names whose SEMANTICS changed after their green record was written.
-# They must stay in DRIVER_GREEN (the rotation test pins that every
-# recorded verdict is represented) but their label was earned by the OLD
-# code, so they re-enter the front of the window until a fresh verdict
-# lands — then remove them from here.
-RECHECK: frozenset[str] = frozenset(
-    {
-        # r13: the bm25 upsert path tokenizes ONCE (positions are the
-        # materialization; tf and doclen derive from them — doclen as a
-        # direct per-doc occurrence count) and the three epoch writes
-        # overlap. Written table contents verified byte-identical and
-        # all family oracles green at sf0.001+sf0.01, but every query
-        # whose lifecycle runs the rewritten ingest re-enters the window
-        # until a fresh driver verdict lands.
-        "bm25_index_upsert",
-        "bm25_index_upsert_arbiter",
-        "bm25_index_reupsert",
-        "bm25_index_refresh",
-        "bm25_index_autopilot",
-        "bm25_index_drift",
-        "bm25_index_manifest",
-        "bm25_index_asof",
-        "bm25_index_compact",
-        "streaming_bm25_ingest",
-        "streaming_bm25_maintained",
-        # r13: dedup probe dropped its inner batch-shingle checkpoint,
-        # upsert writes overlap, and ban_hot's per-epoch rewrite loop
-        # became one multi-epoch dynamic overwrite per table.
-        "dedup_index_probe",
-        "dedup_index_upsert",
-        "dedup_index_compact",
-        "dedup_index_asof",
-        "dedup_index_autopilot",
-        "dedup_index_ban_hot",
-        "dedup_index_delete",
-        "dedup_index_reupsert",
-        "streaming_dedup_ingest",
-        "streaming_dedup_maintained",
-        # r13: hybrid lifecycles inherit the bm25 ingest rewrite (their
-        # ann leg is unchanged); parity/repair additionally overlap
-        # their audit reads (scheduling only, plans unchanged).
-        "hybrid_index_parity",
-        "hybrid_index_repair",
-        "hybrid_index_reupsert",
-        "streaming_hybrid_ingest",
-        "streaming_hybrid_maintained",
-        # r13: profile_orders re-planned (multi-distinct sort-aggregate
-        # pipeline -> hash partials over typed records); revenue_gini's
-        # total aggregate lifted to DECIMAL(38,0) with a BIGINT output
-        # cast.
-        "profile_orders",
-        "revenue_gini",
-    }
-)
-
-
-
-
-# Verdict-age refresh (judge r11 ask #7): after FRESH_FIRST and RECHECK
-# fill their slots, the REMAINING window capacity goes to the names whose
-# most recent driver verdict is OLDEST (computed from CORRECTNESS_r*.json
-# at composition time each round), so no query's verdict ages past ~10
-# rounds. Pure rotation bookkeeping — semantics of these queries are
-# unchanged; clear alongside FRESH_FIRST at the next round's first commit
-# and refill with that round's oldest names.
-AGED_REFRESH: tuple[str, ...] = (
-    # r13 refill (verdict-age order at composition time): every name
-    # below has its latest green in CORRECTNESS_r01/r02; the 22 slots
-    # are the window capacity left after the 28-name r13 RECHECK.
-    "full_outer_coverage",
-    "funnel_conversion",
-    "grouping_sets_calendar",
-    "heavy_hitters",
-    "idle_high_balance",
-    "incremental_rollup",
-    "large_volume_customers",
-    "min_cost_per_brand",
-    "nation_volume_trade",
-    "priority_shipmix",
-    "promo_revenue_ratio",
-    "range_join",
-    "regional_revenue",
-    "resample_daily",
-    "semi_join",
-    "waiting_suppliers",
-    "window_ranks",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "dedup_clusters",
-    "dedup_exact",
-)
-
-
-def _prioritized(d: dict) -> dict:
-    lead = (
-        tuple(FRESH_FIRST) + tuple(sorted(RECHECK)) + tuple(AGED_REFRESH)
-    )
-    first = {
-        k: d[k]
-        for k in lead
-        if k in d
-        and (k not in DRIVER_GREEN or k in RECHECK or k in AGED_REFRESH)
-    }
-    fresh = {
-        k: v for k, v in d.items() if k not in DRIVER_GREEN and k not in first
-    }
-    green = {
-        k: v for k, v in d.items() if k in DRIVER_GREEN and k not in first
-    }
-    return {**first, **fresh, **green}
-
-
-QUERIES = _prioritized(_merged("QUERIES"))
+QUERIES = _merged("QUERIES")
 ORACLES = _merged("ORACLES")
 
 # Plan-audit hooks: registered index-lifecycle wrappers collect

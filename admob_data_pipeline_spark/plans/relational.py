@@ -1685,7 +1685,8 @@ def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     planned as SORT aggregates end to end — Catalyst's distinct rewrite
     expands the scan 6× and the string min/max buffers (o_orderstatus)
     disqualify HashAggregateExec, so every expanded row went through a
-    full 6-key sort (plans/r13/profile_orders_before.txt). Instead,
+    full 6-key sort (``git show
+    1a9d101:plans/r13/profile_orders_before.txt``). Instead,
     explode each row into one narrow typed (column-idx, value) record
     per column and reduce with HASH aggregates: stage 1 dedupes values
     per column with map-side partials (count per distinct value — keys

@@ -88,8 +88,8 @@ def earn_micros_col() -> F.Column:
 
 def ecpm_micros_col() -> F.Column:
     """eCPM over exact integer sums, kept integral by floor division —
-    ROUND at micros magnitude sits past double precision (ROUND_NOTES
-    r5). Expects aggregated ``earn_micros`` / ``impressions`` columns."""
+    ROUND at micros magnitude sits past double precision (playbook #2).
+    Expects aggregated ``earn_micros`` / ``impressions`` columns."""
     return F.expr("earn_micros * 1000 DIV NULLIF(impressions, 0)").cast("long")
 
 

@@ -23,14 +23,13 @@ def con():
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
 def test_query_matches_oracle(spark, con, name):
-    fn = entry_mod.queries()[name]
-    df = fn(spark, SF)
-    oracles = entry_mod.oracle_sql()
-    if name not in oracles:
-        assert df.count() >= 0  # rows-only contract
-        return
-    problems = diff_vs_oracle(df, con, oracles[name])
+    df = entry_mod.queries()[name](spark, SF)
+    problems = diff_vs_oracle(df, con, entry_mod.oracle_sql()[name])
     assert not problems, f"{name}: {problems}"
+
+
+def test_every_query_has_an_oracle():
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
 
 
 def test_entry_smoke(spark):
