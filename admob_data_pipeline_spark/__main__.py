@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 
 class OfflineChunkSource:
-    """ChunkSource over driver testdata: nested chunks from lineitem."""
+    """ChunkSource over driver testdata: nested chunks from lineitem.
+
+    Honours the report spec like the AdMob API does: only rows whose
+    ``l_shipdate`` (the DATE dimension) lies in ``spec.date_range``, and,
+    given an ``APP`` filter, only apps matching a value by id
+    (``l_returnflag``) or by display label (``App-<id>``)."""
 
     def __init__(self, sf_dir: str):
         self.sf_dir = sf_dir
@@ -42,6 +47,14 @@ class OfflineChunkSource:
         li = load_table(spark, self.sf_dir, "lineitem")
         if kind == "mediation":
             li = li.where(F.col("l_orderkey") % 2 == 0)
+        if spec.date_range:
+            start, end = spec.date_range
+            day = F.to_date("l_shipdate")
+            li = li.where(day.between(F.to_date(F.lit(start)), F.to_date(F.lit(end))))
+        apps = list(spec.dimension_filters.get("APP", ()))
+        if apps:
+            app_id = F.col("l_returnflag")
+            li = li.where(app_id.isin(apps) | F.concat(F.lit("App-"), app_id).isin(apps))
         return chunks_mod.synthesize_chunks_from_lineitem(li)
 
 

@@ -6,10 +6,10 @@ Every inline ANN query in :mod:`.similarity` (``ann_ivf_topk``,
 query — fine for an audit, wrong for production, where the index is an
 artifact: centroids are trained once, the corpus is assigned and
 quantized once, and millions of queries then touch only the persisted
-layout. This module composes the existing building blocks
-(``fused_assign_code_kernel`` — the single-pass assign+quantize kernel
-shared with ``ann_ivfpq_topk`` — and ``_pq_codebooks``) into that
-split:
+layout. This module composes the building blocks it shares with
+``ann_ivfpq_topk`` (``fused_assign_code_kernel`` — the single-pass
+assign+quantize kernel — ``_pq_codebooks`` and the serving core
+``serve_ivfpq``) into that split:
 
 - :func:`ann_index_build` writes FOUR tables: ``<prefix>_centroids``
   (cid, cv, cn — tiny, broadcast at search), ``<prefix>_codebooks``
@@ -25,15 +25,18 @@ split:
   unbucketed full scan (pinned in tests/test_ann_index.py). The fourth
   table is the ``<prefix>_tombstones`` delete set.
 - :func:`ann_index_search` reads those tables and NOTHING else except
-  the full-precision query vectors. No assignment kernel, no codebook
-  sampling, no pandas UDF anywhere in the search plan (test-pinned):
-  probe selection is a broadcast of |C| centroids, the probe join is a
-  sort-merge against the bucketed code table with ZERO Exchange on the
-  index side (the one-ingest-shuffle-never-again payoff, pinned in
-  tests/test_ann_index.py), and the ADC distance is m broadcast LUT
-  lookups summed map-side — the only remaining Exchange is the
-  per-query top-k window on the candidate set (~nprobe/|C| of the
-  corpus).
+  the full-precision query vectors, and serves through
+  ``similarity.serve_ivfpq`` — the same core as the inline
+  ``ivfpq_topk``. No assignment kernel, no codebook sampling, no pandas
+  UDF anywhere in the search plan (test-pinned): probe selection (a
+  broadcast of |C| centroids) and the per-query ADC LUT are collected
+  in one bounded job; the candidate cut is an IN-list filter that
+  prunes the bucketed code table to the probed lists plus a broadcast
+  of the literal (list_id, qid) probe pairs, with ZERO Exchange on the
+  index side (pinned in tests/test_ann_index.py); and the ADC distance
+  is m literal-map lookups summed map-side — the only remaining
+  Exchange is the per-query top-k window on the candidate set
+  (~nprobe/|C| of the corpus).
 
 Lifecycle (round 9): exactly-once ingest (epoch partition overwrite),
 compaction (one file per bucket, epoch fold, tombstone purge), logical
@@ -62,11 +65,15 @@ from admob_data_pipeline_spark.operators.similarity import (
     PQ_CODES,
     PQ_SLOTS,
     QUERY_IDS,
-    SERVE_QID_BATCH,
     _DUCK_BASE,
+    _centroid_frame,
+    _codebook_frame,
     _pq_codebooks,
+    _query_vectors,
+    _sampled_centroids,
     dot,
     fused_assign_code_kernel,
+    serve_ivfpq,
     with_vec,
 )
 from admob_data_pipeline_spark.sinks.writers import (
@@ -138,16 +145,7 @@ def ann_index_build(
     # §2.6) so the codebook scan back-fills cores under the centroid
     # scan's tail instead of serializing behind it.
     cent_rows, book_mats = par_ops(
-        lambda: (
-            base.where(F.col("vec_id") % centroid_mod == 0)
-            .select(
-                F.col("vec_id").alias("cid"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cn"),
-            )
-            .orderBy("cid")
-            .collect()
-        ),
+        lambda: _sampled_centroids(base, centroid_mod).orderBy("cid").collect(),
         lambda: _pq_codebooks(base, sub, m, kc),
     )
     kern, code_schema = fused_assign_code_kernel(
@@ -161,22 +159,12 @@ def ann_index_build(
 
     spark = emb.sparkSession
     drop_index_tables(spark, ANN_INDEX, table_prefix)
-    cb_df = spark.createDataFrame(
-        [
-            (s, c, book_mats[s][c])
-            for s in range(m)
-            for c in range(len(book_mats[s]))
-        ],
-        "s int, code int, cv array<double>",
-    )
+    cb_df = _codebook_frame(spark, book_mats)
 
     def _write_centroids() -> None:
-        spark.createDataFrame(
-            [(int(r["cid"]), list(r["cv"]), float(r["cn"])) for r in cent_rows],
-            "cid bigint, cv array<double>, cn double",
-        ).write.mode("overwrite").format("parquet").option(
-            "path", f"{path}/centroids"
-        ).saveAsTable(f"{table_prefix}_centroids")
+        _centroid_frame(spark, cent_rows).write.mode("overwrite").format(
+            "parquet"
+        ).option("path", f"{path}/centroids").saveAsTable(f"{table_prefix}_centroids")
 
     def _write_codebooks() -> None:
         cb_df.write.mode("overwrite").format("parquet").option(
@@ -400,202 +388,32 @@ def ann_index_search(
     :func:`ann_index_build`. Results are row-identical to the inline
     ``ivfpq_topk`` (same probes, same candidates, same exact-integer
     ADC sums, same tie-breaks) — the registered query is oracled
-    against the inline query's SQL verbatim.
+    against the inline query's SQL verbatim. Serving is
+    :func:`similarity.serve_ivfpq`, the core ``ivfpq_topk`` serves
+    through, fed the index tables and the epoch-aware tombstones.
     """
-    # Chunked serving above the literal-plan cap (similarity.py's
-    # SERVE_QID_BATCH): the serving plan embeds |Q|·(nprobe + m·kc)
-    # literals, so an unbounded query batch would blow the driver's plan
-    # compilation. Per-qid scoring/ranking makes the chunk union
-    # row-identical to one-shot serving; declared queries pin |Q|=8 and
-    # take the single-batch path with an unchanged plan.
-    qids_u = sorted({int(q) for q in query_ids})
-    if len(qids_u) > SERVE_QID_BATCH:
-        parts = [
-            ann_index_search(
-                emb,
-                qids_u[i : i + SERVE_QID_BATCH],
-                table_prefix,
-                k=k,
-                nprobe=nprobe,
-                m=m,
-                as_of_epoch=as_of_epoch,
-            )
-            for i in range(0, len(qids_u), SERVE_QID_BATCH)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy("qid", "rank")
     spark = emb.sparkSession
-    cents = spark.table(f"{table_prefix}_centroids")
     codes = spark.table(f"{table_prefix}_codes")
+    tomb = spark.table(f"{table_prefix}_tombstones")
     if as_of_epoch is not None:
         # TIME TRAVEL for free: the epoch layout makes an as-of read a
         # partition-PRUNED scan (PartitionFilters: epoch <= e) — later
-        # ingest epochs are never touched, not merely filtered
+        # ingest epochs are never touched, not merely filtered — and
+        # only tombstones stamped at-or-before e mask
         codes = codes.where(F.col("epoch") <= int(as_of_epoch))
-    cb_df = spark.table(f"{table_prefix}_codebooks")
-
-    qbase, dim = with_vec(emb)
-    sub = dim // m
-    # r12 (guide §1.2/§2.4/§5): every per-query artifact — the probe
-    # selection (|Q|·nprobe pairs) and the ADC LUT (|Q|·m·kc exact
-    # integer cells) — is bounded by the query batch, so evaluate both
-    # in ONE Spark job (a tagged union over the same point-lookup scan;
-    # all float math stays in JVM expressions, so the values are
-    # bit-identical to the former all-DataFrame form) and collect that
-    # union once. The serving query then joins a LITERAL probe table
-    # and sums literal map lookups: the codes scan takes an IN-list
-    # filter (file/bucket pruning), there is no per-slot broadcast
-    # build, and ``emb`` is scanned exactly once instead of once per
-    # broadcast job.
-    qf = qbase.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    # probe selection: raw-cosine top-nprobe against the broadcast
-    # centroid table — same expression and tie-break as ivfpq_topk
-    raw_q_cos = F.try_divide(
-        dot(F.col("qv"), F.col("cv"), dim), F.col("qn") * F.col("cn")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
-    probes = (
-        qf.crossJoin(F.broadcast(cents))
-        .select("qid", "cid", raw_q_cos.alias("csim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= nprobe)
-        .select(
-            F.lit(0).alias("tag"),
-            "qid",
-            F.col("cid").cast("long").alias("x"),
-            F.lit(None).cast("long").alias("y"),
-        )
-    )
-    # per-query LUT: |Q|·m·kc exact-integer cells (floor-scaled BEFORE
-    # summation, same as the inline path); s/code packed into one long
-    _STRIDE = 1 << 20
-    qslots = qf.select(
-        "qid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice("qv", s * sub + 1, sub).alias("qsv"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("e"),
-    ).select("qid", "e.s", "e.qsv")
-    lut = qslots.join(F.broadcast(cb_df), "s").select(
-        F.lit(1).alias("tag"),
-        "qid",
-        (F.col("s").cast("long") * F.lit(_STRIDE) + F.col("code")).alias("x"),
-        F.floor(
-            (
-                (
-                    dot(F.col("qsv"), F.col("qsv"))
-                    - 2 * dot(F.col("qsv"), F.col("cv"))
-                )
-                + dot(F.col("cv"), F.col("cv"))
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("y"),
-    )
-    art = probes.unionByName(lut).collect()
-
-    tomb = spark.table(f"{table_prefix}_tombstones")
-    if as_of_epoch is not None:
         tomb = tomb.where(F.col("deleted_at_epoch") <= int(as_of_epoch))
-
-    if not art:
-        # no query vectors matched: emit the same empty
-        # (qid, vec_id, adc_e6, rank) shape the non-empty path produces
-        empty = codes.where(F.lit(False)).select(
-            F.lit(None).cast("long").alias("qid"),
-            "vec_id",
-            F.lit(None).cast("long").alias("adc_e6"),
-        )
-        w0 = Window.partitionBy("qid").orderBy(F.asc("adc_e6"), F.asc("vec_id"))
-        return (
-            empty.withColumn("rank", F.row_number().over(w0))
-            .where(F.col("rank") <= k)
-            .orderBy("qid", "rank")
-        )
-
-    probe_pairs = sorted(
-        (int(r["qid"]), int(r["x"])) for r in art if r["tag"] == 0
-    )
-    lut_cells = [r for r in art if r["tag"] == 1]
-    kc = 1 + max(int(r["x"]) % _STRIDE for r in lut_cells)
-    slot_maps: list[dict] = [{} for _ in range(m)]
-    for r in lut_cells:
-        s, code = divmod(int(r["x"]), _STRIDE)
-        slot_maps[s][int(r["qid"]) * kc + code] = int(r["y"])
-
-    probes_lit = spark.createDataFrame(
-        [(lid, qid) for qid, lid in probe_pairs], "list_id long, qid long"
-    )
-    probe_lists = sorted({lid for _, lid in probe_pairs})
-    # candidate cut: IN-list filter prunes the bucketed codes scan to
-    # the probed lists, then a broadcast join of the literal
-    # (list_id, qid) pairs fans each surviving row out to its queries —
-    # zero Exchange and zero Sort on the corpus side, and no shuffle of
-    # the probe side either (vs the former merge join, which exchanged
-    # the probe frame into the bucket layout)
-    cand = (
-        codes.where(F.col("list_id").isin(probe_lists))
-        .join(F.broadcast(probes_lit), "list_id")
-        .where(F.col("vec_id") != F.col("qid"))
-        # logical deletes AND superseded versions: the tombstone join is
-        # EPOCH-AWARE — a tombstone stamped e kills only rows ingested
-        # at epoch ≤ e (LSM ordering: later ingest wins), which is both
-        # the delete mask and the re-upsert replace mask (upsert stamps
-        # a supersession tombstone at its epoch-1), and makes a
-        # re-ingest after a delete resurrect the id. The set is
-        # broadcast — bounded by deletes + re-upserts per compaction
-        # cycle by contract. An as-of read masks only tombstones
-        # stamped at-or-before its epoch.
-        .join(
-            F.broadcast(
-                tomb.select(
-                    F.col("vec_id").alias("__t_vid"), "deleted_at_epoch"
-                )
-            ),
-            (F.col("vec_id") == F.col("__t_vid"))
-            & (F.col("epoch") <= F.col("deleted_at_epoch")),
-            "left_anti",
-        )
-        .select("qid", "vec_id", *[f"c{s}" for s in range(m)])
-    )
-    # ADC = m literal-map lookups summed MAP-SIDE: one F.expr per slot
-    # (building the maps from individual F.lit Column objects costs
-    # ~2·|Q|·kc py4j round-trips — ~1 s of driver time at |Q|=8;
-    # a single SQL string per slot is one call). kc comes from the
-    # persisted codebook table, so coverage of every (qid, code) key is
-    # structural; element_at on a covered key can never yield NULL.
-    d_cols = []
-    for s in range(m):
-        entries = ",".join(
-            f"{key}L,{d}L" for key, d in sorted(slot_maps[s].items())
-        )
-        d_cols.append(
-            F.expr(f"element_at(map({entries}), qid * {kc}L + c{s})")
-        )
-    adc = cand.select(
-        "qid",
-        "vec_id",
-        sum(d_cols[1:], d_cols[0]).alias("adc_e6"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("adc_e6"), F.asc("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
+    qbase, dim = with_vec(emb)
+    return serve_ivfpq(
+        qbase,
+        query_ids,
+        spark.table(f"{table_prefix}_centroids"),
+        spark.table(f"{table_prefix}_codebooks"),
+        codes,
+        k=k,
+        nprobe=nprobe,
+        sub=dim // m,
+        m=m,
+        tombstones=tomb,
     )
 
 
@@ -682,11 +500,7 @@ def ann_index_search_rerank(
         emb, query_ids, table_prefix, k=rerank_r, nprobe=nprobe
     ).select("qid", "vec_id")
     base, dim = with_vec(emb)
-    q = base.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
+    q = _query_vectors(base, query_ids)
     cand_vecs = base.join(
         F.broadcast(shortlist.select("vec_id").distinct()), "vec_id", "left_semi"
     )

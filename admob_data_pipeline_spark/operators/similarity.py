@@ -33,7 +33,6 @@ Scale design:
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,14 +40,15 @@ from pyspark.sql import functions as F
 from admob_data_pipeline_spark.operators.util import widen_if_narrow
 from admob_data_pipeline_spark.sources.tables import load_table
 
-# Literal-plan serving (ivfpq_topk here, ann_index_search in
-# ann_index.py) embeds |Q|·(nprobe + m·kc) literals in the query plan —
-# linear in the query batch, so an unbounded batch would blow the
-# driver's plan compilation. Batches above this cap are served in
-# chunks of at most this size and unioned (result-identical: scoring,
-# ranking and tie-breaks are all per-qid). Declared queries pin |Q|=8,
-# far below the cap, so their plans are untouched.
-SERVE_QID_BATCH = int(os.environ.get("SPARK_GRAFT_SERVE_QID_BATCH", "1024"))
+# Literal-plan serving (serve_ivfpq, behind ivfpq_topk here and
+# ann_index_search in ann_index.py) embeds |Q|·(nprobe + m·kc)
+# literals in the query plan — linear in the query batch, so an
+# unbounded batch would blow the driver's plan compilation. Batches
+# above this cap are served in chunks of at most this size and unioned
+# (result-identical: scoring, ranking and tie-breaks are all per-qid).
+# Declared queries pin |Q|=8, far below the cap, so their plans are
+# untouched.
+SERVE_QID_BATCH = 1024
 
 N_PLANES = 8
 DEFAULT_K = 5
@@ -103,26 +103,37 @@ def cosine(
     return F.round(F.try_divide(dot(va, vb, dim), na * nb), 6)
 
 
+def _query_vectors(base: DataFrame, query_ids) -> DataFrame:
+    """``(qid, qv, qn)``: the query batch as a point lookup on ``base``."""
+    return base.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+
+
+def _top_k(scored: DataFrame, k: int, *order: Column) -> DataFrame:
+    """Per-query top-``k`` of ``scored`` by ``order`` (the row_number
+    window over ``qid``), ranked rows sorted by (qid, rank)."""
+    w = Window.partitionBy("qid").orderBy(*order)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .orderBy("qid", "rank")
+    )
+
+
 def topk_bruteforce(
     emb: DataFrame, query_ids: list[int], k: int = DEFAULT_K
 ) -> DataFrame:
     """Exact top-k: broadcast queries × all candidates."""
     base, dim = with_vec(emb)
-    q = base.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
+    q = _query_vectors(base, query_ids)
     pairs = base.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("qid"))
     scored = pairs.select(
         "qid",
         "vec_id",
         cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("nrm"), dim).alias("cos_sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _top_k(scored, k, F.desc("cos_sim"), F.col("vec_id"))
 
 
 def sign_bucket(v: Column, n_planes: int = N_PLANES) -> Column:
@@ -155,12 +166,7 @@ def topk_lsh(
         "vec_id",
         cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("nrm"), dim).alias("cos_sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _top_k(scored, k, F.desc("cos_sim"), F.col("vec_id"))
 
 
 def neardup_pairs(
@@ -195,6 +201,57 @@ def neardup_pairs(
         .localCheckpoint()
         .orderBy("a", "b")
     )
+
+
+def _numpy_folds():
+    """The numpy kernels' shared arithmetic: ``(fold, nearest, pq_codes)``.
+
+    ``fold(X, C)`` accumulates the score matrix ``X·Cᵀ`` and both row
+    norms² one dimension at a time, left to right — the same summation
+    order as the JVM ``aggregate`` fold and DuckDB ``list_dot_product``,
+    so every kernel that calls it is bit-identical to its SQL oracle.
+    ``nearest`` is the IVF argmax (raw cosine DESC, first index on exact
+    ties); ``pq_codes`` the per-slot PQ argmin over the
+    ``(x·x − 2x·c) + c·c`` distance, returning ``(code, dist)`` per slot.
+
+    Built inside a factory so the functions are closures: cloudpickle
+    ships them by value inside each Arrow kernel, numpy only (workers
+    don't import this package)."""
+
+    def fold(X, C):
+        import numpy as np
+
+        S = np.zeros((X.shape[0], C.shape[0]))
+        nx = np.zeros(X.shape[0])
+        nc = np.zeros(C.shape[0])
+        for i in range(X.shape[1]):  # left-to-right accumulation = fold order
+            S += np.outer(X[:, i], C[:, i])
+            nx += X[:, i] * X[:, i]
+            nc += C[:, i] * C[:, i]
+        return S, nx, nc
+
+    def nearest(X, C, ids):
+        import numpy as np
+
+        S, nx, nc = fold(X, C)
+        denom = np.outer(np.sqrt(nx), np.sqrt(nc))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(denom == 0, -np.inf, S / denom)
+        # argmax returns the FIRST max → smallest cid on exact ties,
+        # matching ORDER BY cos DESC, cid ASC
+        return ids[np.argmax(cos, axis=1)]
+
+    def pq_codes(X, Cs, sub):
+        import numpy as np
+
+        out = []
+        for s, C in enumerate(Cs):
+            S, nx, nc = fold(X[:, s * sub : (s + 1) * sub], C)
+            dist = (nx[:, None] - 2 * S) + nc[None, :]
+            out.append((np.argmin(dist, axis=1), dist))  # first min = smallest code
+        return out
+
+    return fold, nearest, pq_codes
 
 
 def neardup_pairs_blocked(
@@ -235,6 +292,7 @@ def neardup_pairs_blocked(
         "ga", "gb", F.lit(1).alias("side"), "vec_id", "v"
     )
     replicated = left.unionByName(right)
+    fold, _, _ = _numpy_folds()
 
     # Self-contained closure (workers don't share the driver's sys.path).
     def block_cosines(pdf):
@@ -251,14 +309,7 @@ def neardup_pairs_blocked(
         ids_b = b_pdf["vec_id"].to_numpy()
         A = np.vstack(a_pdf["v"].to_numpy())
         B = np.vstack(b_pdf["v"].to_numpy())
-        dim = A.shape[1]
-        C = np.zeros((len(ids_a), len(ids_b)))
-        na = np.zeros(len(ids_a))
-        nb = np.zeros(len(ids_b))
-        for i in range(dim):  # left-to-right accumulation = fold order
-            C += np.outer(A[:, i], B[:, i])
-            na += A[:, i] * A[:, i]
-            nb += B[:, i] * B[:, i]
+        C, na, nb = fold(A, B)
         denom = np.outer(np.sqrt(na), np.sqrt(nb))
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = C / denom
@@ -333,6 +384,7 @@ def assign_lists(base: DataFrame, cents: DataFrame) -> DataFrame:
     )
     cent_ids = [int(r["cid"]) for r in cent_rows]
     cent_mat = [list(r["cv"]) for r in cent_rows]
+    _, nearest, _ = _numpy_folds()
 
     def assign(batches):
         import numpy as np
@@ -343,24 +395,35 @@ def assign_lists(base: DataFrame, cents: DataFrame) -> DataFrame:
             if pdf.empty:
                 continue
             X = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # (n, d)
-            d = X.shape[1]
-            S = np.zeros((X.shape[0], C.shape[0]))
-            nx = np.zeros(X.shape[0])
-            nc = np.zeros(C.shape[0])
-            for i in range(d):  # left-to-right accumulation = fold order
-                S += np.outer(X[:, i], C[:, i])
-                nx += X[:, i] * X[:, i]
-                nc += C[:, i] * C[:, i]
-            denom = np.outer(np.sqrt(nx), np.sqrt(nc))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0, -np.inf, S / denom)
-            # argmax returns the FIRST max → smallest cid on exact ties,
-            # matching ORDER BY cos DESC, cid ASC
-            pdf = pdf.assign(list_id=ids[np.argmax(cos, axis=1)])
+            pdf = pdf.assign(list_id=nearest(X, C, ids))
             yield pdf[["vec_id", "v", "nrm", "list_id"]]
 
     return base.mapInPandas(
         assign, schema="vec_id bigint, v array<double>, nrm double, list_id bigint"
+    )
+
+
+def _sampled_centroids(base: DataFrame, centroid_mod: int) -> DataFrame:
+    """The deterministic IVF centroid sample ``vec_id % centroid_mod == 0``
+    as ``(cid, cv, cn)`` — oracle-checkable, unlike trained k-means."""
+    return base.where(F.col("vec_id") % centroid_mod == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cn"),
+    )
+
+
+def _probes(q: DataFrame, cents: DataFrame, nprobe: int, *keep: str) -> DataFrame:
+    """Each query's ``nprobe`` nearest centroids (``qid``, ``keep``,
+    ``cid``): a broadcast of the |C| centroids ranked by the RAW cosine
+    (bit-identical across Spark/numpy/DuckDB), ties on ``cid``."""
+    raw_q_cos = F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
+    w_probe = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select("qid", *keep, "cid", raw_q_cos.alias("csim"))
+        .withColumn("rn", F.row_number().over(w_probe))
+        .where(F.col("rn") <= nprobe)
     )
 
 
@@ -389,11 +452,7 @@ def topk_ivf(
     """
     base, dim = with_vec(emb)
     if centroids is None:
-        cents = base.where(F.col("vec_id") % centroid_mod == 0).select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
+        cents = _sampled_centroids(base, centroid_mod)
     else:
         cv = as_double(F.col("cv"))
         cents = centroids.select(
@@ -403,19 +462,9 @@ def topk_ivf(
         )
     assigned = assign_lists(base, cents.select("cid", "cv"))
     # query probes: nprobe nearest centroids per query (tiny: |Q|×|C|)
-    q = base.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    raw_q_cos = F.try_divide(dot(F.col("qv"), F.col("cv"), dim), F.col("qn") * F.col("cn"))
-    q_cent = q.crossJoin(F.broadcast(cents)).select(
-        "qid", "qv", "qn", "cid", raw_q_cos.alias("csim")
-    )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
-    probes = (
-        q_cent.withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= nprobe)
-        .select("qid", "qv", "qn", F.col("cid").alias("list_id"))
-    )
+    probes = _probes(
+        _query_vectors(base, query_ids), cents, nprobe, "qv", "qn"
+    ).select("qid", "qv", "qn", F.col("cid").alias("list_id"))
     # search only the probed inverted lists
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
@@ -432,12 +481,7 @@ def topk_ivf(
         # unique; a dropDuplicates here would shuffle every scored
         # candidate once more before the top-k window.
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _top_k(scored, k, F.desc("cos_sim"), F.col("vec_id"))
 
 
 PQ_SLOTS = 4
@@ -502,6 +546,7 @@ def pq_quantize(
     sub = dim // m
     if book_mats is None:
         book_mats = _pq_codebooks(base, sub, m, kc)
+    _, _, pq_codes = _numpy_folds()
 
     def assign(batches):
         import numpy as np
@@ -511,25 +556,12 @@ def pq_quantize(
             if pdf.empty:
                 continue
             X = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            codes = []
+            out = pdf[["vec_id"]].copy()
             err = None
-            for s, C in enumerate(Cs):
-                Xs = X[:, s * sub : (s + 1) * sub]
-                S = np.zeros((Xs.shape[0], C.shape[0]))
-                nx = np.zeros(Xs.shape[0])
-                nc = np.zeros(C.shape[0])
-                for i in range(sub):  # fold order = list_dot_product
-                    S += np.outer(Xs[:, i], C[:, i])
-                    nx += Xs[:, i] * Xs[:, i]
-                    nc += C[:, i] * C[:, i]
-                dist = (nx[:, None] - 2 * S) + nc[None, :]
-                code = np.argmin(dist, axis=1)  # first min = smallest code
-                codes.append(code)
+            for s, (code, dist) in enumerate(pq_codes(X, Cs, sub)):
+                out[f"c{s}"] = code.astype("int64")
                 d_best = dist[np.arange(len(code)), code]
                 err = d_best if err is None else err + d_best
-            out = pdf[["vec_id"]].copy()
-            for s, code in enumerate(codes):
-                out[f"c{s}"] = code.astype("int64")
             out["err_e6"] = np.floor(err * 1e6).astype("int64")
             yield out
 
@@ -550,11 +582,12 @@ def fused_assign_code_kernel(cent_ids, cent_mat, book_mats, sub: int, m: int):
     two corpus scans whose outputs meet in a corpus-scale shuffle join on
     ``vec_id``; fusing them makes the index build/ingest a single
     map-only pass (guide §2.3/§4 — the join disappears, the scan halves).
-    The numpy ops and per-dimension left-to-right fold order are copied
-    verbatim from both source kernels, so list ids and codes are
-    bit-identical to the unfused pair (pinned against the same DuckDB
-    oracles). The closure is self-contained (numpy only — workers don't
-    share the driver's sys.path)."""
+    Both halves call the numpy helpers shared with those two kernels
+    (:func:`_numpy_folds`), so list ids and codes are bit-identical to
+    the unfused pair (pinned against the same DuckDB oracles). The
+    closure is self-contained (numpy only — workers don't share the
+    driver's sys.path)."""
+    _, nearest, pq_codes = _numpy_folds()
 
     def assign_and_code(batches):
         import numpy as np
@@ -566,38 +599,69 @@ def fused_assign_code_kernel(cent_ids, cent_mat, book_mats, sub: int, m: int):
             if pdf.empty:
                 continue
             X = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            d = X.shape[1]
-            # list assignment — identical ops/fold order to assign_lists
-            S = np.zeros((X.shape[0], C0.shape[0]))
-            nx = np.zeros(X.shape[0])
-            nc = np.zeros(C0.shape[0])
-            for i in range(d):  # left-to-right accumulation = fold order
-                S += np.outer(X[:, i], C0[:, i])
-                nx += X[:, i] * X[:, i]
-                nc += C0[:, i] * C0[:, i]
-            denom = np.outer(np.sqrt(nx), np.sqrt(nc))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0, -np.inf, S / denom)
             out = pdf[["vec_id"]].copy()
-            out["list_id"] = ids0[np.argmax(cos, axis=1)]
-            # PQ codes — identical ops/fold order to pq_quantize
-            for s, C in enumerate(Cs):
-                Xs = X[:, s * sub : (s + 1) * sub]
-                Sq = np.zeros((Xs.shape[0], C.shape[0]))
-                nxs = np.zeros(Xs.shape[0])
-                ncs = np.zeros(C.shape[0])
-                for i in range(sub):  # fold order = list_dot_product
-                    Sq += np.outer(Xs[:, i], C[:, i])
-                    nxs += Xs[:, i] * Xs[:, i]
-                    ncs += C[:, i] * C[:, i]
-                dist = (nxs[:, None] - 2 * Sq) + ncs[None, :]
-                out[f"c{s}"] = np.argmin(dist, axis=1).astype("int64")
+            out["list_id"] = nearest(X, C0, ids0)
+            for s, (code, _) in enumerate(pq_codes(X, Cs, sub)):
+                out[f"c{s}"] = code.astype("int64")
             yield out
 
     code_schema = "vec_id bigint, list_id bigint, " + ", ".join(
         f"c{s} bigint" for s in range(m)
     )
     return assign_and_code, code_schema
+
+
+def _codebook_frame(spark: SparkSession, book_mats: list) -> DataFrame:
+    """The ``(s, code, cv)`` codebook rows as a literal frame."""
+    return spark.createDataFrame(
+        [(s, c, bm[c]) for s, bm in enumerate(book_mats) for c in range(len(bm))],
+        "s int, code int, cv array<double>",
+    )
+
+
+def _centroid_frame(spark: SparkSession, cent_rows: list) -> DataFrame:
+    """Collected ``(cid, cv, cn)`` centroid rows as a literal frame."""
+    return spark.createDataFrame(
+        [(int(r["cid"]), list(r["cv"]), float(r["cn"])) for r in cent_rows],
+        "cid bigint, cv array<double>, cn double",
+    )
+
+
+def _pq_lut(q: DataFrame, codebooks: DataFrame, sub: int, m: int) -> DataFrame:
+    """Per-query ADC lookup table ``(qid, s, code, d_e6)``: the query's
+    slot subvectors against the broadcast codebooks. Same
+    ``(x·x − 2x·c) + c·c`` expression and fold order as the quantizer's
+    numpy kernel / DuckDB's list_dot_product (bit-identical doubles);
+    each cell is floor-scaled to integer micro-units BEFORE any sum, so
+    ADC totals are exact BIGINT sums in any partitioning/engine."""
+    qslots = q.select(
+        "qid",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("s"),
+                        F.slice("qv", s * sub + 1, sub).alias("qsv"),
+                    )
+                    for s in range(m)
+                ]
+            )
+        ).alias("e"),
+    ).select("qid", "e.s", "e.qsv")
+    return qslots.join(F.broadcast(codebooks), "s").select(
+        "qid",
+        "s",
+        "code",
+        F.floor(
+            (
+                (dot(F.col("qsv"), F.col("qsv")) - 2 * dot(F.col("qsv"), F.col("cv")))
+                + dot(F.col("cv"), F.col("cv"))
+            )
+            * 1e6
+        )
+        .cast("long")
+        .alias("d_e6"),
+    )
 
 
 def pq_adc_topk(
@@ -621,51 +685,18 @@ def pq_adc_topk(
     ~64× smaller than brute force.
 
     Determinism: each LUT cell is floor-scaled to integer micro-units
-    BEFORE the per-candidate sum, so the ADC total is an exact BIGINT sum
-    in any partitioning/engine; ranking ties break on vec_id."""
+    BEFORE the per-candidate sum (:func:`_pq_lut`), so the ADC total is
+    an exact BIGINT sum in any partitioning/engine; ranking ties break on
+    vec_id."""
     base, dim = with_vec(emb)
     sub = dim // m
     book_mats = _pq_codebooks(base, sub, m, kc)
     codes = pq_quantize(emb, m, kc, book_mats=book_mats)
-
-    spark = emb.sparkSession
-    cb_df = spark.createDataFrame(
-        [(s, c, book_mats[s][c]) for s in range(m) for c in range(len(book_mats[s]))],
-        "s int, code int, cv array<double>",
-    )
-    qslots = (
-        base.where(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice("v", s * sub + 1, sub).alias("qsv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("e"),
-        )
-        .select("qid", "e.s", "e.qsv")
-    )
-    # same (x·x − 2x·c) + c·c expression and fold order as the quantizer's
-    # numpy kernel / DuckDB's list_dot_product — bit-identical doubles
-    lut = qslots.join(F.broadcast(cb_df), "s").select(
-        "qid",
-        "s",
-        "code",
-        F.floor(
-            (
-                (dot(F.col("qsv"), F.col("qsv")) - 2 * dot(F.col("qsv"), F.col("cv")))
-                + dot(F.col("cv"), F.col("cv"))
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("d_e6"),
+    lut = _pq_lut(
+        _query_vectors(base, query_ids),
+        _codebook_frame(emb.sparkSession, book_mats),
+        sub,
+        m,
     )
     code_long = codes.select(
         "vec_id",
@@ -684,12 +715,135 @@ def pq_adc_topk(
         .groupBy("qid", "vec_id")
         .agg(F.sum("d_e6").alias("adc_e6"))
     )
-    w = Window.partitionBy("qid").orderBy(F.asc("adc_e6"), F.asc("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
-    )
+    return _top_k(adc, k, F.asc("adc_e6"), F.asc("vec_id"))
+
+
+_STRIDE = 1 << 20  # packs a LUT cell's (slot, code) into one long
+
+
+def serve_ivfpq(
+    qbase: DataFrame,
+    query_ids: list[int],
+    cents: DataFrame,
+    codebooks: DataFrame,
+    codes: DataFrame,
+    *,
+    k: int,
+    nprobe: int,
+    sub: int,
+    m: int,
+    tombstones: DataFrame | None = None,
+    pin_codes: bool = False,
+) -> DataFrame:
+    """The one IVF-PQ serving core: :func:`ivfpq_topk` passes its
+    in-memory codes, ``ann_index.ann_index_search`` its persisted tables
+    and tombstones, so their row-for-row parity holds by construction.
+
+    Inputs: ``qbase`` (the ``with_vec`` frame holding the query
+    vectors), centroids ``(cid, cv, cn)``, codebooks ``(s, code, cv)``,
+    codes ``(vec_id, list_id, c0..c{m-1}[, epoch])`` and an optional
+    epoch-aware tombstone frame ``(vec_id, deleted_at_epoch)``.
+
+    The probe pairs (|Q|·nprobe) and the ADC LUT (|Q|·m·kc integer
+    cells) are bounded by the query batch, so both are evaluated in ONE
+    tagged-union job (all float math in JVM expressions) and collected.
+    The serving plan is then literal: an IN-list filter prunes the codes
+    scan to the probed lists, a broadcast join of the literal
+    (list_id, qid) pairs fans each row out to its queries (zero Exchange
+    on either side), and ADC is m literal-map lookups summed map-side;
+    the only Exchange is the per-query top-k window.
+
+    The plan embeds |Q|·(nprobe + m·kc) literals, so batches above
+    ``SERVE_QID_BATCH`` are served in chunks and unioned (row-identical:
+    scoring, ranking and tie-breaks are per-qid); ``pin_codes``
+    materializes a computed ``codes`` frame once for all chunks."""
+    spark = qbase.sparkSession
+
+    def _serve(q_ids, codes):
+        qf = _query_vectors(qbase, q_ids)
+        probes = _probes(qf, cents, nprobe).select(
+            F.lit(0).alias("tag"),
+            "qid",
+            F.col("cid").cast("long").alias("x"),
+            F.lit(None).cast("long").alias("y"),
+        )
+        lut = _pq_lut(qf, codebooks, sub, m).select(
+            F.lit(1).alias("tag"),
+            "qid",
+            (F.col("s").cast("long") * F.lit(_STRIDE) + F.col("code")).alias("x"),
+            F.col("d_e6").alias("y"),
+        )
+        art = probes.unionByName(lut).collect()
+        if not art:
+            # no query vectors matched: same empty shape as the ranked output
+            empty = codes.where(F.lit(False)).select(
+                F.lit(None).cast("long").alias("qid"),
+                "vec_id",
+                F.lit(None).cast("long").alias("adc_e6"),
+            )
+            return _top_k(empty, k, F.asc("adc_e6"), F.asc("vec_id"))
+
+        probe_pairs = sorted((int(r["qid"]), int(r["x"])) for r in art if r["tag"] == 0)
+        lut_cells = [r for r in art if r["tag"] == 1]
+        # kc comes from the codebook rows, so every (qid, code) key is
+        # covered and element_at below can never yield NULL
+        kc = 1 + max(int(r["x"]) % _STRIDE for r in lut_cells)
+        slot_maps: list[dict] = [{} for _ in range(m)]
+        for r in lut_cells:
+            s, code = divmod(int(r["x"]), _STRIDE)
+            slot_maps[s][int(r["qid"]) * kc + code] = int(r["y"])
+
+        probes_lit = spark.createDataFrame(
+            [(lid, qid) for qid, lid in probe_pairs], "list_id bigint, qid bigint"
+        )
+        probe_lists = sorted({lid for _, lid in probe_pairs})
+        # No distinct: `codes` holds exactly ONE list per vec_id (argmax
+        # assignment) and `probes_lit` one row per (qid, list), so the join
+        # cannot produce duplicate (qid, vec_id) pairs.
+        cand = (
+            codes.where(F.col("list_id").isin(probe_lists))
+            .join(F.broadcast(probes_lit), "list_id")
+            .where(F.col("vec_id") != F.col("qid"))
+        )
+        if tombstones is not None:
+            # logical deletes AND superseded versions: the tombstone join
+            # is EPOCH-AWARE — a tombstone stamped e kills only rows
+            # ingested at epoch ≤ e (LSM ordering: later ingest wins),
+            # which is both the delete mask and the re-upsert replace
+            # mask (upsert stamps a supersession tombstone at its
+            # epoch-1), and makes a re-ingest after a delete resurrect
+            # the id. The set is broadcast — bounded by deletes +
+            # re-upserts per compaction cycle by contract.
+            t = tombstones.select(F.col("vec_id").alias("__t_vid"), "deleted_at_epoch")
+            cand = cand.join(
+                F.broadcast(t),
+                (F.col("vec_id") == F.col("__t_vid"))
+                & (F.col("epoch") <= F.col("deleted_at_epoch")),
+                "left_anti",
+            )
+        cand = cand.select("qid", "vec_id", *[f"c{s}" for s in range(m)])
+        # one F.expr per slot: per-entry F.lit Column construction costs
+        # ~2·|Q|·kc py4j round-trips (~1 s at |Q|=8)
+        d_cols = []
+        for s in range(m):
+            entries = ",".join(f"{key}L,{d}L" for key, d in sorted(slot_maps[s].items()))
+            d_cols.append(F.expr(f"element_at(map({entries}), qid * {kc}L + c{s})"))
+        adc = cand.select("qid", "vec_id", sum(d_cols[1:], d_cols[0]).alias("adc_e6"))
+        return _top_k(adc, k, F.asc("adc_e6"), F.asc("vec_id"))
+
+    qids_u = sorted({int(q) for q in query_ids})
+    if len(qids_u) <= SERVE_QID_BATCH:
+        return _serve(query_ids, codes)
+    if pin_codes:
+        codes = codes.localCheckpoint()
+    parts = [
+        _serve(qids_u[i : i + SERVE_QID_BATCH], codes)
+        for i in range(0, len(qids_u), SERVE_QID_BATCH)
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("qid", "rank")
 
 
 def ivfpq_topk(
@@ -713,176 +867,39 @@ def ivfpq_topk(
     — previously :func:`assign_lists` and :func:`pq_quantize` each ran
     their own kernel over the corpus and the two outputs met in a
     corpus-scale shuffle join on ``vec_id`` (plus pq_quantize's global
-    orderBy, wasted under a join). The per-query artifacts (probe pairs,
-    ADC LUT) are bounded by the query batch, so both are evaluated in
-    one tagged-union job (float math in JVM expressions, bit-identical)
-    and collected once, exactly like the persisted
-    ``ann_index_search`` serving path; the candidate cut is then an
-    IN-list filter + a broadcast join of a literal (list_id, qid) frame,
-    and ADC is m literal-map lookups summed map-side — the former
-    code_long explode (m× row multiplication), broadcast LUT join and
-    per-(qid, vec_id) aggregation Exchange are gone.
+    orderBy, wasted under a join). The in-memory code frame is then
+    served by :func:`serve_ivfpq`, the same core as the persisted
+    ``ann_index_search``.
 
     Determinism: list assignment/probing order by the RAW cosine
     (bit-identical across numpy/JVM/DuckDB); every LUT cell is
-    floor-scaled to BIGINT before the candidate sum; kernel numpy ops
-    are copied verbatim from assign_lists/pq_quantize (same
-    left-to-right fold order)."""
+    floor-scaled to BIGINT before the candidate sum; the kernel shares
+    its numpy helpers with assign_lists/pq_quantize (same left-to-right
+    fold order)."""
     spark = emb.sparkSession
     base, dim = with_vec(emb)
     sub = dim // m
-    cents = base.where(F.col("vec_id") % centroid_mod == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    cent_rows = cents.orderBy("cid").collect()
-    cent_ids = [int(r["cid"]) for r in cent_rows]
-    cent_mat = [list(r["cv"]) for r in cent_rows]
+    cent_rows = _sampled_centroids(base, centroid_mod).orderBy("cid").collect()
     book_mats = _pq_codebooks(base, sub, m, kc)
     kern, code_schema = fused_assign_code_kernel(
-        cent_ids, cent_mat, book_mats, sub, m
+        [int(r["cid"]) for r in cent_rows],
+        [list(r["cv"]) for r in cent_rows],
+        book_mats,
+        sub,
+        m,
     )
-    coded = base.select("vec_id", "v").mapInPandas(kern, schema=code_schema)
-
-    def _serve(q_ids, coded):
-        # probe pairs + ADC LUT: bounded per-query artifacts, evaluated in
-        # ONE tagged-union job over the same point lookup and collected once
-        qf = base.where(F.col("vec_id").isin(q_ids)).select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        cents_lit = spark.createDataFrame(
-            [(int(r["cid"]), list(r["cv"]), float(r["cn"])) for r in cent_rows],
-            "cid bigint, cv array<double>, cn double",
-        )
-        raw_q_cos = F.try_divide(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn") * F.col("cn")
-        )
-        w_probe = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
-        probes = (
-            qf.crossJoin(F.broadcast(cents_lit))
-            .select("qid", "cid", raw_q_cos.alias("csim"))
-            .withColumn("rn", F.row_number().over(w_probe))
-            .where(F.col("rn") <= nprobe)
-            .select(
-                F.lit(0).alias("tag"),
-                "qid",
-                F.col("cid").cast("long").alias("x"),
-                F.lit(None).cast("long").alias("y"),
-            )
-        )
-        cb_df = spark.createDataFrame(
-            [(s, c, book_mats[s][c]) for s in range(m) for c in range(len(book_mats[s]))],
-            "s int, code int, cv array<double>",
-        )
-        _STRIDE = 1 << 20
-        qslots = qf.select(
-            "qid",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice("qv", s * sub + 1, sub).alias("qsv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("e"),
-        ).select("qid", "e.s", "e.qsv")
-        lut = qslots.join(F.broadcast(cb_df), "s").select(
-            F.lit(1).alias("tag"),
-            "qid",
-            (F.col("s").cast("long") * F.lit(_STRIDE) + F.col("code")).alias("x"),
-            F.floor(
-                (
-                    (dot(F.col("qsv"), F.col("qsv")) - 2 * dot(F.col("qsv"), F.col("cv")))
-                    + dot(F.col("cv"), F.col("cv"))
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("y"),
-        )
-        art = probes.unionByName(lut).collect()
-
-        if not art:
-            # no query vectors matched: same empty shape as the ranked output
-            empty = coded.where(F.lit(False)).select(
-                F.lit(None).cast("long").alias("qid"),
-                "vec_id",
-                F.lit(None).cast("long").alias("adc_e6"),
-            )
-            w0 = Window.partitionBy("qid").orderBy(F.asc("adc_e6"), F.asc("vec_id"))
-            return (
-                empty.withColumn("rank", F.row_number().over(w0))
-                .where(F.col("rank") <= k)
-                .orderBy("qid", "rank")
-            )
-
-        probe_pairs = sorted(
-            (int(r["qid"]), int(r["x"])) for r in art if r["tag"] == 0
-        )
-        lut_cells = [r for r in art if r["tag"] == 1]
-        kc_eff = 1 + max(int(r["x"]) % _STRIDE for r in lut_cells)
-        slot_maps: list[dict] = [{} for _ in range(m)]
-        for r in lut_cells:
-            s, code = divmod(int(r["x"]), _STRIDE)
-            slot_maps[s][int(r["qid"]) * kc_eff + code] = int(r["y"])
-
-        probes_lit = spark.createDataFrame(
-            [(lid, qid) for qid, lid in probe_pairs], "list_id bigint, qid bigint"
-        )
-        probe_lists = sorted({lid for _, lid in probe_pairs})
-        # No distinct: `coded` holds exactly ONE list per vec_id (argmax
-        # assignment) and `probes_lit` one row per (qid, list), so the join
-        # cannot produce duplicate (qid, vec_id) pairs.
-        cand = (
-            coded.where(F.col("list_id").isin(probe_lists))
-            .join(F.broadcast(probes_lit), "list_id")
-            .where(F.col("vec_id") != F.col("qid"))
-            .select("qid", "vec_id", *[f"c{s}" for s in range(m)])
-        )
-        # one F.expr per slot: per-entry F.lit Column construction costs
-        # ~2·|Q|·kc py4j round-trips (~1 s at |Q|=8)
-        d_cols = []
-        for s in range(m):
-            entries = ",".join(
-                f"{key}L,{d}L" for key, d in sorted(slot_maps[s].items())
-            )
-            d_cols.append(
-                F.expr(f"element_at(map({entries}), qid * {kc_eff}L + c{s})")
-            )
-        adc = cand.select(
-            "qid",
-            "vec_id",
-            sum(d_cols[1:], d_cols[0]).alias("adc_e6"),
-        )
-        w = Window.partitionBy("qid").orderBy(F.asc("adc_e6"), F.asc("vec_id"))
-        return (
-            adc.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .orderBy("qid", "rank")
-        )
-
-    # Chunked serving above the literal-plan cap (see SERVE_QID_BATCH):
-    # the corpus kernel pass is pinned once and each qid chunk is served
-    # against it; per-qid scoring/ranking makes the union row-identical
-    # to one-shot serving.
-    qids_u = sorted({int(q) for q in query_ids})
-    if len(qids_u) <= SERVE_QID_BATCH:
-        return _serve(query_ids, coded)
-    coded = coded.localCheckpoint()
-    parts = [
-        _serve(qids_u[i : i + SERVE_QID_BATCH], coded)
-        for i in range(0, len(qids_u), SERVE_QID_BATCH)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("qid", "rank")
+    return serve_ivfpq(
+        base,
+        query_ids,
+        _centroid_frame(spark, cent_rows),
+        _codebook_frame(spark, book_mats),
+        base.select("vec_id", "v").mapInPandas(kern, schema=code_schema),
+        k=k,
+        nprobe=nprobe,
+        sub=sub,
+        m=m,
+        pin_codes=True,
+    )
 
 
 def quantize_int8(emb: DataFrame) -> DataFrame:

@@ -16,7 +16,6 @@ per-row work.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
@@ -63,8 +62,8 @@ def widen_if_narrow(df: DataFrame, min_partitions: int | None = None) -> DataFra
 # token→df vocabulary is tiny on test corpora but web-scale text can push
 # it past executor/driver broadcast limits; the guard costs one count()
 # job over an (already materialized) aggregate and buys immunity from
-# broadcast OOM. Tunable per deployment.
-BROADCAST_ROW_LIMIT = int(os.environ.get("SPARK_GRAFT_BROADCAST_ROWS", "2000000"))
+# broadcast OOM.
+BROADCAST_ROW_LIMIT = 2_000_000
 
 
 def join_small(

@@ -130,8 +130,8 @@ def filtered_csv_export_job(
     )
     flat = chunks_mod.flatten_chunks(
         source.fetch(spark, "mediation", spec),
-        dims=chunks_mod.NETWORK_DIMS,
-        metrics=chunks_mod.NETWORK_METRICS,
+        dims=chunks_mod.MEDIATION_DIMS,
+        metrics=chunks_mod.MEDIATION_METRICS,
     )
     if cfg.app_filter:
         flat = flat.where(F.col("app_name").isin(list(cfg.app_filter)))
@@ -194,12 +194,8 @@ def ctr_alert_job(
     numbers must be free)."""
     from pyspark.sql import Observation
 
-    flat = filtered_network_frame(spark, cfg, source)
-    table_path = f"{cfg.table_dir}/network_report"
-    if flat is not None:
-        writers.overwrite_date_partitions(flat, table_path)  # S8 idempotent
-
-    table = spark.read.parquet(table_path)
+    network_csv_reload_job(spark, cfg, source)  # S8 idempotent
+    table = spark.read.parquet(f"{cfg.table_dir}/network_report")
     fact = table.select(
         "date",
         "app_name",

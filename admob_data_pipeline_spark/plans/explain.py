@@ -23,13 +23,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def simple_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
-
-
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema lines from every file scan in the plan."""
     return [
@@ -45,7 +38,3 @@ def pushed_filters(df: DataFrame) -> list[str]:
         for line in formatted_plan(df).splitlines()
         if "PushedFilters:" in line
     ]
-
-
-def count_occurrences(df: DataFrame, needle: str) -> int:
-    return formatted_plan(df).count(needle)

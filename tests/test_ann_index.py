@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from admob_data_pipeline_spark.operators import ann_index, similarity
+from admob_data_pipeline_spark.operators.epoch_index import scratch_index
 from admob_data_pipeline_spark.plans import explain
 from admob_data_pipeline_spark.sources.tables import load_table
 
@@ -777,6 +778,40 @@ def test_search_chunked_serving_identical(spark, built_index, monkeypatch):
     emb, prefix = built_index
     qids = similarity.QUERY_IDS  # 8 ids
     one_shot = ann_index.ann_index_search(emb, qids, prefix).collect()
-    monkeypatch.setattr(ann_index, "SERVE_QID_BATCH", 3)
-    chunked = ann_index.ann_index_search(emb, qids, prefix).collect()
-    assert [tuple(r) for r in chunked] == [tuple(r) for r in one_shot]
+    monkeypatch.setattr(similarity, "SERVE_QID_BATCH", 3)
+    chunked = ann_index.ann_index_search(emb, qids, prefix)
+    assert "Union" in explain.formatted_plan(chunked)  # the chunked path ran
+    assert [tuple(r) for r in chunked.collect()] == [tuple(r) for r in one_shot]
+
+
+def test_chunked_serving_applies_tombstones_and_asof(spark, sf_dir, monkeypatch):
+    """Every chunk of a chunked search gets the epoch-aware tombstones
+    and the as-of filters: over an index with one upserted epoch and a
+    few deletes, an as-of read and a current read with the batch cap at
+    3 equal their one-shot rows."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = similarity.QUERY_IDS  # 8 ids
+    with scratch_index(spark, ann_index.ANN_INDEX) as (out, prefix):
+        ann_index.ann_index_build(emb.where(F.col("vec_id") % 4 != 3), prefix, out)
+        ann_index.ann_index_upsert(emb.where(F.col("vec_id") % 4 == 3), prefix, epoch=0)
+        hits = ann_index.ann_index_search(emb, qids, prefix).collect()
+        # base-corpus ids, so the as-of base read still serves them
+        doomed = sorted({r.vec_id for r in hits if r.rank == 1 and r.vec_id % 4 != 3})[:3]
+        ann_index.ann_index_delete(
+            spark,
+            spark.createDataFrame([(v,) for v in doomed], "vec_id bigint"),
+            prefix,
+        )  # stamped at the newest epoch, 0
+        reads = {"asof": {"as_of_epoch": ann_index.BASE_EPOCH}, "current": {}}
+        one_shot = {
+            name: ann_index.ann_index_search(emb, qids, prefix, **kw).collect()
+            for name, kw in reads.items()
+        }
+        # the base-epoch read predates the deletes; the current read masks them
+        assert {r.vec_id for r in one_shot["asof"]} & set(doomed)
+        assert not {r.vec_id for r in one_shot["current"]} & set(doomed)
+        monkeypatch.setattr(similarity, "SERVE_QID_BATCH", 3)
+        for name, kw in reads.items():
+            chunked = ann_index.ann_index_search(emb, qids, prefix, **kw)
+            assert "Union" in explain.formatted_plan(chunked)
+            assert chunked.collect() == one_shot[name], name

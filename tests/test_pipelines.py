@@ -4,6 +4,7 @@ lifecycles — flatten, union, sinks, idempotent reload, alerting)."""
 from __future__ import annotations
 
 import datetime
+import glob
 import os
 
 import pytest
@@ -124,6 +125,21 @@ def test_multi_account_fanout(cfg):
     assert all("pub-" in s.staging_dir for s in seen)
 
 
+def test_csv_export_header_is_the_mediation_schema(spark, sf_dir, cfg):
+    """§3.2: the CSV export carries the mediation report's 7 dimensions
+    and 8 metrics, in spec order."""
+    out = pipelines.filtered_csv_export_job(spark, cfg, SyntheticSource(sf_dir))
+    assert out is not None
+    (csv,) = glob.glob(f"{cfg.staging_dir}/mediation_19980901_csv/*.csv")
+    with open(csv) as f:
+        header = f.readline().rstrip("\n").split(",")
+    assert header == [
+        *(d.out for d in chunks_mod.MEDIATION_DIMS),
+        *(m.out for m in chunks_mod.MEDIATION_METRICS),
+    ]
+    assert len(header) == 15
+
+
 def test_cli_runs_jobs_end_to_end(spark, sf_dir, tmp_path):
     """The __main__ CLI wires config, source, and jobs (X2/X3 surface)."""
     from admob_data_pipeline_spark.__main__ import main
@@ -137,5 +153,8 @@ def test_cli_runs_jobs_end_to_end(spark, sf_dir, tmp_path):
     assert main(["--job", "export", *common], spark=spark) == 0
     assert os.path.isdir(str(tmp_path / "stage" / "admob_19980901.jsonl"))
     assert main(["--job", "network_reload", *common], spark=spark) == 0
-    assert os.path.isdir(str(tmp_path / "tables" / "network_report"))
+    table = tmp_path / "tables" / "network_report"
+    # the offline source honours the spec's one-day range: the reload
+    # writes that day's partition only (1998-09-01 has 2 lineitem rows)
+    assert sorted(p.name for p in table.glob("date=*")) == ["date=1998-09-01"]
     assert main(["--job", "alerts", *common, "--threshold", "0.0"], spark=spark) == 0

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from admob_data_pipeline_spark.operators import similarity
+from admob_data_pipeline_spark.plans.explain import formatted_plan
 from admob_data_pipeline_spark.sources.tables import load_table
 
 
@@ -841,5 +842,6 @@ def test_ivfpq_chunked_serving_identical(spark, sf_dir, monkeypatch):
     qids = similarity.QUERY_IDS  # 8 ids
     one_shot = similarity.ivfpq_topk(emb, qids).collect()
     monkeypatch.setattr(similarity, "SERVE_QID_BATCH", 3)
-    chunked = similarity.ivfpq_topk(emb, qids).collect()
-    assert [tuple(r) for r in chunked] == [tuple(r) for r in one_shot]
+    chunked = similarity.ivfpq_topk(emb, qids)
+    assert "Union" in formatted_plan(chunked)  # the chunked path ran
+    assert [tuple(r) for r in chunked.collect()] == [tuple(r) for r in one_shot]
