@@ -93,6 +93,7 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     drop_index_tables,
     index_compact,
     index_delete,
+    index_view,
     scratch_index,
     write_empty_tombstones,
 )
@@ -393,15 +394,7 @@ def ann_index_search(
     through, fed the index tables and the epoch-aware tombstones.
     """
     spark = emb.sparkSession
-    codes = spark.table(f"{table_prefix}_codes")
-    tomb = spark.table(f"{table_prefix}_tombstones")
-    if as_of_epoch is not None:
-        # TIME TRAVEL for free: the epoch layout makes an as-of read a
-        # partition-PRUNED scan (PartitionFilters: epoch <= e) — later
-        # ingest epochs are never touched, not merely filtered — and
-        # only tombstones stamped at-or-before e mask
-        codes = codes.where(F.col("epoch") <= int(as_of_epoch))
-        tomb = tomb.where(F.col("deleted_at_epoch") <= int(as_of_epoch))
+    codes, tomb = index_view(spark, table_prefix, "codes", as_of_epoch=as_of_epoch)
     qbase, dim = with_vec(emb)
     return serve_ivfpq(
         qbase,

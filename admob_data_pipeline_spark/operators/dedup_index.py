@@ -57,6 +57,9 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     drop_index_tables,
     index_compact,
     index_delete,
+    index_view,
+    keep_latest,
+    latest_versions,
     scratch_index,
     write_empty_tombstones,
 )
@@ -222,29 +225,15 @@ def dedup_index_probe(
     bands_b = lsh_band_keys(minhash_signatures(sh_b), band_in_key=True).select(
         F.col("doc_id").alias("batch_doc"), "band_key"
     )
-    bands_t = spark.table(f"{table_prefix}_bands")
-    shingles_t = spark.table(f"{table_prefix}_shingles")
-    shsizes_t = spark.table(f"{table_prefix}_shsizes")
-    if as_of_epoch is not None:
-        # time travel via the epoch layout: partition-pruned reads of
-        # the index state as of epoch e
-        bands_t = bands_t.where(F.col("epoch") <= int(as_of_epoch))
-        shingles_t = shingles_t.where(F.col("epoch") <= int(as_of_epoch))
-        shsizes_t = shsizes_t.where(F.col("epoch") <= int(as_of_epoch))
-    tomb = spark.table(f"{table_prefix}_tombstones")
-    if as_of_epoch is not None:
-        tomb = tomb.where(F.col("deleted_at_epoch") <= int(as_of_epoch))
+    bands_t, shingles_t, shsizes_t, tomb = index_view(
+        spark, table_prefix, "bands", "shingles", "shsizes", as_of_epoch=as_of_epoch
+    )
     # ONE live-latest manifest serves as both the delete mask and the
     # re-upsert (replace) mask: the shsizes table is the version
-    # manifest (exactly one row per ingested version of a doc), so a
-    # doc serves iff its LATEST ingest epoch is newer than its newest
-    # tombstone stamp (LSM ordering — a doc re-ingested after a delete
-    # resurrects, uniform with the bm25/ann families), and only its
-    # latest version's band/shingle rows participate. Stale versions
-    # purge physically at the next compaction. The manifest rollup
-    # restricted to the (bounded) candidate set keeps every join here
-    # broadcast-shaped; shsizes was already scanned for the sizes
-    # lookup, so the mask costs no new scan class.
+    # manifest, and only a live doc's latest version's band/shingle rows
+    # participate. The rollup restricted to the (bounded) candidate set
+    # keeps every join here broadcast-shaped; shsizes was already
+    # scanned for the sizes lookup, so the mask costs no new scan class.
     idx = bands_t.select(
         "band_key", F.col("doc_id").alias("index_doc"), "epoch"
     )
@@ -255,36 +244,13 @@ def dedup_index_probe(
         .distinct()
         .localCheckpoint()  # bounded by band collisions; read 3x below
     )
-    live_latest = (
-        shsizes_t.join(
-            F.broadcast(
-                candidates.select(
-                    F.col("index_doc").alias("doc_id")
-                ).distinct()
-            ),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.max(F.struct("epoch", "n_sh")).alias("m"))
-        .select(
-            "doc_id",
-            F.col("m.epoch").alias("epoch"),
-            F.col("m.n_sh").alias("n_sh"),
-        )
-        .join(
-            F.broadcast(
-                tomb.groupBy("doc_id").agg(
-                    F.max("deleted_at_epoch").alias("st")
-                )
-            ),
-            "doc_id",
-            "left",
-        )
-        .where(F.col("st").isNull() | (F.col("epoch") > F.col("st")))
-        .select("doc_id", "epoch", "n_sh")
-        .localCheckpoint()  # <= candidate rows; read by mask + sizes
-    )
+    live_latest = latest_versions(
+        shsizes_t,
+        "doc_id",
+        "n_sh",
+        among=candidates.select(F.col("index_doc").alias("doc_id")),
+        tombstones=tomb,
+    ).localCheckpoint()  # <= candidate rows; read by mask + sizes
     candidates = candidates.join(
         F.broadcast(
             live_latest.select(
@@ -295,11 +261,9 @@ def dedup_index_probe(
         "left_semi",
     ).select("batch_doc", "index_doc")
     a_sh = sh_b.select(F.col("doc_id").alias("batch_doc"), "shingle")
-    b_sh = shingles_t.join(
-        F.broadcast(live_latest.select("doc_id", "epoch")),
-        ["doc_id", "epoch"],
-        "left_semi",
-    ).select(F.col("doc_id").alias("index_doc"), "shingle")
+    b_sh = keep_latest(shingles_t, live_latest, "doc_id").select(
+        F.col("doc_id").alias("index_doc"), "shingle"
+    )
     inter = (
         candidates.join(a_sh, "batch_doc")
         .join(b_sh, ["index_doc", "shingle"])

@@ -8,8 +8,13 @@ partition, deletes by appending stamped tombstones and compacts by
 folding the epochs back into the base layer. That mutation semantics is
 one contract (ARCHITECTURE.md, "Replace / delete contract"), so it is
 implemented once here, driven by a frozen :class:`EpochIndex` spec that
-each family declares next to its own code. The families keep only what
-differs: build, encode, serve, drift and their remedies.
+each family declares next to its own code: the write half (delete,
+compaction) and the read half every index read calls — the as-of view
+(:func:`index_view`), the epoch-aware tombstone mask
+(:func:`mask_deleted`) and the latest-version mask
+(:func:`latest_versions`, :func:`keep_latest`). The families keep only
+what differs: build, encode, which table is their version manifest,
+drift and their remedies.
 """
 
 from __future__ import annotations
@@ -97,6 +102,79 @@ def index_delete(
         F.col(spec.key).cast("long"),
         F.lit(int(stamp)).cast("long").alias("deleted_at_epoch"),
     ).write.mode("append").format("parquet").saveAsTable(f"{prefix}_tombstones")
+
+
+def index_view(
+    spark: SparkSession, prefix: str, *tables: str, as_of_epoch: int | None = None
+) -> tuple[DataFrame, ...]:
+    """``(*tables, tombstones)`` of the index at ``prefix``, as of
+    ``as_of_epoch`` when given: each of ``tables`` (epoch-carrying) is a
+    partition-PRUNED scan of ``epoch <= e`` — later ingest epochs are
+    never touched, not merely filtered — and only the tombstones stamped
+    at-or-before e mask."""
+    frames = [spark.table(f"{prefix}_{t}") for t in tables]
+    tomb = spark.table(f"{prefix}_tombstones")
+    if as_of_epoch is not None:
+        e = int(as_of_epoch)
+        frames = [f.where(F.col("epoch") <= e) for f in frames]
+        tomb = tomb.where(F.col("deleted_at_epoch") <= e)
+    return (*frames, tomb)
+
+
+def mask_deleted(rows: DataFrame, tombstones: DataFrame, key: str) -> DataFrame:
+    """Drop the ``rows`` a delete kills. EPOCH-AWARE: a tombstone stamped
+    e kills only rows ingested at epoch ≤ e (LSM ordering: later ingest
+    wins), so a key re-ingested after its delete resurrects. The
+    tombstones broadcast — bounded by deletes (and ANN's supersession
+    stamps) per compaction cycle."""
+    t = tombstones.select(F.col(key).alias("__t_key"), "deleted_at_epoch")
+    return rows.join(
+        F.broadcast(t),
+        (F.col(key) == F.col("__t_key"))
+        & (F.col("epoch") <= F.col("deleted_at_epoch")),
+        "left_anti",
+    )
+
+
+def latest_versions(
+    manifest: DataFrame,
+    key: str,
+    value: str | None = None,
+    among: DataFrame | None = None,
+    tombstones: DataFrame | None = None,
+) -> DataFrame:
+    """``(key, epoch[, value])``: each key's LATEST ingest epoch in the
+    version ``manifest`` (one row per ingested version of a key) and that
+    version's ``value``. ``among`` first restricts the manifest to its
+    ``key`` set (broadcast semi-join), so the rollup reads only those
+    rows; ``tombstones`` keeps only LIVE keys, whose latest epoch is
+    newer than their newest stamp. The rollup groups on the key — the
+    manifests' bucket key, so no exchange."""
+    if among is not None:
+        manifest = manifest.join(
+            F.broadcast(among.select(key).distinct()), key, "left_semi"
+        )
+    if value is None:
+        latest = manifest.groupBy(key).agg(F.max("epoch").alias("epoch"))
+    else:
+        m = manifest.groupBy(key).agg(F.max(F.struct("epoch", value)).alias("m"))
+        latest = m.select(key, "m.epoch", f"m.{value}")
+    if tombstones is None:
+        return latest
+    stamps = tombstones.groupBy(key).agg(F.max("deleted_at_epoch").alias("st"))
+    return (
+        latest.join(F.broadcast(stamps), key, "left")
+        .where(F.col("st").isNull() | (F.col("epoch") > F.col("st")))
+        .drop("st")
+    )
+
+
+def keep_latest(rows: DataFrame, latest: DataFrame, key: str) -> DataFrame:
+    """The ``rows`` of each key's latest version: a broadcast semi-join
+    on ``(key, epoch)`` against :func:`latest_versions`."""
+    return rows.join(
+        F.broadcast(latest.select(key, "epoch")), [key, "epoch"], "left_semi"
+    )
 
 
 def index_compact(

@@ -1206,7 +1206,7 @@ def _kcore_oracle(k: int = KCORE_K, iters: int = KCORE_ITERS) -> str:
     parts = [
         "WITH "
         + _EDGE_CTES.strip().rstrip(",")
-        + ",\nn0 AS (SELECT DISTINCT src AS node FROM adj)"
+        + ",\nn0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM adj)"
     ]
     for i in range(1, iters + 1):
         parts.append(
@@ -1218,7 +1218,7 @@ d{i} AS (
       AND a.dst IN (SELECT node FROM n{i - 1})
     GROUP BY a.src
 ),
-n{i} AS (SELECT src AS node FROM d{i} WHERE deg >= {k})"""
+n{i} AS MATERIALIZED (SELECT src AS node FROM d{i} WHERE deg >= {k})"""
         )
     parts.append(
         f""",

@@ -45,15 +45,19 @@ from admob_data_pipeline_spark.operators.corpus import (
     RRF_K,
     RRF_POOL,
     RRF_SCALE,
-    _bm25_rank_postings,
     _bm25_score,
 )
 from admob_data_pipeline_spark.operators.epoch_index import (
     drain_stream,
+    index_view,
+    keep_latest,
+    latest_versions,
+    mask_deleted,
     scratch_index,
 )
 from admob_data_pipeline_spark.operators.retrieval_index import (
     BM25_INDEX,
+    _bm25_rank_latest,
     bm25_index_build,
     bm25_index_compact,
     bm25_index_delete,
@@ -104,40 +108,21 @@ def hybrid_index_search(
     shortlist of ``VEC_SHORTLIST`` from the bucketed code table, exact
     cosine rerank to the pool. Fusion: integer RRF, full-outer over two
     ≤ pool-row lists."""
-    postings_all = spark.table(f"{bm25_prefix}_postings").join(
-        # epoch-aware delete mask (see bm25_index_search): a tombstone
-        # stamped e kills only rows ingested at epoch ≤ e
-        F.broadcast(
-            spark.table(f"{bm25_prefix}_tombstones").select(
-                F.col("doc_id").alias("__t_did"), "deleted_at_epoch"
-            )
-        ),
-        (F.col("doc_id") == F.col("__t_did"))
-        & (F.col("epoch") <= F.col("deleted_at_epoch")),
-        "left_anti",
-    )
-    doclen = spark.table(f"{bm25_prefix}_doclen")
+    postings_all, doclen, tomb = index_view(spark, bm25_prefix, "postings", "doclen")
+    postings_all = mask_deleted(postings_all, tomb, "doc_id")
     stats = spark.table(f"{bm25_prefix}_stats").select("n_docs", "avgdl")
 
     def _lex() -> DataFrame:
         # probe term profile: its posting rows + per-term df + its
-        # doclen — all at the probe's LATEST version (the doclen
-        # manifest mask, see bm25_index_search: a re-upserted probe must
-        # profile and normalize by its current text, not a blend of
+        # doclen — all at the probe's LATEST version (a re-upserted probe
+        # must profile and normalize by its current text, not a blend of
         # versions)
-        probe_latest = (
-            doclen.where(F.col("doc_id") == probe)
-            .agg(F.max(F.struct("epoch", "dl")).alias("m"))
-            .select(F.col("m.epoch").alias("epoch"), F.col("m.dl").alias("dl"))
-            .localCheckpoint()  # one row; read by the ptf mask + qscored
-        )
-        ptf = (
-            postings_all.where(F.col("doc_id") == probe)
-            .join(
-                F.broadcast(probe_latest.select("epoch")), "epoch", "left_semi"
-            )
-            .localCheckpoint()
-        )
+        probe_latest = latest_versions(
+            doclen.where(F.col("doc_id") == probe), "doc_id", "dl"
+        ).localCheckpoint()  # ≤ one row; read by the ptf mask + qscored
+        ptf = keep_latest(
+            postings_all.where(F.col("doc_id") == probe), probe_latest, "doc_id"
+        ).localCheckpoint()
         # df per probe term: countDistinct so a re-upserted doc holding
         # the term in both its versions counts once. (A doc whose LATEST
         # version dropped the term still counts here until compaction
@@ -167,37 +152,14 @@ def hybrid_index_search(
         postings_sel = postings_all.join(
             F.broadcast(qterms), "token", "left_semi"
         ).localCheckpoint()
-        # candidate latest-version mask (see bm25_index_search): one
-        # bucketed doclen scan yields both the mask and the candidate dls
-        dl_latest = (
-            doclen.join(
-                F.broadcast(postings_sel.select("doc_id").distinct()),
-                "doc_id",
-                "left_semi",
-            )
-            .groupBy("doc_id")
-            .agg(F.max(F.struct("epoch", "dl")).alias("m"))
-            .select(
-                "doc_id",
-                F.col("m.epoch").alias("epoch"),
-                F.col("m.dl").alias("dl"),
-            )
-            .localCheckpoint()
-        )
-        sel = postings_sel.join(
-            F.broadcast(dl_latest.select("doc_id", "epoch")),
-            ["doc_id", "epoch"],
-            "left_semi",
-        )
-        return _bm25_rank_postings(
-            None,
-            sel,
+        return _bm25_rank_latest(
+            postings_sel,
+            doclen,
+            stats,
             RRF_POOL,
             BM25_K1,
             BM25_B,
             exclude_doc=probe,
-            doclen=dl_latest.select("doc_id", "dl"),
-            stats=stats,
         ).select("doc_id", F.col("rnk").alias("lex_rank"))
 
     def _vec() -> DataFrame:
@@ -257,37 +219,19 @@ def q_hybrid_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _live_sets(spark: SparkSession, bm25_prefix: str, ann_prefix: str):
     """The two indexes' live doc-id sets under the families' LSM
-    ordering: a doc is live iff its LATEST ingest epoch is newer than
-    its newest tombstone stamp (no tombstone → live) — so a re-upserted
-    doc counts once and a doc re-ingested after its delete counts as
-    resurrected, exactly matching what serving exposes. The tombstone
-    sides broadcast — bounded by deletes + re-upserts per compaction
-    cycle."""
-
-    def live(manifest, key, tomb):
-        stamps = (
-            tomb.groupBy(key)
-            .agg(F.max("deleted_at_epoch").alias("st"))
-            .select(F.col(key).alias("doc_id"), "st")
-        )
-        return (
-            manifest.groupBy(F.col(key).alias("doc_id"))
-            .agg(F.max("epoch").alias("le"))
-            .join(F.broadcast(stamps), "doc_id", "left")
-            .where(F.col("st").isNull() | (F.col("le") > F.col("st")))
-            .select("doc_id")
-        )
-
-    bm_live = live(
+    ordering (:func:`latest_versions` with the tombstones): a
+    re-upserted doc counts once and a doc re-ingested after its delete
+    counts as resurrected, exactly matching what serving exposes."""
+    bm_live = latest_versions(
         spark.table(f"{bm25_prefix}_doclen"),
         "doc_id",
-        spark.table(f"{bm25_prefix}_tombstones"),
-    )
-    ann_live = live(
+        tombstones=spark.table(f"{bm25_prefix}_tombstones"),
+    ).select("doc_id")
+    ann_live = latest_versions(
         spark.table(f"{ann_prefix}_codes"),
         "vec_id",
-        spark.table(f"{ann_prefix}_tombstones"),
-    )
+        tombstones=spark.table(f"{ann_prefix}_tombstones"),
+    ).select(F.col("vec_id").alias("doc_id"))
     return bm_live, ann_live
 
 

@@ -62,6 +62,10 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     drop_index_tables,
     index_compact,
     index_delete,
+    index_view,
+    keep_latest,
+    latest_versions,
+    mask_deleted,
     scratch_index,
     write_empty_tombstones,
 )
@@ -172,84 +176,64 @@ def bm25_index_search(
     """Serve a term query from the PERSISTED index — no corpus scan, no
     tokenizer, no explode; the ranking core is the inline queries'
     ``_bm25_rank_postings`` fed from the index tables."""
-    postings = spark.table(f"{table_prefix}_postings")
-    doclen = spark.table(f"{table_prefix}_doclen")
-    if as_of_epoch is not None:
-        # time travel via the epoch layout: partition-pruned scans of
-        # the index state as of epoch e — later ingests never read
-        postings = postings.where(F.col("epoch") <= int(as_of_epoch))
-        doclen = doclen.where(F.col("epoch") <= int(as_of_epoch))
-    tomb = spark.table(f"{table_prefix}_tombstones")
-    if as_of_epoch is not None:
-        tomb = tomb.where(F.col("deleted_at_epoch") <= int(as_of_epoch))
-    postings = (
-        postings
-        .where(F.col("token").isin(list(query_terms)))
-        # logical deletes: the tombstone join is EPOCH-AWARE — a
-        # tombstone stamped e kills only rows ingested at epoch ≤ e
-        # (LSM ordering: later ingest wins), so a doc re-upserted AFTER
-        # a delete resurrects, uniformly with the ann family. df counts
-        # only surviving postings; rows purge at the next compaction.
-        # As-of reads mask only deletes stamped at-or-before their epoch.
-        .join(
-            F.broadcast(
-                tomb.select(
-                    F.col("doc_id").alias("__t_did"), "deleted_at_epoch"
-                )
-            ),
-            (F.col("doc_id") == F.col("__t_did"))
-            & (F.col("epoch") <= F.col("deleted_at_epoch")),
-            "left_anti",
-        )
-        .localCheckpoint()  # tiny (Σ df(term) rows), read by df/cand/score
+    postings, doclen, tomb = index_view(
+        spark, table_prefix, "postings", "doclen", as_of_epoch=as_of_epoch
     )
-    # RE-UPSERT (replace) semantics: a doc re-ingested into a later
-    # epoch supersedes every earlier version — serving must score ONLY
-    # its latest version, else tf/df double-count and the candidate set
-    # duplicates. The doclen table is the version manifest (exactly one
-    # row per ingested version of a doc), so latest ingest epoch per
-    # candidate = max(epoch) over its doclen rows — one bucketed doclen
-    # scan (broadcast-semi filtered to the tiny candidate set, rollup
-    # on the bucket key: no exchange) yields BOTH the mask and the
-    # latest dl, replacing the dl lookup _bm25_rank_postings would have
-    # done anyway. A posting row survives iff its (doc_id, epoch) is
-    # the doc's latest — a term dropped by the new version scores zero
-    # even though no new posting row replaced the old one. Stale
-    # versions purge physically at the next compaction (stale-version
-    # anti in bm25_index_compact), which keeps this mask a no-op-cost
-    # broadcast join in steady state. Re-upsert of a TOMBSTONED doc
-    # RESURRECTS it: the epoch-aware tombstone join above only kills
-    # versions at-or-before the delete's stamp (LSM ordering).
-    dl_latest = (
-        doclen.join(
-            F.broadcast(postings.select("doc_id").distinct()),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.max(F.struct("epoch", "dl")).alias("m"))
-        .select(
-            "doc_id",
-            F.col("m.epoch").alias("epoch"),
-            F.col("m.dl").alias("dl"),
-        )
-        .localCheckpoint()  # ≤ candidate rows; read by mask + dl join
+    # df counts only surviving postings; rows purge at the next compaction
+    postings = mask_deleted(
+        postings.where(F.col("token").isin(list(query_terms))), tomb, "doc_id"
+    ).localCheckpoint()  # tiny (Σ df(term) rows), read by df/cand/score
+    return _bm25_rank_latest(
+        postings,
+        doclen,
+        spark.table(f"{table_prefix}_stats"),
+        top,
+        k1,
+        b,
+        require_all_n=len(set(query_terms)) if require_all else None,
     )
-    postings = postings.join(
-        F.broadcast(dl_latest.select("doc_id", "epoch")),
-        ["doc_id", "epoch"],
-        "left_semi",
-    )
-    require_all_n = len(set(query_terms)) if require_all else None
+
+
+def _bm25_rank_latest(
+    postings: DataFrame,
+    doclen: DataFrame,
+    stats: DataFrame,
+    top: int,
+    k1: float,
+    b: float,
+    require_all_n: int | None = None,
+    exclude_doc: int | None = None,
+) -> DataFrame:
+    """Rank tombstone-masked postings at each candidate's LATEST version
+    through ``_bm25_rank_postings`` — the serving tail of
+    :func:`bm25_index_search` and of the hybrid search's lexical leg.
+
+    RE-UPSERT (replace) semantics: a doc re-ingested into a later epoch
+    supersedes every earlier version — serving must score ONLY its
+    latest version, else tf/df double-count and the candidate set
+    duplicates. The doclen table is the version manifest (exactly one
+    row per ingested version of a doc), so one bucketed doclen scan
+    (broadcast-semi filtered to the tiny candidate set, rollup on the
+    bucket key: no exchange) yields BOTH the mask and the latest dl,
+    replacing the dl lookup _bm25_rank_postings would have done anyway.
+    A term dropped by the new version scores zero even though no new
+    posting row replaced the old one. Stale versions purge physically
+    at the next compaction (stale-version anti in bm25_index_compact),
+    which keeps this mask a no-op-cost broadcast join in steady
+    state."""
+    dl_latest = latest_versions(
+        doclen, "doc_id", "dl", among=postings
+    ).localCheckpoint()  # ≤ candidate rows; read by mask + dl join
     return _bm25_rank_postings(
         None,
-        postings,
+        keep_latest(postings, dl_latest, "doc_id"),
         top,
         k1,
         b,
         require_all_n,
+        exclude_doc=exclude_doc,
         doclen=dl_latest.select("doc_id", "dl"),
-        stats=spark.table(f"{table_prefix}_stats"),
+        stats=stats,
     )
 
 
@@ -283,47 +267,17 @@ def bm25_index_phrase(
     row-identical to the inline ``bm25_phrase_search`` (shared oracle
     VERBATIM)."""
     w1, w2 = phrase
-    pos = (
-        spark.table(f"{table_prefix}_positions")
-        .where(F.col("token").isin([w1, w2]))
-        # epoch-aware delete mask (see bm25_index_search): a later
-        # re-upsert of a deleted doc resurrects it
-        .join(
-            F.broadcast(
-                spark.table(f"{table_prefix}_tombstones").select(
-                    F.col("doc_id").alias("__t_did"), "deleted_at_epoch"
-                )
-            ),
-            (F.col("doc_id") == F.col("__t_did"))
-            & (F.col("epoch") <= F.col("deleted_at_epoch")),
-            "left_anti",
-        )
-        .localCheckpoint()  # tiny (Σ df(word) occurrence rows)
-    )
-    # latest-version mask (see bm25_index_search): adjacency must be
-    # computed within ONE version of a doc — occurrences from a stale
-    # epoch would pair with the re-upserted version's positions
-    dl_latest = (
-        spark.table(f"{table_prefix}_doclen")
-        .join(
-            F.broadcast(pos.select("doc_id").distinct()),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.max(F.struct("epoch", "dl")).alias("m"))
-        .select(
-            "doc_id",
-            F.col("m.epoch").alias("epoch"),
-            F.col("m.dl").alias("dl"),
-        )
-        .localCheckpoint()  # ≤ candidate rows; read by mask + dl join
-    )
-    pos = pos.join(
-        F.broadcast(dl_latest.select("doc_id", "epoch")),
-        ["doc_id", "epoch"],
-        "left_semi",
-    )
+    pos, doclen, tomb = index_view(spark, table_prefix, "positions", "doclen")
+    pos = mask_deleted(
+        pos.where(F.col("token").isin([w1, w2])), tomb, "doc_id"
+    ).localCheckpoint()  # tiny (Σ df(word) occurrence rows)
+    # adjacency must be computed within ONE version of a doc —
+    # occurrences from a stale epoch would pair with the re-upserted
+    # version's positions
+    dl_latest = latest_versions(
+        doclen, "doc_id", "dl", among=pos
+    ).localCheckpoint()  # ≤ candidate rows; read by mask + dl join
+    pos = keep_latest(pos, dl_latest, "doc_id")
     first = pos.where(F.col("token") == w1).select("doc_id", "pos")
     second = pos.where(F.col("token") == w2).select(
         "doc_id", (F.col("pos") - 1).alias("pos")
@@ -880,32 +834,16 @@ def bm25_index_refresh_stats(spark: SparkSession, table_prefix: str) -> None:
     n_docs, deletes shrinking it, length mix shifting avgdl) is erased
     by an O(index) aggregate and a one-row write. Run it on the
     bm25_index_drift audit's signal, like the other remedies."""
-    # one row per doc, LATEST epoch wins: a doc re-upserted into a later
-    # epoch has doclen rows in two partitions until the next compaction
-    # (whose stale-version purge then keeps exactly one version per doc,
-    # so a post-compaction tie at BASE_EPOCH cannot occur); a raw
-    # count(*) would double-count n_docs (and its stale dl would skew
-    # avgdl) relative to the build's countDistinct contract. The groupBy
-    # runs on the bucket key, so the bucketed layout spares the exchange.
-    # The tombstone filter is EPOCH-AWARE on the latest version (a doc
-    # re-upserted after its delete is a survivor — the serving mask's
-    # LSM ordering), via the max stamp per deleted doc.
-    latest = (
-        spark.table(f"{table_prefix}_doclen")
-        .groupBy("doc_id")
-        .agg(F.max(F.struct("epoch", "dl")).alias("m"))
-        .select("doc_id", F.col("m.epoch").alias("le"), F.col("m.dl").alias("dl"))
-        .join(
-            F.broadcast(
-                spark.table(f"{table_prefix}_tombstones")
-                .groupBy("doc_id")
-                .agg(F.max("deleted_at_epoch").alias("st"))
-            ),
-            "doc_id",
-            "left",
-        )
-        .where(F.col("st").isNull() | (F.col("le") > F.col("st")))
-        .select("doc_id", "dl")
+    # one row per LIVE doc at its latest version: a doc re-upserted into
+    # a later epoch has doclen rows in two partitions until the next
+    # compaction, and a raw count(*) would double-count n_docs (and its
+    # stale dl would skew avgdl) relative to the build's countDistinct
+    # contract
+    latest = latest_versions(
+        spark.table(f"{table_prefix}_doclen"),
+        "doc_id",
+        "dl",
+        tombstones=spark.table(f"{table_prefix}_tombstones"),
     )
     stats = latest.agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -37,6 +37,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from admob_data_pipeline_spark.operators.epoch_index import mask_deleted
 from admob_data_pipeline_spark.operators.util import widen_if_narrow
 from admob_data_pipeline_spark.sources.tables import load_table
 
@@ -806,21 +807,9 @@ def serve_ivfpq(
             .where(F.col("vec_id") != F.col("qid"))
         )
         if tombstones is not None:
-            # logical deletes AND superseded versions: the tombstone join
-            # is EPOCH-AWARE — a tombstone stamped e kills only rows
-            # ingested at epoch ≤ e (LSM ordering: later ingest wins),
-            # which is both the delete mask and the re-upsert replace
-            # mask (upsert stamps a supersession tombstone at its
-            # epoch-1), and makes a re-ingest after a delete resurrect
-            # the id. The set is broadcast — bounded by deletes +
-            # re-upserts per compaction cycle by contract.
-            t = tombstones.select(F.col("vec_id").alias("__t_vid"), "deleted_at_epoch")
-            cand = cand.join(
-                F.broadcast(t),
-                (F.col("vec_id") == F.col("__t_vid"))
-                & (F.col("epoch") <= F.col("deleted_at_epoch")),
-                "left_anti",
-            )
+            # both the delete mask and the re-upsert replace mask: upsert
+            # stamps a supersession tombstone at its epoch-1
+            cand = mask_deleted(cand, tombstones, "vec_id")
         cand = cand.select("qid", "vec_id", *[f"c{s}" for s in range(m)])
         # one F.expr per slot: per-entry F.lit Column construction costs
         # ~2·|Q|·kc py4j round-trips (~1 s at |Q|=8)

@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def par_ops(*thunks) -> list:
@@ -35,7 +36,16 @@ def par_ops(*thunks) -> list:
     sinks/writers.py is the only sanctioned one — concurrent epoch
     writers to DISTINCT tables are safe under it). Read-only legs
     (verification probes, audits) must stay conf-neutral; anything like
-    EPOCH_ARBITER_CONF belongs OUTSIDE a par_ops block."""
+    EPOCH_ARBITER_CONF belongs OUTSIDE a par_ops block.
+
+    Each leg runs under the caller's Spark local properties (job group,
+    scheduler pool, SparkContext job tags) and the caller's tags on the
+    active session, so cancelling the caller's group or tag — or a
+    streaming query, whose foreachBatch body calls in here — reaches
+    every leg's jobs."""
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(t) for t in thunks]
         errs, results = [], []
