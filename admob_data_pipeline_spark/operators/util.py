@@ -40,11 +40,17 @@ def par_ops(*thunks) -> list:
 
     Each leg runs under the caller's Spark local properties (job group,
     scheduler pool, SparkContext job tags) and the caller's tags on the
-    active session, so cancelling the caller's group or tag — or a
-    streaming query, whose foreachBatch body calls in here — reaches
-    every leg's jobs."""
+    session the caller's JVM thread has active, so cancelling the
+    caller's group or tag — or a streaming query, whose foreachBatch body
+    calls in here — reaches every leg's jobs."""
     session = SparkSession.getActiveSession()
     if session is not None:
+        # getActiveSession() returns the cached outer Python session; inside
+        # a foreachBatch body the JVM thread's active session is the
+        # micro-batch's own (``batch.sparkSession``), whose tags the legs need
+        active = SparkSession._get_j_spark_session_class(session._jvm).getActiveSession()
+        if active.isDefined() and not active.get().equals(session._jsparkSession):
+            session = SparkSession(session.sparkContext, active.get())
         thunks = tuple(inheritable_thread_target(session)(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(t) for t in thunks]

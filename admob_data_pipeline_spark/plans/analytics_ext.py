@@ -3,21 +3,16 @@
 The reference's only analytic query is the CTR-anomaly join
 (native_CTR_alerts.py:215-268); a user replacing BigQuery with this engine
 will run the rest of the warehouse-query spectrum against the same tables.
-This module widens coverage with the classic join/agg shapes that stress a
-distributed planner — multi-nation volume trade (TPC-H Q7 shape),
-conditional-aggregation mixes (Q12 shape), ratio-of-conditional-sums (Q14),
-disjunctive multi-predicate joins (Q19), correlated group-minimum (Q2),
-EXISTS / NOT EXISTS chains (Q21), scalar-subquery + anti-join (Q22),
-GROUPING SETS calendar rollups, and a runtime-bloom-filter join.
+This module holds those queries: calendar GROUPING SETS and rollups, the
+mediation- and network-grain report warehouses with their CTR alert,
+user-journey analytics (cohorts, funnels, transitions, RFM, multi-touch
+attribution), statistical audits (quantiles, drift, KS, chi-square, Gini,
+changepoints), incremental view maintenance, and the report API read and
+written as a Python DataSource.
 
-Scale notes (100 TB):
-- Every fact-side aggregate is an integer sum over per-row ``FLOOR(x*100)``
-  cents — exact, order-independent, partial-aggregatable map-side.
-- Dimension sides (nation, part subsets, one-row agg scalars) are
-  broadcast; the fact table shuffles at most once per query.
-- The Q21 shape is two self-joins on ``l_orderkey``; Spark co-partitions
-  all three legs on the same key so AQE plans them as one shuffle stage
-  pipeline rather than three independent shuffles.
+Scale note (100 TB): every fact-side aggregate is an integer sum over
+per-row ``FLOOR(x*100)`` cents — exact, order-independent,
+partial-aggregatable map-side.
 """
 
 from __future__ import annotations
@@ -25,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from admob_data_pipeline_spark.operators.util import (
-    SESSION_LABEL_SQL,
-    join_small,
-)
+from admob_data_pipeline_spark.operators.util import SESSION_LABEL_SQL
 from admob_data_pipeline_spark.sources.tables import load_table
 
 
@@ -40,363 +32,6 @@ def _rev_cents() -> F.Column:
     return F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
         "long"
     )
-
-
-# --- Q7 shape: volume trade between two nations ---------------------------
-def q_nation_volume_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue shipped between NATION_1 and NATION_2 (either direction),
-    by supplier nation, customer nation, and ship year.
-
-    Join graph: lineitem ⋈ orders ⋈ customer ⋈ nation(cust) and
-    lineitem ⋈ supplier ⋈ nation(supp). Both nation legs and supplier are
-    broadcast; the only shuffle is lineitem ⋈ orders plus the final
-    4-group aggregate (partial map-side first)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("supp_nk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cust_nk"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    return (
-        li.where(
-            F.col("l_shipdate").between(
-                F.lit("1995-01-01"), F.lit("1996-12-31 23:59:59")
-            )
-        )
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), s.s_nationkey == F.col("supp_nk"))
-        .join(F.broadcast(n2), c.c_nationkey == F.col("cust_nk"))
-        .where(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("ship_year"),
-        )
-        .agg(F.sum(_rev_cents()).alias("revenue_cents"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    )
-
-
-_ORACLE_Q7 = """
-SELECT supp_nation, cust_nation, ship_year,
-       CAST(SUM(rev) AS BIGINT) AS revenue_cents,
-       COUNT(*) AS n_items
-FROM (
-    SELECT n1.n_name AS supp_nation,
-           n2.n_name AS cust_nation,
-           CAST(date_part('year', l_shipdate) AS INTEGER) AS ship_year,
-           CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS rev
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-    JOIN nation n2 ON c_nationkey = n2.n_nationkey
-    WHERE l_shipdate BETWEEN TIMESTAMP '1995-01-01 00:00:00'
-                         AND TIMESTAMP '1996-12-31 23:59:59'
-      AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-)
-GROUP BY supp_nation, cust_nation, ship_year
-ORDER BY supp_nation, cust_nation, ship_year
-"""
-
-
-# --- Q12 shape: conditional-aggregation priority mix ----------------------
-def q_priority_shipmix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per return-flag: how many shipped items belong to high- vs
-    low-priority orders (CASE-sum conditional aggregation over one join).
-    The CASE folds into the map-side partial aggregate — one scan, one
-    2-row shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.where(
-            F.col("l_shipdate").between(
-                F.lit("1996-01-01"), F.lit("1996-12-31 23:59:59")
-            )
-        )
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-            F.sum(F.when(high, _rev_cents()).otherwise(0)).alias("high_revenue_cents"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-_ORACLE_Q12 = """
-SELECT l_returnflag,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                     THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-                     ELSE 0 END) AS BIGINT) AS high_revenue_cents
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                     AND TIMESTAMP '1996-12-31 23:59:59'
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
-
-# --- Q14 shape: promo revenue ratio (ratio of conditional sums) -----------
-def q_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Share of one month's revenue from PROMO parts. Both numerator and
-    denominator are exact integer cent-sums; the final division of two
-    exact BIGINTs is a single deterministic IEEE op (ROUND_NOTES rule 1).
-    part joins size-driven (Catalyst broadcasts it from its file-size
-    estimate at any SF where it fits; no forced hint — broadcast policy
-    tier 3, ARCHITECTURE.md) so the fact side never shuffles locally."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    agg = (
-        li.where(
-            F.col("l_shipdate").between(
-                F.lit("1995-09-01"), F.lit("1995-09-30 23:59:59")
-            )
-        )
-        .join(p, li.l_partkey == p.p_partkey)
-        .agg(
-            F.sum(
-                F.when(F.col("p_type") == "PROMO", _rev_cents()).otherwise(0)
-            ).alias("promo_cents"),
-            F.sum(_rev_cents()).alias("total_cents"),
-        )
-    )
-    return agg.select(
-        "promo_cents",
-        "total_cents",
-        (
-            F.lit(100.0)
-            * F.col("promo_cents").cast("double")
-            / F.col("total_cents").cast("double")
-        ).alias("promo_pct"),
-    )
-
-
-_ORACLE_Q14 = """
-SELECT promo_cents, total_cents,
-       100.0 * CAST(promo_cents AS DOUBLE) / CAST(total_cents AS DOUBLE) AS promo_pct
-FROM (
-    SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-                    THEN CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-                    ELSE 0 END) AS BIGINT) AS promo_cents,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-                AS BIGINT) AS total_cents
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate BETWEEN TIMESTAMP '1995-09-01 00:00:00'
-                         AND TIMESTAMP '1995-09-30 23:59:59'
-)
-"""
-
-
-# --- Q19 shape: disjunctive multi-predicate broadcast join ----------------
-def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue matched by an OR-of-ANDs predicate spanning both join sides
-    (brand × size-band × quantity-band). Catalyst extracts the common
-    ``l_partkey = p_partkey`` equi-condition so this stays a hash join
-    (broadcast here) with the disjunction evaluated post-join; the
-    per-side conjuncts (p_size ranges, quantity bounds) are pushed to the
-    respective scans as a derived OR filter."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    q = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 15) & q.between(20, 30))
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .where(cond)
-        .agg(
-            F.sum(_rev_cents()).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-_ORACLE_Q19 = """
-SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-            AS BIGINT) AS revenue_cents,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1  AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-# --- Q2 shape: correlated group-minimum via window ------------------------
-def q_min_cost_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parts priced at the minimum retail price of their brand — the
-    classic correlated-subquery shape (``WHERE price = (SELECT MIN ...
-    WHERE same brand)``) rewritten as a single-pass window minimum: one
-    shuffle on p_brand instead of scan + rescan + join."""
-    from pyspark.sql import Window
-
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_brand", _cents("p_retailprice").alias("price_cents")
-    )
-    w = Window.partitionBy("p_brand")
-    return (
-        p.withColumn("brand_min_cents", F.min("price_cents").over(w))
-        .where(F.col("price_cents") == F.col("brand_min_cents"))
-        .select("p_brand", "p_partkey", "p_name", "price_cents")
-        .orderBy("p_brand", "p_partkey")
-    )
-
-
-_ORACLE_Q2 = """
-SELECT p_brand, p_partkey, p_name,
-       CAST(FLOOR(p_retailprice * 100) AS BIGINT) AS price_cents
-FROM part
-WHERE CAST(FLOOR(p_retailprice * 100) AS BIGINT) = (
-    SELECT MIN(CAST(FLOOR(p2.p_retailprice * 100) AS BIGINT))
-    FROM part p2 WHERE p2.p_brand = part.p_brand
-)
-ORDER BY p_brand, p_partkey
-"""
-
-
-# --- Q21 shape: EXISTS / NOT EXISTS chain (semi + anti self-joins) --------
-def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers in NATION_3 who returned items ('R') on finished
-    multi-supplier orders where NO other supplier also returned — the
-    TPC-H Q21 EXISTS/NOT-EXISTS chain as one semi- plus one anti-join.
-
-    All three lineitem legs hash-partition on ``l_orderkey``, so at scale
-    the semi and anti joins co-partition with the base leg (no extra
-    repartitioning between them); each leg ships only its 3-column
-    projection of the fact, and the l1 leg is pre-filtered to 'R' rows.
-    supplier⋈nation joins size-driven (tier 3 — a derived join's
-    static estimate cannot prove smallness; AQE recovers the broadcast
-    at runtime). Locally all legs broadcast (small
-    data); the per-leg scans column-prune to (orderkey, suppkey,
-    returnflag)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_returnflag"
-    )
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
-    sn = s.join(n, s.s_nationkey == n.n_nationkey).select("s_suppkey", "s_name")
-    l1 = li.where(F.col("l_returnflag") == "R").alias("l1")
-    l2 = li.alias("l2")
-    l3 = li.where(F.col("l_returnflag") == "R").alias("l3")
-    base = (
-        l1.join(o, F.col("l1.l_orderkey") == o.o_orderkey, "left_semi")
-        .join(sn, F.col("l1.l_suppkey") == sn.s_suppkey)
-        .join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_suppkey") != F.col("l2.l_suppkey")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l1.l_orderkey") == F.col("l3.l_orderkey"))
-            & (F.col("l1.l_suppkey") != F.col("l3.l_suppkey")),
-            "left_anti",
-        )
-    )
-    return (
-        base.groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(20)
-    )
-
-
-_ORACLE_Q21 = """
-SELECT s_name, COUNT(*) AS numwait
-FROM lineitem l1
-JOIN supplier ON l1.l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-WHERE n_name = 'NATION_3'
-  AND l1.l_returnflag = 'R'
-  AND EXISTS (SELECT 1 FROM orders
-              WHERE o_orderkey = l1.l_orderkey AND o_orderstatus = 'F')
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 20
-"""
-
-
-# --- Q22 shape: scalar-subquery threshold + anti-join ---------------------
-def q_idle_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with above-average positive balance and no orders,
-    grouped by nation — TPC-H Q22's scalar subquery + NOT EXISTS.
-
-    The average threshold is kept in the integer domain: ``cents * cnt >
-    total_cents`` is exact BIGINT arithmetic on both engines, avoiding the
-    order-dependent double-average entirely. The one-row aggregate is a
-    broadcast nested-loop (fine: 1 row); the anti-join shuffles on
-    c_custkey only."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", _cents("c_acctbal").alias("bal_cents")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_custkey")
-    thresh = c.where(F.col("bal_cents") > 0).agg(
-        F.sum("bal_cents").alias("total_cents"), F.count(F.lit(1)).alias("cnt")
-    )
-    return (
-        c.crossJoin(F.broadcast(thresh))
-        .where(F.col("bal_cents") * F.col("cnt") > F.col("total_cents"))
-        .join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("bal_cents").alias("total_bal_cents"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-_ORACLE_Q22 = """
-WITH bal AS (
-    SELECT c_custkey, c_nationkey,
-           CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS bal_cents
-    FROM customer
-), thresh AS (
-    SELECT CAST(SUM(bal_cents) AS BIGINT) AS total_cents,
-           COUNT(*) AS cnt
-    FROM bal WHERE bal_cents > 0
-)
-SELECT c_nationkey,
-       COUNT(*) AS n_customers,
-       CAST(SUM(bal_cents) AS BIGINT) AS total_bal_cents
-FROM bal, thresh
-WHERE bal_cents * cnt > total_cents
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = bal.c_custkey)
-GROUP BY c_nationkey
-ORDER BY c_nationkey
-"""
 
 
 # --- GROUPING SETS over calendar dims -------------------------------------
@@ -560,125 +195,6 @@ SELECT strftime(CAST(o_orderdate AS DATE), '%Y-%m') AS month,
 FROM orders
 GROUP BY month
 ORDER BY month
-"""
-
-
-# --- Q6 shape: pure filter + global aggregate ------------------------------
-def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue delta from a discount band in one year (TPC-H Q6): the
-    canonical scan-bound query — all three predicates push to the parquet
-    scan, no join, no keyed shuffle, single partial+final aggregate.
-    At 100 TB this is bandwidth-limited; anything else in the plan is
-    overhead."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            F.col("l_shipdate").between(F.lit("1996-01-01"), F.lit("1996-12-31 23:59:59"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * F.col("l_discount") * 100).cast("long")
-            ).alias("revenue_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-_ORACLE_Q6 = """
-SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * l_discount * 100) AS BIGINT)) AS BIGINT)
-           AS revenue_cents,
-       COUNT(*) AS n_items
-FROM lineitem
-WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                     AND TIMESTAMP '1996-12-31 23:59:59'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-"""
-
-
-# --- Q13 shape: distribution of per-key counts (left join + double agg) ----
-def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """How many customers placed exactly N orders, including N=0 — the
-    left-join + two-level aggregation shape (TPC-H Q13). The first
-    aggregate shuffles on c_custkey (the join key, so the left join and
-    count share one partitioning); the second shuffles a tiny
-    |distinct N| frame."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").select("o_custkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_custkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-_ORACLE_Q13 = """
-SELECT c_count, COUNT(*) AS custdist
-FROM (
-    SELECT c_custkey, COUNT(o_custkey) AS c_count
-    FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-    GROUP BY c_custkey
-)
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-"""
-
-
-# --- Q17 shape: aggregate-join-back threshold ------------------------------
-def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue from Brand#12 line items whose quantity is below 20% of
-    that part's average order quantity — the correlated-aggregate shape
-    (TPC-H Q17) as aggregate + join back: per-part sums computed once,
-    broadcast to the filtered fact, threshold held in exact integers
-    (``qty·5·cnt < sum_qty`` avoids the double-average entirely)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#12").select(
-        "p_partkey"
-    )
-    branded = li.join(p, li.l_partkey == p.p_partkey)
-    # per_part is a DERIVED aggregate-over-join build side: tier-3's
-    # static file-size sizing can never prove it small (join estimates
-    # multiply), so a bare join regresses to SortMergeJoin and the
-    # lineitem-scale probe pays a shuffle map stage before AQE can
-    # convert. Materialize the compact per-part rollup and guard it
-    # (tier 2) instead.
-    per_part = branded.groupBy("l_partkey").agg(
-        F.sum(F.floor("l_quantity").cast("long")).alias("sum_qty"),
-        F.count(F.lit(1)).alias("cnt"),
-    ).localCheckpoint()
-    return (
-        join_small(branded, per_part, "l_partkey")
-        .where(F.floor("l_quantity").cast("long") * 5 * F.col("cnt") < F.col("sum_qty"))
-        .agg(
-            F.sum(_cents("l_extendedprice")).alias("price_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-_ORACLE_Q17 = """
-WITH branded AS (
-    SELECT l_partkey, l_quantity, l_extendedprice
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE p_brand = 'Brand#12'
-), per_part AS (
-    SELECT l_partkey,
-           CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-           COUNT(*) AS cnt
-    FROM branded GROUP BY l_partkey
-)
-SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-           AS price_cents,
-       COUNT(*) AS n_items
-FROM branded JOIN per_part USING (l_partkey)
-WHERE CAST(FLOOR(l_quantity) AS BIGINT) * 5 * cnt < sum_qty
 """
 
 
@@ -906,331 +422,6 @@ SELECT o.o_orderpriority,
 FROM routed r JOIN orders o ON r.route_key = o.o_orderkey
 GROUP BY o.o_orderpriority
 ORDER BY o.o_orderpriority
-"""
-
-
-# --- Q4 shape: order-priority checking (EXISTS semi-join) ------------------
-def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders per priority that had at least one late-shipping line item
-    (shipped >60 days after the order date) in 1996 Q1 — TPC-H Q4 with the
-    commit/receipt predicate adapted to this schema's shipdate.
-
-    Scale: LEFT SEMI join on ``l_orderkey`` with the non-equi lateness
-    predicate evaluated inside the join — one shuffle per side, no fan-out
-    (semi join emits each order at most once); the quarter filter is pushed
-    to the orders scan."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    late = (li.l_orderkey == o.o_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAYS")
-    )
-    return (
-        o.join(li, late, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-_ORACLE_Q4 = """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-  AND EXISTS (
-      SELECT 1 FROM lineitem
-      WHERE l_orderkey = o_orderkey
-        AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-  )
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-# --- Q8 shape: national market share ---------------------------------------
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NATION_3's share of AMERICA-region PROMO-part revenue per order year
-    (TPC-H Q8). Numerator and denominator are exact integer cents; the
-    share is their quotient (identical BIGINT→DOUBLE division on both
-    engines, so cross-engine-stable without rounding).
-
-    Scale: part (filtered), customer, supplier, nation×2, region are all
-    broadcast; lineitem ⋈ orders is the single big shuffle, then a 1-key
-    aggregate. A conditional-sum ratio instead of two passes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    s = load_table(spark, sf_dir, "supplier")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    n_c = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cust_nk"), F.col("n_regionkey").alias("cust_rk")
-    )
-    n_s = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("supp_nk"), F.col("n_name").alias("supp_nation")
-    )
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
-    joined = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n_c), c.c_nationkey == F.col("cust_nk"))
-        .join(F.broadcast(r), F.col("cust_rk") == r.r_regionkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n_s), s.s_nationkey == F.col("supp_nk"))
-        .where(F.year("o_orderdate").between(1995, 1996))
-    )
-    return (
-        joined.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_3", _rev_cents()).otherwise(
-                    F.lit(0)
-                )
-            ).alias("nation_cents"),
-            F.sum(_rev_cents()).alias("total_cents"),
-        )
-        .withColumn(
-            "mkt_share", F.col("nation_cents") / F.col("total_cents")
-        )
-        .orderBy("o_year")
-    )
-
-
-_ORACLE_Q8 = """
-WITH j AS (
-    SELECT CAST(date_part('year', o_orderdate) AS INTEGER) AS o_year,
-           n2.n_name AS supp_nation,
-           CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS rev
-    FROM lineitem
-    JOIN part     ON l_partkey = p_partkey AND p_type = 'PROMO'
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation n1 ON c_nationkey = n1.n_nationkey
-    JOIN region   ON n1.n_regionkey = r_regionkey AND r_name = 'AMERICA'
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation n2 ON s_nationkey = n2.n_nationkey
-    WHERE date_part('year', o_orderdate) BETWEEN 1995 AND 1996
-)
-SELECT o_year,
-       CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN rev ELSE 0 END) AS BIGINT)
-           AS nation_cents,
-       CAST(SUM(rev) AS BIGINT) AS total_cents,
-       CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN rev ELSE 0 END) AS BIGINT)
-           / CAST(SUM(rev) AS BIGINT) AS mkt_share
-FROM j
-GROUP BY o_year
-ORDER BY o_year
-"""
-
-
-# --- Q9 shape: product-type profit -----------------------------------------
-def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Profit on 'widget' parts by supplier nation and order year (TPC-H
-    Q9). This schema has no partsupp table, so unit supply cost is the
-    documented stand-in 60% of ``p_retailprice``; both cost and revenue are
-    floored to integer cents PER ROW before summing, keeping the aggregate
-    exact and order-independent.
-
-    Scale: part (name-filtered), supplier, nation broadcast; lineitem ⋈
-    orders is the only big shuffle; profit is map-side arithmetic."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    s = load_table(spark, sf_dir, "supplier")
-    p = load_table(spark, sf_dir, "part").where(F.col("p_name").contains("widget"))
-    n = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("supp_nk"), F.col("n_name").alias("supp_nation")
-    )
-    profit_c = _rev_cents() - F.floor(
-        F.col("p_retailprice") * F.col("l_quantity") * 60
-    ).cast("long")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == F.col("supp_nk"))
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("supp_nation", F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(profit_c).alias("profit_cents"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("supp_nation", F.desc("o_year"))
-    )
-
-
-_ORACLE_Q9 = """
-SELECT n_name AS supp_nation,
-       CAST(date_part('year', o_orderdate) AS INTEGER) AS o_year,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-              - CAST(FLOOR(p_retailprice * l_quantity * 60) AS BIGINT)) AS BIGINT)
-           AS profit_cents,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN part     ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN orders   ON l_orderkey = o_orderkey
-GROUP BY supp_nation, o_year
-ORDER BY supp_nation, o_year DESC
-"""
-
-
-# --- Q10 shape: returned-item reporting ------------------------------------
-def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top 20 customers by revenue lost to returns (``l_returnflag = 'R'``)
-    for orders placed in 1997 Q1, with their nation (TPC-H Q10).
-
-    Scale: the quarter filter prunes orders at the scan; customer and
-    nation broadcast; lineitem ⋈ orders shuffles once; TakeOrderedAndProject
-    caps the result driver-side at 20 rows — no full sort."""
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01"))
-    )
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
-        .agg(F.sum(_rev_cents()).alias("revenue_cents"))
-        .orderBy(F.desc("revenue_cents"), "c_custkey")
-        .limit(20)
-    )
-
-
-_ORACLE_Q10 = """
-SELECT c_custkey, c_name, c_acctbal, n_name AS nation,
-       CAST(SUM(FLOOR(l_extendedprice * (1 - l_discount) * 100)) AS BIGINT)
-           AS revenue_cents
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue_cents DESC, c_custkey
-LIMIT 20
-"""
-
-
-# --- Q11 shape: important supplier stock (HAVING > scalar subquery) --------
-def q_supplier_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers whose shipped-goods value exceeds 0.1% of the network
-    total — TPC-H Q11's HAVING-above-global-fraction shape, computed over
-    lineitem value since this schema has no partsupp.
-
-    Scale: one per-supplier aggregate, then the global total re-aggregated
-    from the (tiny) per-supplier result and broadcast back as a one-row
-    scalar — the fact table is scanned once, never twice."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per_supp = li.groupBy("l_suppkey").agg(
-        F.sum(_cents("l_extendedprice")).alias("value_cents")
-    )
-    total = per_supp.agg(
-        F.sum("value_cents").alias("total_cents")
-    )  # one row — broadcast scalar, no collect
-    return (
-        per_supp.crossJoin(F.broadcast(total))
-        .where(F.col("value_cents") > F.col("total_cents") * 0.001)
-        .select("l_suppkey", "value_cents")
-        .orderBy(F.desc("value_cents"), "l_suppkey")
-    )
-
-
-_ORACLE_Q11 = """
-WITH per_supp AS (
-    SELECT l_suppkey,
-           CAST(SUM(FLOOR(l_extendedprice * 100)) AS BIGINT) AS value_cents
-    FROM lineitem GROUP BY l_suppkey
-)
-SELECT l_suppkey, value_cents
-FROM per_supp
-WHERE value_cents > (SELECT SUM(value_cents) * 0.001 FROM per_supp)
-ORDER BY value_cents DESC, l_suppkey
-"""
-
-
-# --- Q15 shape: top supplier (scalar-subquery max) -------------------------
-def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier(s) with the maximum revenue in 1996 Q1 (TPC-H Q15: view +
-    scalar-subquery max, tolerating ties).
-
-    Scale: one per-supplier aggregate over the quarter-pruned fact, the max
-    re-aggregated from that small result as a broadcast one-row scalar,
-    supplier joined size-driven for the name lookup (broadcast tier 3:
-    supplier scales with the data — no forced hint)."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    )
-    s = load_table(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(F.sum(_rev_cents()).alias("total_rev_cents"))
-    mx = rev.agg(F.max("total_rev_cents").alias("max_rev"))
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .where(F.col("total_rev_cents") == F.col("max_rev"))
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .select("s_suppkey", "s_name", "total_rev_cents")
-        .orderBy("s_suppkey")
-    )
-
-
-_ORACLE_Q15 = """
-WITH rev AS (
-    SELECT l_suppkey,
-           CAST(SUM(FLOOR(l_extendedprice * (1 - l_discount) * 100)) AS BIGINT)
-               AS total_rev_cents
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-    GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_rev_cents
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_rev_cents = (SELECT MAX(total_rev_cents) FROM rev)
-ORDER BY s_suppkey
-"""
-
-
-# --- Q16 shape: supplier variety per part group ----------------------------
-def q_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct suppliers per (brand, type, size) among actually-shipped
-    parts, excluding one brand and restricted to eight sizes — TPC-H Q16
-    computed from lineitem's part-supplier pairs (no partsupp table).
-
-    Scale: part is broadcast with both filters applied first; the
-    distinct-pair reduction and the count-distinct run as two partial
-    aggregates on the same grouping keys (one shuffle each, second input
-    already tiny)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin(1, 5, 11, 20, 28, 37, 42, 49)
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-_ORACLE_Q16 = """
-SELECT p_brand, p_type, p_size,
-       COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1'
-  AND p_size IN (1, 5, 11, 20, 28, 37, 42, 49)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
@@ -5476,96 +4667,6 @@ ORDER BY c.c_custkey, t.price_cents DESC, t.o_orderkey
 """
 
 
-# --- Q20 shape: majority-supplier concentration audit -----------------------
-
-DOM_PART_PREFIX = "b"  # audited part-name slice (Q20 uses 'forest%'; the
-# synthetic part names start with b/c/h/l/n/o/r/s — checked at all three SFs)
-DOM_YEAR = ("1995-01-01", "1996-01-01")
-
-
-def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape without partsupp (TESTDATA has no availqty):
-    suppliers holding a MAJORITY of a part's shipped volume — for parts
-    in the audited name slice and ship year, a supplier is dominant on a
-    part when 2·qty(part, supp) > qty(part): the supply-concentration
-    audit a procurement pipeline runs (Q20's excess-stock semi-join
-    chain re-pointed at shipped volume; /root/reference has no analogue
-    — this is the §2-beyond relational surface). Cross-multiplied
-    integer threshold — no ratio, no float.
-
-    Scale: the (part, supplier) rollup is one partial-aggregated shuffle
-    of the filtered scan (year + name-prefix predicates push down); the
-    per-part total is a second rollup OF THE FIRST (no rescan); both
-    sides join on p_partkey; suppliers/nation attach as dimension joins
-    sized by Catalyst/AQE (three-tier broadcast policy)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    supp = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    slice_parts = part.where(F.col("p_name").startswith(DOM_PART_PREFIX)).select(
-        "p_partkey"
-    )
-    ps = (
-        li.where(
-            (F.col("l_shipdate") >= F.lit(DOM_YEAR[0]))
-            & (F.col("l_shipdate") < F.lit(DOM_YEAR[1]))
-        )
-        .join(slice_parts, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        # floor per ROW, then sum (integer discipline): FLOOR(SUM(double))
-        # is accumulation-order dependent and could flip a 2*qty == total
-        # majority boundary between engines/partitionings
-        .agg(F.sum(F.floor("l_quantity").cast("long")).alias("qty_ps"))
-        .localCheckpoint()  # feeds both the per-part total and the verdict
-    )
-    totals = ps.groupBy("l_partkey").agg(F.sum("qty_ps").alias("qty_part"))
-    dominant = ps.join(totals, "l_partkey").where(
-        F.col("qty_ps") * 2 > F.col("qty_part")
-    )
-    per_supp = dominant.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("n_dominant_parts"),
-        F.sum("qty_ps").alias("qty_sum"),
-    )
-    return (
-        per_supp.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_name", "n_name", "n_dominant_parts", "qty_sum")
-        .orderBy(F.desc("n_dominant_parts"), "s_name")
-    )
-
-
-_ORACLE_DOMINANT_SUPP = f"""
-WITH ps AS (
-    SELECT l_partkey, l_suppkey,
-           CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS qty_ps
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE l_shipdate >= TIMESTAMP '{DOM_YEAR[0]} 00:00:00'
-      AND l_shipdate < TIMESTAMP '{DOM_YEAR[1]} 00:00:00'
-      AND p_name LIKE '{DOM_PART_PREFIX}%'
-    GROUP BY l_partkey, l_suppkey
-),
-totals AS (
-    SELECT l_partkey, CAST(SUM(qty_ps) AS BIGINT) AS qty_part
-    FROM ps GROUP BY l_partkey
-),
-dominant AS (
-    SELECT ps.l_suppkey, ps.qty_ps
-    FROM ps JOIN totals USING (l_partkey)
-    WHERE ps.qty_ps * 2 > totals.qty_part
-),
-per_supp AS (
-    SELECT l_suppkey, COUNT(*) AS n_dominant_parts,
-           CAST(SUM(qty_ps) AS BIGINT) AS qty_sum
-    FROM dominant GROUP BY l_suppkey
-)
-SELECT s.s_name, n.n_name, p.n_dominant_parts, p.qty_sum
-FROM per_supp p
-JOIN supplier s ON s.s_suppkey = p.l_suppkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-ORDER BY p.n_dominant_parts DESC, s.s_name
-"""
-
-
 # --- incremental JOIN maintenance (IVM delta algebra) ----------------------
 
 IVM_MOD_O = 10  # o_orderkey % 10 == 0 → a "late-arriving" orders delta (ΔA)
@@ -5872,7 +4973,6 @@ LIMIT {SKEW_TOP}
 
 QUERIES = {
     "embedding_drift_psi": q_embedding_drift_psi,
-    "dominant_suppliers": q_dominant_suppliers,
     "lateral_top_orders": q_lateral_top_orders,
     "mediation_missing_cells": q_mediation_missing_cells,
     "warehouse_funnel_compare": q_warehouse_funnel_compare,
@@ -5924,7 +5024,6 @@ QUERIES = {
     "sampled_quantiles": q_sampled_quantiles,
     "rolling_zscore": q_rolling_zscore,
     "quantile_binning": q_quantile_binning,
-    "nation_volume_trade": q_nation_volume_trade,
     "event_transitions": q_event_transitions,
     "sliding_window_rates": q_sliding_window_rates,
     "user_rfm": q_user_rfm,
@@ -5936,12 +5035,6 @@ QUERIES = {
     "dow_seasonality": q_dow_seasonality,
     "revenue_pareto": q_revenue_pareto,
     "sliding_distinct_users": q_sliding_distinct_users,
-    "priority_shipmix": q_priority_shipmix,
-    "promo_revenue_ratio": q_promo_revenue_ratio,
-    "disjunctive_revenue": q_disjunctive_revenue,
-    "min_cost_per_brand": q_min_cost_per_brand,
-    "waiting_suppliers": q_waiting_suppliers,
-    "idle_high_balance": q_idle_high_balance,
     "grouping_sets_calendar": q_grouping_sets_calendar,
     "bloom_pruned_join": q_bloom_pruned_join,
     "heavy_hitters": q_heavy_hitters,
@@ -5949,23 +5042,12 @@ QUERIES = {
     "resample_daily": q_resample_daily,
     "cohort_retention": q_cohort_retention,
     "funnel_conversion": q_funnel_conversion,
-    "forecast_revenue_change": q_forecast_revenue_change,
-    "order_count_distribution": q_order_count_distribution,
-    "small_quantity_revenue": q_small_quantity_revenue,
     "report_rollup": q_report_rollup,
     "skew_stress_join": q_skew_stress_join,
-    "order_priority_check": q_order_priority_check,
-    "market_share": q_market_share,
-    "product_profit": q_product_profit,
-    "returned_items": q_returned_items,
-    "supplier_share": q_supplier_share,
-    "top_supplier": q_top_supplier,
-    "supplier_variety": q_supplier_variety,
 }
 
 ORACLES = {
     "embedding_drift_psi": _ORACLE_EMB_DRIFT_PSI,
-    "dominant_suppliers": _ORACLE_DOMINANT_SUPP,
     "lateral_top_orders": _LATERAL_TOP_SQL,
     "mediation_missing_cells": _ORACLE_MEDIATION_MISSING,
     "warehouse_funnel_compare": _ORACLE_WAREHOUSE_COMPARE,
@@ -6014,7 +5096,6 @@ ORACLES = {
     "event_gaps": _ORACLE_EVENT_GAPS,
     "drift_psi": _ORACLE_PSI,
     "winsorized_stats": _ORACLE_WINSORIZED,
-    "nation_volume_trade": _ORACLE_Q7,
     "event_transitions": _ORACLE_TRANSITIONS,
     "sliding_window_rates": _ORACLE_SLIDING,
     "user_rfm": _ORACLE_RFM,
@@ -6026,12 +5107,6 @@ ORACLES = {
     "dow_seasonality": _ORACLE_DOW,
     "revenue_pareto": _ORACLE_PARETO,
     "sliding_distinct_users": _ORACLE_SLIDING_DISTINCT,
-    "priority_shipmix": _ORACLE_Q12,
-    "promo_revenue_ratio": _ORACLE_Q14,
-    "disjunctive_revenue": _ORACLE_Q19,
-    "min_cost_per_brand": _ORACLE_Q2,
-    "waiting_suppliers": _ORACLE_Q21,
-    "idle_high_balance": _ORACLE_Q22,
     "grouping_sets_calendar": _ORACLE_GSETS,
     "bloom_pruned_join": _ORACLE_BLOOM,
     "heavy_hitters": _ORACLE_HEAVY,
@@ -6039,18 +5114,8 @@ ORACLES = {
     "resample_daily": _ORACLE_RESAMPLE,
     "cohort_retention": _ORACLE_COHORT,
     "funnel_conversion": _ORACLE_FUNNEL,
-    "forecast_revenue_change": _ORACLE_Q6,
-    "order_count_distribution": _ORACLE_Q13,
-    "small_quantity_revenue": _ORACLE_Q17,
     "report_rollup": _ORACLE_REPORT_ROLLUP,
     "skew_stress_join": _ORACLE_SKEW_STRESS,
-    "order_priority_check": _ORACLE_Q4,
-    "market_share": _ORACLE_Q8,
-    "product_profit": _ORACLE_Q9,
-    "returned_items": _ORACLE_Q10,
-    "supplier_share": _ORACLE_Q11,
-    "top_supplier": _ORACLE_Q15,
-    "supplier_variety": _ORACLE_Q16,
     "sampled_quantiles": _ORACLE_SAMPLED_QUANTILES,
     "rolling_zscore": _ORACLE_ZSCORE,
     "quantile_binning": _ORACLE_BINNING,

@@ -1187,99 +1187,6 @@ ORDER BY pct_change DESC, t.app_name, t.ad_unit_name
 """
 
 
-# --- multi-way join analytics (TPC-H Q3/Q5 shapes: join ordering,
-# broadcast dims over a fact chain) ---------------------------------------
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q3 shape: customer ⋈ orders ⋈ lineitem with selective filters,
-    revenue per order, top 10."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c.where(F.col("c_mktsegment") == "BUILDING"),
-              o.o_custkey == F.col("c_custkey"))
-        .where(o.o_orderdate < F.lit("1995-03-15"))
-        .where(li.l_shipdate > F.lit("1995-03-15"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).alias("revenue_cents"))
-        .select(
-            "l_orderkey",
-            F.col("o_orderdate").cast("date").alias("order_date"),
-            "o_orderpriority",
-            "revenue_cents",
-        )
-        .orderBy(F.desc("revenue_cents"), "l_orderkey")
-        .limit(10)
-    )
-
-
-_ORACLE_Q3 = """
-SELECT l_orderkey,
-       CAST(o_orderdate AS DATE) AS order_date,
-       o_orderpriority,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-            AS BIGINT) AS revenue_cents
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY l_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
-ORDER BY revenue_cents DESC, l_orderkey
-LIMIT 10
-"""
-
-
-def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q5 shape: 5-way join (region→nation→customer→orders→lineitem),
-    revenue per nation within one region and date range."""
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
-    dims = F.broadcast(
-        n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "n_name")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where(
-            o.o_orderdate.between(F.lit("1996-01-01"), F.lit("1996-12-31 23:59:59"))
-        )
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(dims, c.c_nationkey == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(F.sum(rev).alias("revenue_cents"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy(F.desc("revenue_cents"), "n_name")
-    )
-
-
-_ORACLE_Q5 = """
-SELECT n_name,
-       CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-            AS BIGINT) AS revenue_cents,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                      AND TIMESTAMP '1996-12-31 23:59:59'
-GROUP BY n_name
-ORDER BY revenue_cents DESC, n_name
-"""
-
-
 # --- calendar rollup (generalizes main.py:127-130's precomputed MONTH/WEEK
 # dims to grouping sets) ---------------------------------------------------
 def q_calendar_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1495,59 +1402,6 @@ FROM orders
 WHERE year(o_orderdate) IN (1995, 1996, 1997)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-"""
-
-
-# --- Q18 shape: HAVING-filtered agg joined back to facts ------------------
-Q18_QTY_THRESHOLD = 200
-
-
-def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total lineitem quantity exceeds a
-    threshold, joined back to customer, top-20 by order value.
-
-    The HAVING-filtered aggregate shrinks lineitem to a short orderkey
-    list — broadcast it so neither orders nor customer shuffles for the
-    join; final top-k compiles to TakeOrderedAndProject."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.floor("l_quantity").cast("long")).alias("qty_sum"))
-        .where(F.col("qty_sum") > Q18_QTY_THRESHOLD)
-    )
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").cast("string").alias("order_date"),
-            _cents("o_totalprice").alias("price_cents"),
-            "qty_sum",
-        )
-        .orderBy(F.desc("price_cents"), "o_orderkey")
-        .limit(20)
-    )
-
-
-_ORACLE_Q18 = f"""
-WITH big AS (
-    SELECT l_orderkey, CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS qty_sum
-    FROM lineitem
-    GROUP BY l_orderkey
-    HAVING SUM(CAST(FLOOR(l_quantity) AS BIGINT)) > {Q18_QTY_THRESHOLD}
-)
-SELECT c_name, o_orderkey,
-       CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS order_date,
-       CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS price_cents,
-       qty_sum
-FROM orders
-JOIN big ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY price_cents DESC, o_orderkey
-LIMIT 20
 """
 
 
@@ -2034,8 +1888,6 @@ QUERIES = {
     "cm_sketch_freq": q_cm_sketch_freq,
     "hll_distinct": q_hll_distinct,
     "hll_rollup": q_hll_rollup,
-    "shipping_priority": q_shipping_priority,
-    "regional_revenue": q_regional_revenue,
     "range_join": q_range_join,
     "pivot_revenue": q_pivot_revenue,
     "semi_join": q_semi_join,
@@ -2044,7 +1896,6 @@ QUERIES = {
     "profile_orders": q_profile_orders,
     "window_ranks": q_window_ranks,
     "corr_stats": q_corr_stats,
-    "large_volume_customers": q_large_volume_customers,
 }
 
 ORACLES = {
@@ -2056,9 +1907,6 @@ ORACLES = {
     "profile_orders": _ORACLE_PROFILE,
     "window_ranks": _ORACLE_WINDOW_RANKS,
     "corr_stats": _ORACLE_CORR,
-    "large_volume_customers": _ORACLE_Q18,
-    "shipping_priority": _ORACLE_Q3,
-    "regional_revenue": _ORACLE_Q5,
     "quantile_stats": _ORACLE_QUANTILES,
     "kmv_distinct": _ORACLE_KMV,
     "asof_join": _ORACLE_ASOF,

@@ -55,7 +55,8 @@ def test_legs_inherit_job_group_and_session_tags(spark):
 def test_legs_inside_foreach_batch_inherit_the_stream_group(spark, tmp_path):
     """A foreachBatch body runs under the streaming query's job group;
     the legs of a ``par_ops`` call made from the body, as the streaming
-    index upserts make, run under it too, with the body's job tags."""
+    index upserts make, run under it too, with the body's job tags and
+    the tags of the micro-batch's own session."""
     src = str(tmp_path / "src")
     spark.range(2).write.parquet(src)
     seen = {}
@@ -63,6 +64,7 @@ def test_legs_inside_foreach_batch_inherit_the_stream_group(spark, tmp_path):
     def body(batch, batch_id):
         sc = batch.sparkSession.sparkContext
         sc.addJobTag("par-ops-stream-tag")
+        batch.sparkSession.addTag("par-ops-batch-tag")
         try:
             seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
             seen["jobs"] = _leg_jobs(
@@ -70,6 +72,7 @@ def test_legs_inside_foreach_batch_inherit_the_stream_group(spark, tmp_path):
                 [batch.count, lambda: batch.sparkSession.range(4).collect()],
             )
         finally:
+            batch.sparkSession.removeTag("par-ops-batch-tag")
             sc.removeJobTag("par-ops-stream-tag")
 
     drain_stream(spark, "id long", src, str(tmp_path / "ckpt"), body)
@@ -77,3 +80,4 @@ def test_legs_inside_foreach_batch_inherit_the_stream_group(spark, tmp_path):
     for group, tags in seen["jobs"].values():
         assert group == seen["group"]
         assert "par-ops-stream-tag" in tags
+        assert any(t.endswith("-par-ops-batch-tag") for t in tags), tags

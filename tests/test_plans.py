@@ -129,34 +129,6 @@ def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_volume_trade_broadcasts_all_dims(spark, sf_dir):
-    """Q7 shape: every dimension leg (nation ×2, supplier, customer) must
-    compile to a broadcast join at this SF — nation by forced hint
-    (schema-bounded), supplier/customer by Catalyst's size estimate with
-    NO hint (broadcast policy tier 3: they scale with the data, so the
-    optimizer must make the call). A SortMergeJoin against nation would
-    shuffle 100 TB of fact rows for a 25-row table."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_nation_volume_trade(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert plan.count("BroadcastHashJoin") >= 4, plan
-    assert "CartesianProduct" not in plan
-
-
-def test_waiting_suppliers_semi_anti_no_fanout(spark, sf_dir):
-    """Q21 shape: the EXISTS/NOT-EXISTS chain must compile to semi + anti
-    joins — a fan-out join + distinct recovery would explode on
-    multi-supplier orders at scale."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_waiting_suppliers(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "LeftSemi" in plan
-    assert "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_grouping_sets_single_scan_expand(spark, sf_dir):
     """GROUPING SETS must be one scan + Expand + one partial/final
     aggregate — not three separate scans of the fact table."""
@@ -167,41 +139,6 @@ def test_grouping_sets_single_scan_expand(spark, sf_dir):
     assert "Expand" in plan
     # formatted output names each physical scan twice (tree + details)
     assert plan.count("Scan parquet") == 2, plan
-
-
-def test_promo_ratio_prunes_part_scan(spark, sf_dir):
-    """The part side must compile to a broadcast join (size-driven, no
-    hint) and its scan must read only (p_partkey, p_type) — 2 of 6
-    columns."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_promo_revenue_ratio(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "BroadcastHashJoin" in plan
-    part_schemas = [s for s in explain.scan_read_schemas(df) if "p_partkey" in s]
-    assert part_schemas and all(
-        "p_name" not in s and "p_retailprice" not in s for s in part_schemas
-    ), part_schemas
-
-
-def test_min_cost_per_brand_single_pass_window(spark, sf_dir):
-    """The correlated-minimum rewrite must be one scan + one window — the
-    naive form (scan + agg + self-join) scans the table twice."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_min_cost_per_brand(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "Window" in plan
-    assert plan.count("Scan parquet") == 2, plan  # one scan (named twice)
-
-
-def test_idle_high_balance_anti_join(spark, sf_dir):
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_idle_high_balance(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_bloom_join_filter_reaches_dim_scan(spark, sf_dir):
@@ -231,40 +168,6 @@ def test_ivf_assignment_is_map_only(spark, sf_dir):
     )
     plan = explain.formatted_plan(assigned)
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
-
-
-def test_market_share_broadcasts_all_dims(spark, sf_dir):
-    """Q8 shape: part/customer/supplier/nation x2/region all compile to
-    broadcast joins at this SF — nation/region forced (schema-bounded),
-    part/customer/supplier size-driven with no hint — so lineitem join
-    orders is the only big shuffle."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_market_share(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert plan.count("BroadcastHashJoin") >= 6, plan
-    assert "CartesianProduct" not in plan
-
-
-def test_order_priority_check_is_semi_join(spark, sf_dir):
-    """Q4's EXISTS must compile to LeftSemi (one row per order, no
-    fan-out + dedup recovery)."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_order_priority_check(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_returned_items_topk_no_full_sort(spark, sf_dir):
-    """Q10's LIMIT 20 must be TakeOrderedAndProject, never a global
-    sort of the whole aggregate."""
-    from admob_data_pipeline_spark.plans import analytics_ext
-
-    df = analytics_ext.q_returned_items(spark, sf_dir)
-    plan = explain.formatted_plan(df)
-    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_pii_redact_is_map_only(spark, sf_dir):
@@ -794,41 +697,6 @@ def test_skew_audit_invariants(spark, sf_dir):
     for r in rows:
         assert 0 <= r.share_ppm <= 1_000_000
         assert r.skew_ratio_x1000 > 0
-
-
-def test_dominant_suppliers_majority_is_unique_per_part(spark, sf_dir):
-    """>50% of a part's volume can hold for at most ONE supplier per
-    part, so Σ n_dominant_parts over suppliers must not exceed the
-    number of audited parts — and the result must be non-empty at test
-    SF (the threshold is not vacuously strict)."""
-    from pyspark.sql import functions as F
-
-    from admob_data_pipeline_spark.plans.analytics_ext import (
-        DOM_PART_PREFIX,
-        DOM_YEAR,
-        q_dominant_suppliers,
-    )
-    from admob_data_pipeline_spark.sources.tables import load_table
-
-    rows = q_dominant_suppliers(spark, sf_dir).collect()
-    assert rows, "no majority supplier at test SF: threshold vacuous"
-    n_audited_parts = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit(DOM_YEAR[0]))
-            & (F.col("l_shipdate") < F.lit(DOM_YEAR[1]))
-        )
-        .join(
-            load_table(spark, sf_dir, "part")
-            .where(F.col("p_name").startswith(DOM_PART_PREFIX))
-            .select("p_partkey"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .select("l_partkey")
-        .distinct()
-        .count()
-    )
-    assert sum(r.n_dominant_parts for r in rows) <= n_audited_parts
 
 
 def test_embedding_drift_psi_counts_partition_the_corpus(spark, sf_dir):

@@ -32,6 +32,12 @@ def test_every_query_has_an_oracle():
     assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
 
 
+def test_every_bench_query_is_registered():
+    import bench
+
+    assert set(bench.HEADLINE + bench.EXTENDED) <= set(entry_mod.queries())
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

@@ -1,15 +1,15 @@
 """Per-query profiler (optimization guide §1): times each named query
 through the noop sink (min of N), captures ``explain("formatted")``, and
-counts the Spark jobs/stages the materialization launched.
+counts the Spark jobs the materialization launched.
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--runs N] [--plans OUTDIR] \
         [--shuffle P] query [query ...]
 
-Plans are written to OUTDIR/<query>.txt when --plans is given. Job/stage
-counts come from a SparkListener attached around the timed run — the
-overhead signal that wall-clock alone hides (a 0.6 s query that launches
-9 jobs is overhead-bound, not data-bound).
+Plans are written to OUTDIR/<query>.txt when --plans is given. The job
+count is the number of job ids the status store gained across the timed
+run, in any job group — the overhead signal that wall-clock alone hides
+(a 0.6 s query that launches 9 jobs is overhead-bound, not data-bound).
 """
 
 from __future__ import annotations
@@ -26,6 +26,19 @@ from admob_data_pipeline_spark.plans import registry
 from admob_data_pipeline_spark.session import get_spark
 
 
+def _job_ids(sc) -> set:
+    """Ids of every job the status store holds, whatever its job group
+    (a streaming query's micro-batches run under the stream's group),
+    once the listener bus has delivered every event."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    ids = set()
+    it = jsc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        ids.add(it.next().jobId())
+    return ids
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -35,8 +48,8 @@ def main() -> None:
     ap.add_argument("--shuffle", type=int, default=8)
     args = ap.parse_args()
 
-    # statusTracker only sees retained jobs (default 1000) — a long
-    # sweep overflows the buffer and job-count deltas go negative;
+    # the status store keeps only retained jobs (default 1000) — a long
+    # sweep overflows the buffer and drops the ids the diff needs;
     # retain enough for a full-registry pass
     spark = get_spark(
         "profile",
@@ -56,8 +69,6 @@ def main() -> None:
             "ALL": bench.HEADLINE + bench.EXTENDED,
         }[args.queries[0]]
 
-    status = sc.statusTracker()
-
     out = {}
     for name in names:
         fn = registry.QUERIES[name]
@@ -71,20 +82,17 @@ def main() -> None:
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 ))
         best = float("inf")
-        jobs_before = jobs_after = 0
+        jobs = 0
         for _ in range(max(1, args.runs)):
-            ids0 = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
-            n0 = len(list(ids0))
+            ids0 = _job_ids(sc)
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            ids1 = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
-            n1 = len(list(ids1))
             if dt < best:
                 best = dt
-                jobs_before, jobs_after = n0, n1
-        out[name] = {"sec": round(best, 3), "jobs": jobs_after - jobs_before}
-        print(f"{name}: {best:.3f}s  jobs={jobs_after - jobs_before}", flush=True)
+                jobs = len(_job_ids(sc) - ids0)
+        out[name] = {"sec": round(best, 3), "jobs": jobs}
+        print(f"{name}: {best:.3f}s  jobs={jobs}", flush=True)
     print(json.dumps(out))
 
 
