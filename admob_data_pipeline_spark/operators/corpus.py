@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from admob_data_pipeline_spark.operators.dedup import pair_overlap
 from admob_data_pipeline_spark.operators.text import shingles, tokens
 from admob_data_pipeline_spark.operators.util import join_small, widen_if_narrow
 from admob_data_pipeline_spark.sources.tables import load_table
@@ -1061,14 +1062,7 @@ def q_source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n")
         )
     )
-    a = sg.select(F.col("source").alias("source_a"), "gram")
-    b = sg.select(F.col("source").alias("source_b"), "gram")
-    inter = (
-        a.join(b, "gram")
-        .where(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = pair_overlap(sg, "gram", ("source_a", "source_b"), key="source")
     sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("n_b"))
     grid = sa.join(

@@ -28,7 +28,7 @@ keeps a full value-checked oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from admob_data_pipeline_spark.operators.util import join_small, widen_if_narrow
 from pyspark.sql import functions as F
@@ -87,6 +87,117 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+# ---------------------------------------------------------- set-overlap core
+# Every set-overlap operator below is the same three steps over a
+# (key, element) table: cap the hot elements, aggregate each pair's
+# shared elements, keep the pairs at or above an exact-integer threshold.
+
+
+def cap_hot(rows: DataFrame, elem: str, max_df: int) -> tuple[DataFrame, DataFrame]:
+    """Stop-element cap: ``rows`` (one row per key and ``elem``) minus
+    every element held by more than ``max_df`` keys, and that hot set,
+    pinned with an eager ``localCheckpoint``.
+
+    Anti-join under the join_small guard (broadcast policy tier 2, NOT
+    tier 3): "elements in > max_df docs" is corpus-dependent — small
+    under a Zipf head at test scale, potentially millions of entries at
+    100 TB if max_df is not raised with the corpus — so a forced
+    broadcast can OOM. But a bare AQE-sized join is wrong too: the probe
+    side is the corpus-scale exploded stream, and AQE's fallback
+    materializes its shuffle map side before converting (measured
+    2.0 s → 8.9 s at sf0.1). Materializing the tiny hot list and
+    counting it keeps the no-shuffle broadcast plan whenever the list is
+    provably small."""
+    hot = (
+        rows.groupBy(elem)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") > max_df)
+        .select(elem)
+        .localCheckpoint()
+    )
+    return join_small(rows, hot, elem, "left_anti"), hot
+
+
+def pair_overlap(
+    rows: DataFrame,
+    elem: str,
+    keys: tuple[str, str] = ("a", "b"),
+    agg: Column | None = None,
+    *,
+    key: str = "doc_id",
+    carry: tuple[str, ...] = (),
+    cands: DataFrame | None = None,
+    b_rows: DataFrame | None = None,
+) -> DataFrame:
+    """(ka, kb, agg) per pair of ``key`` values sharing an ``elem``;
+    ``agg`` defaults to the shared-element count ``n_inter``, and the
+    ``carry`` columns ride along suffixed ``a`` / ``b`` for it to read.
+
+    Self-join mode (no ``cands``): every pair ka < kb, generated through
+    an equi-join on the element, never a cross join. Candidate-verify
+    mode: only the ``cands`` (ka, kb) pairs, the ka side read from
+    ``rows`` and the kb side from ``b_rows`` (default ``rows``)."""
+    ka, kb = keys
+
+    def side(df: DataFrame, k: str, suffix: str) -> DataFrame:
+        return df.select(
+            F.col(key).alias(k), elem, *[F.col(c).alias(c + suffix) for c in carry]
+        )
+
+    a = side(rows, ka, "a")
+    b = side(rows if b_rows is None else b_rows, kb, "b")
+    if cands is None:
+        pairs = a.join(b, elem).where(F.col(ka) < F.col(kb))
+    else:
+        pairs = cands.join(a, ka).join(b, [kb, elem])
+    return pairs.groupBy(ka, kb).agg(
+        F.count(F.lit(1)).alias("n_inter") if agg is None else agg
+    )
+
+
+def at_least(num: Column, threshold: float, denom: Column) -> Column:
+    """num / denom ≥ threshold in the exact integer domain
+    (num·1e6 ≥ t·1e6·denom)."""
+    return num * F.lit(1_000_000) >= F.lit(int(round(threshold * 1_000_000))) * denom
+
+
+def threshold_pairs(
+    inter: DataFrame,
+    sa: DataFrame,
+    sb: DataFrame,
+    threshold: float,
+    out: str = "jaccard",
+    show: tuple = (),
+) -> DataFrame:
+    """Pairs whose Jaccard n / (size_a + size_b − n) is at least
+    ``threshold``, ordered by pair. ``inter`` is (ka, kb, n) as
+    :func:`pair_overlap` returns it; ``sa`` / ``sb`` are (ka, size_a)
+    and (kb, size_b). Output: ka, kb, the ``show`` columns, and ``out``.
+
+    The threshold is on integers (:func:`at_least`): thresholding the
+    ROUNDED quotient admits pairs with true Jaccard in [t - 5e-7, t),
+    and a ROUND on a decimal-tie quotient can itself diverge between
+    engines (playbook #2). The 6-place ``out`` value is display-only."""
+    ka, kb, n = inter.columns
+    union = F.col(sa.columns[1]) + F.col(sb.columns[1]) - F.col(n)
+    return (
+        inter.join(sa, ka)
+        .join(sb, kb)
+        .where(at_least(F.col(n), threshold, union))
+        .select(ka, kb, *show, F.round(F.try_divide(F.col(n), union), 6).alias(out))
+        .orderBy(ka, kb)
+    )
+
+
+def candidate_pairs(rows: DataFrame, on: list[str]) -> DataFrame:
+    """Distinct (a, b), a < b, of the doc pairs that agree on every ``on``
+    column (a band bucket, a prefix token): the candidate set the
+    verify mode of :func:`pair_overlap` then checks exactly."""
+    a = rows.select(F.col("doc_id").alias("a"), *on)
+    b = rows.select(F.col("doc_id").alias("b"), *on)
+    return a.join(b, on).where(F.col("a") < F.col("b")).select("a", "b").distinct()
+
+
 def _capped_shingles(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     # materialize the exploded shingles: they feed BOTH the hot-shingle
     # census and the anti-join input. cache() is NOT enough — its plan-
@@ -98,24 +209,7 @@ def _capped_shingles(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     # not lazy: lazily-checkpointed plans report SQL-metric accumulators
     # after their query execution is gone, flooding the driver log with
     # DAGScheduler accumulator errors.
-    sh = doc_shingles(docs, k).localCheckpoint()
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("shingle")
-    )
-    # Hot-shingle anti-join under the join_small guard (broadcast policy
-    # tier 2, NOT tier 3): "shingles in > max_df docs" is corpus-
-    # dependent — small under a Zipf head at test scale, potentially
-    # millions of entries at 100 TB if max_df is not raised with the
-    # corpus — so a forced broadcast can OOM. But a bare AQE-sized join
-    # is wrong too: the probe side is the corpus-scale exploded stream,
-    # and AQE's fallback materializes its shuffle map side before
-    # converting (measured 2.0 s → 8.9 s at sf0.1). Materializing the
-    # tiny hot list and counting it keeps the no-shuffle broadcast plan
-    # whenever the list is provably small.
-    return join_small(sh, hot.localCheckpoint(), "shingle", "left_anti")
+    return cap_hot(doc_shingles(docs, k).localCheckpoint(), "shingle", max_df)[0]
 
 
 def ngram_jaccard_pairs(
@@ -131,34 +225,9 @@ def ngram_jaccard_pairs(
     # a second checkpoint here would only add a materialization pass
     sh = _capped_shingles(docs, k, max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    # Threshold in exact integer domain (n_inter * 1e6 >= t*1e6 * union):
-    # thresholding the ROUNDED quotient admits pairs with true Jaccard in
-    # [t - 5e-7, t), and a ROUND on a decimal-tie quotient can itself
-    # diverge between engines (playbook #2). The rounded value is
-    # display-only.
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "a",
-            "b",
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard"),
-        )
-        .orderBy("a", "b")
-    )
+    return threshold_pairs(pair_overlap(sh, "shingle"), sa, sb, threshold)
 
 
 CONTAINMENT_THRESHOLD = 0.5
@@ -183,17 +252,9 @@ def containment_pairs(
     (n_inter·1e6 ≥ t·1e6·n_src); the quotient is display-only."""
     sh = _capped_shingles(docs, k, max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    both = inter.join(sa, "a").join(sb, "b")
+    both = pair_overlap(sh, "shingle").join(sa, "a").join(sb, "b")
     directed = both.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "n_inter",
         F.col("n_a").alias("n_src"),
@@ -203,11 +264,8 @@ def containment_pairs(
             F.col("n_b").alias("n_src"),
         )
     )
-    t_scaled = int(round(threshold * 1_000_000))
     return (
-        directed.where(
-            F.col("n_inter") * F.lit(1_000_000) >= F.lit(t_scaled) * F.col("n_src")
-        )
+        directed.where(at_least(F.col("n_inter"), threshold, F.col("n_src")))
         .select(
             "src",
             "dst",
@@ -290,44 +348,14 @@ def minhash_lsh_pairs(
     # _capped_shingles already materializes the expensive explode; the
     # anti-join on top is map-side-cheap to recompute per consumer
     sh = _capped_shingles(docs, k, max_df)
-    bands = lsh_band_keys(minhash_signatures(sh))
-    ba = bands.select(F.col("doc_id").alias("a"), "band", "band_key")
-    bb = bands.select(F.col("doc_id").alias("b"), "band", "band_key")
-    candidates = (
-        ba.join(bb, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    candidates = candidate_pairs(
+        lsh_band_keys(minhash_signatures(sh)), ["band", "band_key"]
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a_sh = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b_sh = sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        candidates.join(a_sh, "a")
-        .join(b_sh, ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    # Threshold in exact integer domain (n_inter * 1e6 >= t*1e6 * union):
-    # thresholding the ROUNDED quotient admits pairs with true Jaccard in
-    # [t - 5e-7, t), and a ROUND on a decimal-tie quotient can itself
-    # diverge between engines (playbook #2). The rounded value is
-    # display-only.
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "a",
-            "b",
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard"),
-        )
-        .orderBy("a", "b")
-    )
+    inter = pair_overlap(sh, "shingle", cands=candidates)
+    return threshold_pairs(inter, sa, sb, threshold)
 
 
 def incremental_lsh_pairs(
@@ -364,91 +392,12 @@ def incremental_lsh_pairs(
         ba.join(bi, ["band", "band_key"]).select("batch_doc", "index_doc").distinct()
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a_sh = sh.select(F.col("doc_id").alias("batch_doc"), "shingle")
-    b_sh = sh.select(F.col("doc_id").alias("index_doc"), "shingle")
-    inter = (
-        candidates.join(a_sh, "batch_doc")
-        .join(b_sh, ["index_doc", "shingle"])
-        .groupBy("batch_doc", "index_doc")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("batch_doc"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("index_doc"), F.col("n_sh").alias("n_b"))
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "batch_doc")
-        .join(sb, "index_doc")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "batch_doc",
-            "index_doc",
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard"),
-        )
-        .orderBy("batch_doc", "index_doc")
+    inter = pair_overlap(
+        sh, "shingle", ("batch_doc", "index_doc"), cands=candidates
     )
-
-
-def streaming_dedup_index(
-    doc_stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    k: int = 3,
-):
-    """Streaming ingest dedup: maintain a persistent MinHash band-key
-    index and, for every arriving micro-batch of documents, emit candidate
-    near-dup pairs against everything ingested BEFORE it — then append the
-    batch's own keys to the index. This is ``incremental_lsh_pairs`` as a
-    continuously-running service: the index only ever grows by O(batch ×
-    bands) rows per trigger and history is never rescanned (the probe is
-    an equi-join on (band, band_key)).
-
-    Batch-internal pairs are intentionally not emitted (they belong to the
-    batch's own self-dedup pass); candidates are UNVERIFIED band
-    collisions — the exact-Jaccard verification joins shingle sets, which
-    a deployment keeps in a sibling table keyed by doc_id.
-
-    Returns the started StreamingQuery (caller awaits termination).
-    foreachBatch is at-least-once: the index append is keyed by
-    (doc_id, band), so replays overwrite idempotently at the file level
-    only if the caller points ``index_dir`` at a transactional table; with
-    plain parquet a replayed batch double-appends — acceptable for an
-    index probed with DISTINCT, and documented here."""
-    import os
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        keys = lsh_band_keys(minhash_signatures(doc_shingles(batch_df, k)))
-        keys = keys.localCheckpoint()  # probe + append both consume it
-        has_index = os.path.isdir(index_dir) and any(
-            f.name.endswith(".parquet") or f.name == "_SUCCESS"
-            for f in os.scandir(index_dir)
-        )
-        if has_index:
-            idx = sp.read.parquet(index_dir)
-            cand = (
-                keys.select(F.col("doc_id").alias("batch_doc"), "band", "band_key")
-                .join(
-                    idx.select(
-                        F.col("doc_id").alias("index_doc"), "band", "band_key"
-                    ),
-                    ["band", "band_key"],
-                )
-                .select("batch_doc", "index_doc")
-                .distinct()
-            )
-            cand.write.mode("append").parquet(pairs_dir)
-        keys.write.mode("append").parquet(index_dir)
-
-    return (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return threshold_pairs(inter, sa, sb, threshold)
 
 
 def dedup_recall_audit(
@@ -1265,40 +1214,11 @@ def prefix_filter_pairs(
     prefix = ranked.where(
         F.col("pos") <= F.floor(F.col("n_tok") * (1 - threshold)).cast("int") + 1
     ).select("doc_id", "token")
-    pa = prefix.select(F.col("doc_id").alias("a"), "token")
-    pb = prefix.select(F.col("doc_id").alias("b"), "token")
-    candidates = (
-        pa.join(pb, "token").where(F.col("a") < F.col("b")).select("a", "b").distinct()
-    )
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta = tok.select(F.col("doc_id").alias("a"), "token")
-    tb = tok.select(F.col("doc_id").alias("b"), "token")
-    inter = (
-        candidates.join(ta, "a")
-        .join(tb, ["b", "token"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("n_b"))
-    # Threshold in exact integer domain (n_inter * 1e6 >= t*1e6 * union):
-    # thresholding the ROUNDED quotient admits pairs with true Jaccard in
-    # [t - 5e-7, t), and a ROUND on a decimal-tie quotient can itself
-    # diverge between engines (playbook #2). The rounded value is
-    # display-only.
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "a",
-            "b",
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard"),
-        )
-        .orderBy("a", "b")
-    )
+    inter = pair_overlap(tok, "token", cands=candidate_pairs(prefix, ["token"]))
+    return threshold_pairs(inter, sa, sb, threshold)
 
 
 def q_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1381,38 +1301,13 @@ def weighted_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint()
     )
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("shingle")
-    )
-    capped = join_small(sh, hot.localCheckpoint(), "shingle", "left_anti")  # tier 2
+    capped, _ = cap_hot(sh, "shingle", max_df)
     sizes = capped.groupBy("doc_id").agg(F.sum("c").alias("s"))
-    a = capped.select(F.col("doc_id").alias("a"), "shingle", F.col("c").alias("ca"))
-    b = capped.select(F.col("doc_id").alias("b"), "shingle", F.col("c").alias("cb"))
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum(F.least("ca", "cb")).alias("n_min"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("s").alias("s_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("s").alias("s_b"))
-    _t = int(round(threshold * 1_000_000))
-    _union = F.col("s_a") + F.col("s_b") - F.col("n_min")
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .where(F.col("n_min") * F.lit(1_000_000) >= F.lit(_t) * _union)
-        .select(
-            "a",
-            "b",
-            "n_min",
-            F.round(F.try_divide(F.col("n_min"), _union), 6).alias("w_jaccard"),
-        )
-        .orderBy("a", "b")
-    )
+    n_min = F.sum(F.least("ca", "cb")).alias("n_min")
+    inter = pair_overlap(capped, "shingle", agg=n_min, carry=("c",))
+    return threshold_pairs(inter, sa, sb, threshold, "w_jaccard", ("n_min",))
 
 
 def q_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1523,13 +1418,11 @@ def tfidf_cosine_pairs(
     norms = weighted.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).alias("n2")
     )
-    a = weighted.select(F.col("doc_id").alias("a"), "shingle", F.col("w").alias("wa"))
-    b = weighted.select(F.col("doc_id").alias("b"), "shingle", F.col("w").alias("wb"))
-    dots = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
+    dots = pair_overlap(
+        weighted,
+        "shingle",
+        agg=F.sum(F.col("wa") * F.col("wb")).alias("dot"),
+        carry=("w",),
     )
     cos = (
         dots.join(norms.select(F.col("doc_id").alias("a"), F.col("n2").alias("na2")), "a")
@@ -1895,24 +1788,10 @@ def lsh_recall_sweep(
     """
     sh = _capped_shingles(docs, k, max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), "shingle")
-    allp = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    bands = lsh_band_keys(minhash_signatures(sh))
-    ba = bands.select(F.col("doc_id").alias("a"), "band", "band_key")
-    bb = bands.select(F.col("doc_id").alias("b"), "band", "band_key")
-    cand = (
-        ba.join(bb, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .withColumn("is_cand", F.lit(1))
-    )
+    allp = pair_overlap(sh, "shingle")
+    cand = candidate_pairs(
+        lsh_band_keys(minhash_signatures(sh)), ["band", "band_key"]
+    ).withColumn("is_cand", F.lit(1))
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
     tagged = (
@@ -2048,38 +1927,13 @@ def minimizer_pairs(
     (one viral phrase must not produce a quadratic candidate blow-up).
     The threshold is exact integer cross-multiplication; the rounded
     jaccard column is display-only (playbook #2)."""
-    mz = minimizer_fingerprints(docs, k, w).localCheckpoint()
-    hot = (
-        mz.groupBy("mz")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("mz")
-    )
-    mz = join_small(mz, hot.localCheckpoint(), "mz", "left_anti")  # tier 2
+    mz, _ = cap_hot(minimizer_fingerprints(docs, k, w).localCheckpoint(), "mz", max_df)
     sizes = mz.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_mz"))
-    a = mz.select(F.col("doc_id").alias("a"), "mz")
-    b = mz.select(F.col("doc_id").alias("b"), "mz")
-    inter = (
-        a.join(b, "mz")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_mz").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_mz").alias("n_b"))
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "a",
-            "b",
-            F.col("n_inter").cast("long").alias("n_inter"),
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard_mz"),
-        )
-        .orderBy("a", "b")
+    n_inter = F.col("n_inter").cast("long").alias("n_inter")
+    return threshold_pairs(
+        pair_overlap(mz, "mz"), sa, sb, threshold, "jaccard_mz", (n_inter,)
     )
 
 

@@ -47,9 +47,12 @@ from admob_data_pipeline_spark.operators.dedup import (
     MERSENNE_61,
     N_BANDS,
     N_HASHES,
+    cap_hot,
     doc_shingles,
     lsh_band_keys,
     minhash_signatures,
+    pair_overlap,
+    threshold_pairs,
 )
 from admob_data_pipeline_spark.operators.epoch_index import (
     EpochIndex,
@@ -118,15 +121,8 @@ def dedup_index_build(
     tables. The band table pays its layout shuffle here so every probe
     skips it."""
     spark = docs.sparkSession
-    sh_all = doc_shingles(docs, k).localCheckpoint()
-    banned = (
-        sh_all.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("shingle")
-        .localCheckpoint()
-    )
-    sh = join_small(sh_all, banned, "shingle", "left_anti").localCheckpoint()
+    sh, banned = cap_hot(doc_shingles(docs, k).localCheckpoint(), "shingle", max_df)
+    sh = sh.localCheckpoint()
     bands = lsh_band_keys(minhash_signatures(sh), band_in_key=True)
     drop_index_tables(spark, DEDUP_INDEX, table_prefix)
 
@@ -260,15 +256,12 @@ def dedup_index_probe(
         ["index_doc", "epoch"],
         "left_semi",
     ).select("batch_doc", "index_doc")
-    a_sh = sh_b.select(F.col("doc_id").alias("batch_doc"), "shingle")
-    b_sh = keep_latest(shingles_t, live_latest, "doc_id").select(
-        F.col("doc_id").alias("index_doc"), "shingle"
-    )
-    inter = (
-        candidates.join(a_sh, "batch_doc")
-        .join(b_sh, ["index_doc", "shingle"])
-        .groupBy("batch_doc", "index_doc")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    inter = pair_overlap(
+        sh_b,
+        "shingle",
+        ("batch_doc", "index_doc"),
+        cands=candidates,
+        b_rows=keep_latest(shingles_t, live_latest, "doc_id"),
     )
     sa = sh_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_a")).select(
         F.col("doc_id").alias("batch_doc"), "n_a"
@@ -276,19 +269,7 @@ def dedup_index_probe(
     sb = live_latest.select(
         F.col("doc_id").alias("index_doc"), F.col("n_sh").alias("n_b")
     )
-    _t_scaled = int(round(threshold * 1_000_000))
-    _union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "batch_doc")
-        .join(sb, "index_doc")
-        .where(F.col("n_inter") * F.lit(1_000_000) >= F.lit(_t_scaled) * _union)
-        .select(
-            "batch_doc",
-            "index_doc",
-            F.round(F.try_divide(F.col("n_inter"), _union), 6).alias("jaccard"),
-        )
-        .orderBy("batch_doc", "index_doc")
-    )
+    return threshold_pairs(inter, sa, sb, threshold)
 
 
 def dedup_index_upsert(

@@ -28,6 +28,7 @@ splits files across tasks.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -111,18 +112,23 @@ def sessionize_stream(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
 
 def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a finite replay of a streaming plan into a memory sink and
-    return the materialized result as a (static) DataFrame."""
+    return the materialized result as a (static) DataFrame. The memory
+    table holds its rows on the driver and never reads the checkpoint
+    again, so the checkpoint directory is removed once the replay ends."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     checkpoint = tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 

@@ -209,48 +209,22 @@ def test_keep_best_prefers_longest_then_min_id(spark):
     assert got[2].keep_doc == 2 and got[2].n_dropped == 0
 
 
-def test_streaming_dedup_index_multibatch(spark, tmp_path):
-    """3 single-file micro-batches: batch N's docs are probed only against
-    batches < N (arrival order), never against their own batch."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    batches = [
-        [(0, base), (1, "q r s t u v w x y z")],          # batch 0
-        [(2, base), (3, base)],                           # batch 1: 2,3 dup of 0 (and each other)
-        [(4, "q r s t u v w x y z")],                     # batch 2: dup of 1
+def test_threshold_pairs_filters_on_integers_not_the_rounded_jaccard(spark):
+    """The threshold core keeps an exact 0.5 and drops 0.49999975, whose
+    6-place display value is also 0.5: the filter is integer cross-
+    multiplication, the rounded column is display-only (playbook #2)."""
+    inter = spark.createDataFrame(
+        [(0, 1, 2), (2, 3, 1_000_000)], "a long, b long, n_inter long"
+    )
+    sizes = spark.createDataFrame(
+        [(0, 3), (1, 3), (2, 1_500_000), (3, 1_500_001)], "doc_id long, n long"
+    )
+    sa = sizes.select(sizes.doc_id.alias("a"), sizes.n.alias("n_a"))
+    sb = sizes.select(sizes.doc_id.alias("b"), sizes.n.alias("n_b"))
+    assert [tuple(r) for r in dedup.threshold_pairs(inter, sa, sb, 0.5).collect()] == [
+        (0, 1, 0.5)
     ]
-    for i, rows in enumerate(batches):
-        pq.write_table(
-            pa.table({"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}),
-            src / f"b{i}.parquet",
-        )
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = dedup.streaming_dedup_index(
-        stream,
-        str(tmp_path / "index"),
-        str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    got = {
-        (r.batch_doc, r.index_doc)
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    # files arrive in lexicographic order b0, b1, b2
-    assert (2, 0) in got and (3, 0) in got   # batch-1 dups of batch-0 doc
-    assert (4, 1) in got                     # batch-2 dup of batch-0 doc 1
-    assert (2, 3) not in got and (3, 2) not in got  # batch-internal: excluded
-    # no pair may point forward in arrival order
-    order = {0: 0, 1: 0, 2: 1, 3: 1, 4: 2}
-    assert all(order[b] > order[i] for b, i in got)
+    assert round(1_000_000 / 2_000_001, 6) == 0.5  # the dropped pair displays as 0.5
 
 
 def test_substring_dup_counts_cross_doc_windows_only(spark):

@@ -25,12 +25,14 @@ Prints one JSON line per family plus a summary line.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -187,7 +189,7 @@ def main() -> None:
     # section to SCALING.md (keyed by sf_dir; re-runs overwrite their key)
     import os
 
-    store_path = "/root/repo/AUTOPILOT_PROBE.json"
+    store_path = os.path.join(REPO, "AUTOPILOT_PROBE.json")
     store = (
         json.load(open(store_path)) if os.path.exists(store_path) else {}
     )

@@ -9,10 +9,11 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from admob_data_pipeline_spark.session import get_spark
 from admob_data_pipeline_spark.testing import diff_vs_oracle, duckdb_connection

@@ -13,10 +13,12 @@ pinned in tests).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 JOIN_KINDS = (
     "BroadcastHashJoin",
@@ -131,7 +133,7 @@ def main() -> None:
                 f"| `{r['query']}` | {r['scans']} | {r['exchanges']} "
                 f"| {r['joins']} | {r['pushed']} |"
             )
-    out = "/root/repo/PLAN_AUDIT.md"
+    out = os.path.join(REPO, "PLAN_AUDIT.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(rows)} queries)")

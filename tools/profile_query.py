@@ -20,7 +20,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from admob_data_pipeline_spark.plans import registry
 from admob_data_pipeline_spark.session import get_spark

@@ -18,10 +18,12 @@ Usage: python tools/scaling_report.py [small_dir] [big_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from admob_data_pipeline_spark.session import get_spark
 
@@ -67,7 +69,7 @@ def _maintenance_section() -> list[str]:
     import json
     import os
 
-    path = "/root/repo/AUTOPILOT_PROBE.json"
+    path = os.path.join(REPO, "AUTOPILOT_PROBE.json")
     if not os.path.exists(path):
         return []
     store = json.load(open(path))
@@ -163,7 +165,7 @@ def main() -> None:
             f"| {ratio if ratio is None else f'{ratio:.1f}'} | {flag} |"
         )
     lines += _maintenance_section()
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote SCALING.md ({len(rows)} queries, {len(flagged)} flagged)")
 
