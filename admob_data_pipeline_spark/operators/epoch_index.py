@@ -20,8 +20,6 @@ drift and their remedies.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -36,6 +34,7 @@ from admob_data_pipeline_spark.sinks.writers import (
     next_epoch,
     purge_applied_tombstones,
 )
+from admob_data_pipeline_spark.sources.scratch import scratch_dir
 
 
 @dataclass(frozen=True)
@@ -247,18 +246,16 @@ def index_compact(
 @contextmanager
 def scratch_index(spark: SparkSession, *specs: EpochIndex):
     """A throwaway index location: yields ``(dir, prefix, ...)`` — one
-    fresh temp dir and one unique table prefix per spec — and on exit,
-    however the body ends, drops every spec table under those prefixes
-    and removes the dir."""
-    out = tempfile.mkdtemp(prefix="epoch_index_")
-    tag = os.path.basename(out)[len("epoch_index_") :]
-    prefixes = [f"{s.name}_{tag}" for s in specs]
-    try:
-        yield (out, *prefixes)
-    finally:
-        for s, p in zip(specs, prefixes):
-            drop_index_tables(spark, s, p)
-        shutil.rmtree(out, ignore_errors=True)
+    :func:`scratch_dir` and one unique table prefix per spec, tagged with
+    the dir's name — and on exit, however the body ends, drops every
+    spec table under those prefixes before the dir goes."""
+    with scratch_dir() as out:
+        prefixes = [f"{s.name}_{os.path.basename(out)}" for s in specs]
+        try:
+            yield (out, *prefixes)
+        finally:
+            for s, p in zip(specs, prefixes):
+                drop_index_tables(spark, s, p)
 
 
 def drain_stream(spark: SparkSession, schema, src: str, ckpt: str, body) -> None:

@@ -28,12 +28,14 @@ per-batch, not per-row.
 from __future__ import annotations
 
 import hashlib
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from admob_data_pipeline_spark.sources.scratch import scratch_dir
 from admob_data_pipeline_spark.sources.tables import load_table
 
 FRAME_BYTES = 256
@@ -575,12 +577,7 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the numpy kernel; the oracle recomputes dims + channel sums from
     the generating closed form. (``sf_dir`` is unused — the fixture is
     the format itself — but kept for the registry signature.)"""
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="bmp_decode_")
-    try:
+    with scratch_dir() as out:
         for img in range(BMP_N_IMAGES):
             with open(os.path.join(out, f"img-{img}.bmp"), "wb") as fh:
                 fh.write(make_bmp(img))
@@ -594,8 +591,6 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = decode_bmp_features(files).orderBy("file").collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "file string, width int, height int,"
@@ -743,12 +738,7 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ``binaryFile`` and are sample-decoded by the numpy kernel;
     the oracle recomputes every per-channel sum from the generating
     closed form."""
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="wav_decode_")
-    try:
+    with scratch_dir() as out:
         for clip in range(WAV_N_CLIPS):
             with open(os.path.join(out, f"clip-{clip}.wav"), "wb") as fh:
                 fh.write(make_wav(clip))
@@ -762,8 +752,6 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = decode_wav_features(files).orderBy("file").collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "file string, sample_rate int, n_channels int, n_samples bigint,"
@@ -879,12 +867,7 @@ def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     through binaryFile, the kernel decodes and frames channel 0, and
     every per-frame energy / zero-crossing count is recomputed by the
     oracle from the closed-form signal."""
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="wav_frames_")
-    try:
+    with scratch_dir() as out:
         for clip in range(WAV_N_CLIPS):
             with open(os.path.join(out, f"clip-{clip}.wav"), "wb") as fh:
                 fh.write(make_wav(clip))
@@ -900,8 +883,6 @@ def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = (
             decode_wav_frame_features(files).orderBy("file", "frame").collect()
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "file string, frame int, energy bigint, zcr bigint"
     )
@@ -960,14 +941,9 @@ def q_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, and energy mass — the silence-trim pass an audio pipeline
     runs before transcription. Composition: binaryFile → numpy decode →
     framing → relational islands, every number exact."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    out = tempfile.mkdtemp(prefix="wav_vad_")
-    try:
+    with scratch_dir() as out:
         for clip in range(WAV_N_CLIPS):
             with open(os.path.join(out, f"clip-{clip}.wav"), "wb") as fh:
                 fh.write(make_wav(clip))
@@ -1000,8 +976,6 @@ def q_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("file", "start_frame")
         )
         rows = segs.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "file string, start_frame int, end_frame int, n_frames bigint,"
@@ -1092,12 +1066,7 @@ def q_multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     through binaryFile, the kernel decodes and tiles the pixel grid,
     and every per-tile channel sum (edge tiles partial) is recomputed
     by the oracle from the closed-form pixels."""
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="bmp_tiles_")
-    try:
+    with scratch_dir() as out:
         for img in range(BMP_N_IMAGES):
             with open(os.path.join(out, f"img-{img}.bmp"), "wb") as fh:
                 fh.write(make_bmp(img))
@@ -1115,8 +1084,6 @@ def q_multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("file", "tile_y", "tile_x")
             .collect()
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "file string, tile_x int, tile_y int,"

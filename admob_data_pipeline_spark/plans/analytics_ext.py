@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from admob_data_pipeline_spark.operators.util import SESSION_LABEL_SQL
+from admob_data_pipeline_spark.sources.scratch import scratch_dir
 from admob_data_pipeline_spark.sources.tables import load_table
 
 
@@ -4362,25 +4363,25 @@ def q_report_sink_python_roundtrip(
     staging file fails the hash)."""
     import json
     import os
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="pyds_sink_")
     df = q_report_source_scan(spark, sf_dir)
-    df.write.format("admob_report").option("path", out).mode("append").save()
-    with open(os.path.join(out, "_SUCCESS")) as fh:
-        manifest = json.load(fh)
-    files = [os.path.join(out, f["file"]) for f in manifest["files"]]
-    back = spark.read.json(files)
-    return back.select(
-        F.col("date").cast("date").alias("date"),
-        "app_name",
-        F.col("ad_requests").cast("long").alias("ad_requests"),
-        F.col("matched_requests").cast("long").alias("matched_requests"),
-        F.col("impressions").cast("long").alias("impressions"),
-        F.col("clicks").cast("long").alias("clicks"),
-        F.col("earn_micros").cast("long").alias("earn_micros"),
-        F.col("match_rate_ppm").cast("long").alias("match_rate_ppm"),
-    ).orderBy("date", "app_name")
+    with scratch_dir() as out:
+        df.write.format("admob_report").option("path", out).mode("append").save()
+        with open(os.path.join(out, "_SUCCESS")) as fh:
+            manifest = json.load(fh)
+        files = [os.path.join(out, f["file"]) for f in manifest["files"]]
+        back = spark.read.json(files).select(
+            F.col("date").cast("date").alias("date"),
+            "app_name",
+            F.col("ad_requests").cast("long").alias("ad_requests"),
+            F.col("matched_requests").cast("long").alias("matched_requests"),
+            F.col("impressions").cast("long").alias("impressions"),
+            F.col("clicks").cast("long").alias("clicks"),
+            F.col("earn_micros").cast("long").alias("earn_micros"),
+            F.col("match_rate_ppm").cast("long").alias("match_rate_ppm"),
+        )
+        rows = back.collect()
+    return spark.createDataFrame(rows, back.schema).orderBy("date", "app_name")
 
 
 def q_streaming_report_sink_roundtrip(
@@ -4397,62 +4398,63 @@ def q_streaming_report_sink_roundtrip(
     import glob
     import json
     import os
-    import tempfile
 
     from admob_data_pipeline_spark.sources.report_datasource import (
         register_report_source,
     )
 
     register_report_source(spark)
-    out = tempfile.mkdtemp(prefix="pyds_stream_sink_")
     stream = (
         spark.readStream.format("admob_report")
         .option("n_days", REPORT_SOURCE_DAYS)
         .load()
     )
-    q = (
-        stream.writeStream.format("admob_report")
-        .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_pyds_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    files = []
-    for manifest in glob.glob(os.path.join(out, "_SUCCESS_epoch_*")):
-        with open(manifest) as fh:
-            files.extend(
-                os.path.join(out, f["file"])
-                for f in json.load(fh)["files"]
+    with scratch_dir() as d:
+        out = os.path.join(d, "out")
+        q = (
+            stream.writeStream.format("admob_report")
+            .option("path", out)
+            .option("checkpointLocation", os.path.join(d, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        files = []
+        for manifest in glob.glob(os.path.join(out, "_SUCCESS_epoch_*")):
+            with open(manifest) as fh:
+                files.extend(
+                    os.path.join(out, f["file"])
+                    for f in json.load(fh)["files"]
+                )
+        back = (
+            spark.read.json(files)
+            .select(
+                F.col("date").cast("date").alias("date"),
+                "app_name",
+                F.col("ad_requests").cast("long").alias("ad_requests"),
+                F.col("matched_requests").cast("long").alias("matched_requests"),
+                F.col("impressions").cast("long").alias("impressions"),
+                F.col("clicks").cast("long").alias("clicks"),
+                F.col("earn_micros").cast("long").alias("earn_micros"),
             )
-    back = spark.read.json(files)
-    return (
-        back.select(
-            F.col("date").cast("date").alias("date"),
-            "app_name",
-            F.col("ad_requests").cast("long").alias("ad_requests"),
-            F.col("matched_requests").cast("long").alias("matched_requests"),
-            F.col("impressions").cast("long").alias("impressions"),
-            F.col("clicks").cast("long").alias("clicks"),
-            F.col("earn_micros").cast("long").alias("earn_micros"),
+            .groupBy("date", "app_name")
+            .agg(
+                F.sum("ad_requests").alias("ad_requests"),
+                F.sum("matched_requests").alias("matched_requests"),
+                F.sum("impressions").alias("impressions"),
+                F.sum("clicks").alias("clicks"),
+                F.sum("earn_micros").alias("earn_micros"),
+            )
+            .withColumn(
+                "match_rate_ppm",
+                F.expr(
+                    "matched_requests * 1000000 DIV NULLIF(ad_requests, 0)"
+                ).cast("long"),
+            )
         )
-        .groupBy("date", "app_name")
-        .agg(
-            F.sum("ad_requests").alias("ad_requests"),
-            F.sum("matched_requests").alias("matched_requests"),
-            F.sum("impressions").alias("impressions"),
-            F.sum("clicks").alias("clicks"),
-            F.sum("earn_micros").alias("earn_micros"),
-        )
-        .withColumn(
-            "match_rate_ppm",
-            F.expr(
-                "matched_requests * 1000000 DIV NULLIF(ad_requests, 0)"
-            ).cast("long"),
-        )
-        .orderBy("date", "app_name")
-    )
+        rows = back.collect()
+    return spark.createDataFrame(rows, back.schema).orderBy("date", "app_name")
 
 
 # The oracle re-derives the deterministic payload from generate_series —

@@ -11,15 +11,16 @@ table — so a hash match proves the sink+source pair is lossless
 that a re-run REPLACES its partitions instead of appending (an append
 bug doubles every count and fails the hash).
 
-Scratch space is a fresh tempdir per invocation; values are longs and
-strings only, so the round-trip is exact by construction (doubles are
-int-scaled BEFORE the write, per the repo-wide float discipline).
+Scratch space is a fresh ``scratch_dir()`` per invocation, removed
+when the query returns, so every query collects its rows inside the
+``with`` block; values are longs and strings only, so the round-trip is
+exact by construction (doubles are int-scaled BEFORE the write, per the
+repo-wide float discipline).
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +36,7 @@ from admob_data_pipeline_spark.sinks.writers import (
     write_sorted_layout,
     write_zorder_layout,
 )
+from admob_data_pipeline_spark.sources.scratch import scratch_dir
 from admob_data_pipeline_spark.sources.tables import load_table
 
 _FACT_SCHEMA = "o_orderpriority string, n_orders bigint, revenue_cents bigint"
@@ -64,8 +66,7 @@ ORDER BY o_orderpriority
 
 
 def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="sink_csv_")
-    try:
+    with scratch_dir() as out:
         write_csv(_order_fact(spark, sf_dir), out)
         back = (
             spark.read.schema(_FACT_SCHEMA)
@@ -75,32 +76,24 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the scratch dir disappears
         rows = back.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _FACT_SCHEMA)
 
 
 def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="sink_jsonl_")
-    try:
+    with scratch_dir() as out:
         write_jsonl(_order_fact(spark, sf_dir), out)
         back = (
             spark.read.schema(_FACT_SCHEMA).json(out).orderBy("o_orderpriority")
         )
         rows = back.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _FACT_SCHEMA)
 
 
 def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="sink_orc_")
-    try:
+    with scratch_dir() as out:
         write_orc(_order_fact(spark, sf_dir), out)
         back = spark.read.schema(_FACT_SCHEMA).orc(out).orderBy("o_orderpriority")
         rows = back.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _FACT_SCHEMA)
 
 
@@ -112,8 +105,7 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-table oracle proves the XML writer/parser pair is lossless
     for the warehouse row shape. Scale: XML files split by row like
     JSONL; the read is schema-driven (no inference pass)."""
-    out = tempfile.mkdtemp(prefix="sink_xml_")
-    try:
+    with scratch_dir() as out:
         _order_fact(spark, sf_dir).write.option("rowTag", "order").mode(
             "overwrite"
         ).xml(out)
@@ -124,8 +116,6 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderpriority")
         )
         rows = back.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _FACT_SCHEMA)
 
 
@@ -151,10 +141,7 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files fan out across executors, and pathGlobFilter prunes at
     listing time. The shard build here is a bounded driver write
     (|langs| files) standing in for the upstream producer."""
-    import os
-
-    out = tempfile.mkdtemp(prefix="binaryfile_")
-    try:
+    with scratch_dir() as out:
         docs = load_table(spark, sf_dir, "documents")
         # order pinned INSIDE the aggregate (collect_list order is not
         # preserved through a shuffle): sort (doc_id, text) structs
@@ -187,8 +174,6 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = back.orderBy("file").collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _BINARY_SCHEMA)
 
 
@@ -232,8 +217,7 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("impressions"),
         )
     )
-    out = tempfile.mkdtemp(prefix="sink_part_")
-    try:
+    with scratch_dir() as out:
         overwrite_date_partitions(daily, out)
         latest = daily.agg(F.max("date").alias("d")).collect()[0]["d"]
         # idempotent re-run of the latest partition (S8 semantics)
@@ -243,8 +227,6 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["app_name"], r["clicks"], r["impressions"], r["date"])
             for r in back.collect()
         ]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(rows, _DAILY_SCHEMA).orderBy("date", "app_name")
 
 
@@ -269,8 +251,7 @@ def q_sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_nationkey",
         F.floor(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
     )
-    out = tempfile.mkdtemp(prefix="sink_sorted_")
-    try:
+    with scratch_dir() as out:
         write_sorted_layout(c, out, ["c_custkey"], files_per_partition=4)
         back = (
             spark.read.parquet(out)
@@ -278,8 +259,6 @@ def q_sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("c_custkey")
         )
         rows = [(r.c_custkey, r.c_nationkey, r.bal_cents) for r in back.collect()]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "c_custkey bigint, c_nationkey bigint, bal_cents bigint"
     ).orderBy("c_custkey")
@@ -311,8 +290,7 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("impressions"),
         F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("clicks"),
     )
-    out = tempfile.mkdtemp(prefix="sink_compact_")
-    try:
+    with scratch_dir() as out:
         daily.repartition(8).write.mode("overwrite").partitionBy("date").parquet(out)
         dates = sorted(
             d.rsplit("=", 1)[1] for d in glob.glob(out + "/date=*")
@@ -325,8 +303,6 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "clicks",
         )
         rows = [(r.date, r.app_name, r.impressions, r.clicks) for r in back.collect()]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "date string, app_name string, impressions bigint, clicks bigint"
     ).orderBy("date", "app_name")
@@ -353,15 +329,12 @@ def q_sink_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    out = tempfile.mkdtemp(prefix="sink_gsort_")
-    try:
+    with scratch_dir() as out:
         write_global_sort(o, out, ["o_orderpriority", "o_orderkey"])
         back = spark.read.parquet(out).orderBy("o_orderpriority", "o_orderkey")
         rows = [
             (r.o_orderpriority, r.o_orderkey, r.price_cents) for r in back.collect()
         ]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "o_orderpriority string, o_orderkey bigint, price_cents bigint"
     ).orderBy("o_orderpriority", "o_orderkey")
@@ -386,8 +359,7 @@ def q_sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.floor(F.col("o_totalprice") / 1000).cast("long").alias("price_band"),
     )
-    out = tempfile.mkdtemp(prefix="sink_zorder_")
-    try:
+    with scratch_dir() as out:
         write_zorder_layout(o, out, "o_custkey", "price_band")
         back = (
             spark.read.parquet(out)
@@ -398,8 +370,6 @@ def q_sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderkey")
         )
         rows = [(r.o_orderkey, r.o_custkey, r.price_band) for r in back.collect()]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "o_orderkey bigint, o_custkey bigint, price_band bigint"
     ).orderBy("o_orderkey")
@@ -452,16 +422,14 @@ def q_sink_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             problems.append(f"{stats.bad} non-positive impression rows")
         return problems
 
-    out = tempfile.mkdtemp(prefix="sink_wap_") + "/published"
-    try:
+    with scratch_dir() as d:
+        out = os.path.join(d, "published")
         write_audit_publish(daily, out, audit)
         back = spark.read.parquet(out)
         rows = [
             (r["app_name"], r["clicks"], r["impressions"], r["date"])
             for r in back.collect()
         ]
-    finally:
-        shutil.rmtree(out.rsplit("/", 1)[0], ignore_errors=True)
     return spark.createDataFrame(rows, _DAILY_SCHEMA).orderBy("date", "app_name")
 
 
@@ -490,8 +458,7 @@ def q_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("impressions"),
         )
     )
-    out = tempfile.mkdtemp(prefix="sink_manifest_")
-    try:
+    with scratch_dir() as out:
         overwrite_date_partitions(daily, out)
         back = spark.read.parquet(out)
         frag = F.conv(
@@ -520,8 +487,6 @@ def q_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("date")
         )
         rows = [(r["date"], r["n_rows"], r["content_checksum"]) for r in manifest.collect()]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "date date, n_rows bigint, content_checksum bigint"
     ).orderBy("date")
@@ -568,8 +533,7 @@ def q_sink_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    out = tempfile.mkdtemp(prefix="sink_perm_")
-    try:
+    with scratch_dir() as out:
         write_csv(_order_fact(spark, sf_dir), out)
         part = sorted(glob.glob(f"{out}/part-*.csv"))[0]
         with open(part, "a") as f:
@@ -578,8 +542,6 @@ def q_sink_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         # drop the Hadoop .crc sidecar the local FS wrote for the clean
         # file — the append invalidates it (a real upstream feed has no
         # sidecars at all), and ChecksumException would mask the parse test
-        import os
-
         crc = f"{out}/.{part.rsplit('/', 1)[1]}.crc"
         if os.path.exists(crc):
             os.remove(crc)
@@ -589,8 +551,6 @@ def q_sink_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "columnNameOfCorruptRecord", "_corrupt_record"
         ).csv(out)
         rows = back.collect()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     good = [r for r in rows if r._corrupt_record is None]
     return spark.createDataFrame(
         [
@@ -627,38 +587,41 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed scans — the 100 TB payoff: one ingest-time shuffle,
     never again).
     """
-    import os
-
-    out = tempfile.mkdtemp(prefix="sink_bucketed_")
     t_o, t_c = "bkt_rt_orders", "bkt_rt_customer"
-    try:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_custkey",
-            F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        c = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment"
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-        write_bucketed(o, t_o, "o_custkey", n_buckets=8, path=os.path.join(out, "o"))
-        write_bucketed(c, t_c, "c_custkey", n_buckets=8, path=os.path.join(out, "c"))
-        res = (
-            spark.table(t_o)
-            .hint("merge")
-            .join(spark.table(t_c), F.col("o_custkey") == F.col("c_custkey"))
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("cents").alias("revenue_cents"),
+    with scratch_dir() as out:
+        try:
+            o = load_table(spark, sf_dir, "orders").select(
+                "o_custkey",
+                F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
             )
-            .orderBy("c_mktsegment")
-        )
-        rows = res.collect()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-        shutil.rmtree(out, ignore_errors=True)
+            c = load_table(spark, sf_dir, "customer").select(
+                "c_custkey", "c_mktsegment"
+            )
+            spark.sql(f"DROP TABLE IF EXISTS {t_o}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_c}")
+            write_bucketed(
+                o, t_o, "o_custkey", n_buckets=8, path=os.path.join(out, "o")
+            )
+            write_bucketed(
+                c, t_c, "c_custkey", n_buckets=8, path=os.path.join(out, "c")
+            )
+            res = (
+                spark.table(t_o)
+                .hint("merge")
+                .join(
+                    spark.table(t_c), F.col("o_custkey") == F.col("c_custkey")
+                )
+                .groupBy("c_mktsegment")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.sum("cents").alias("revenue_cents"),
+                )
+                .orderBy("c_mktsegment")
+            )
+            rows = res.collect()
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_o}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_c}")
     return spark.createDataFrame(rows, _BUCKET_SCHEMA)
 
 
@@ -708,8 +671,7 @@ def q_sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"fixture has {len(dates)}"
         )
     v1_dates = dates[: len(dates) // 2]
-    out = tempfile.mkdtemp(prefix="sink_evolve_")
-    try:
+    with scratch_dir() as out:
         daily.where(F.col("date").isin(v1_dates)).drop("clicks").write.mode(
             "overwrite"
         ).parquet(out)
@@ -723,8 +685,6 @@ def q_sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "date", "app_name", "impressions", "clicks"
             ).collect()
         ]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows, "date string, app_name string, impressions bigint, clicks bigint"
     ).orderBy("date", "app_name")

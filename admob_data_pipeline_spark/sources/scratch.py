@@ -1,11 +1,18 @@
-"""Fingerprint-keyed scratch-parquet fixture cache.
+"""Scratch space: throwaway directories and the fixture cache.
 
-Shared publish contract for derived test fixtures (the nested-chunk
-fixture in plans/relational.py and the date-partitioned report warehouse
-in sources/report_warehouse.py): synthesize once per source fingerprint,
-write to a unique temp dir, atomically rename into place. Concurrent
-callers see a complete directory or none; a regenerated source file
-(mtime/size change) invalidates the cache instead of serving stale rows.
+:func:`scratch_dir` is the one way package code gets a temp directory:
+it yields a fresh directory and removes it however the body ends, so a
+query that writes through a sink and reads back must materialize its
+result inside the ``with`` block.
+
+:func:`cached_parquet_dir` is the shared publish contract for derived
+test fixtures (the nested-chunk fixture in plans/relational.py and the
+date-partitioned report warehouse in sources/report_warehouse.py):
+synthesize once per source fingerprint, write to a unique temp dir,
+atomically rename into place. Concurrent callers see a complete
+directory or none; a regenerated source file (mtime/size change)
+invalidates the cache instead of serving stale rows. Its
+``spark_graft_*`` directories outlive the process on purpose.
 """
 
 from __future__ import annotations
@@ -15,7 +22,20 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Callable
+
+
+@contextmanager
+def scratch_dir() -> Iterator[str]:
+    """Yield a fresh directory under the temp dir; remove it on exit,
+    however the body ends."""
+    path = tempfile.mkdtemp(prefix="graft_scratch_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def cached_parquet_dir(

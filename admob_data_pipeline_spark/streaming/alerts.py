@@ -28,9 +28,8 @@ splits files across tasks.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -40,6 +39,7 @@ from admob_data_pipeline_spark.operators.util import (
     SESSION_GAP,
     SESSION_LABEL_SQL,
 )
+from admob_data_pipeline_spark.sources.scratch import scratch_dir
 from admob_data_pipeline_spark.sources.tables import load_table
 
 WATERMARK = "2 days"
@@ -116,8 +116,7 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> Da
     table holds its rows on the driver and never reads the checkpoint
     again, so the checkpoint directory is removed once the replay ends."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_")
-    try:
+    with scratch_dir() as checkpoint:
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -127,8 +126,6 @@ def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> Da
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(checkpoint, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 
@@ -347,17 +344,20 @@ def q_streaming_sessionize_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date",
         F.expr("date_from_unix_date(CAST(session_start_epoch DIV 86400 AS INT))"),
     )
-    table_path = tempfile.mkdtemp(prefix="sess_table_")
-    checkpoint = tempfile.mkdtemp(prefix="sess_ckpt_")
-    stream_to_partitioned_table(sessions, table_path, checkpoint)
-    out = spark.read.parquet(table_path)
-    return out.select(
-        "user_id",
-        "session_start_epoch",
-        "n_events",
-        "value_milli",
-        F.col("date").cast("date").alias("date"),
-    ).orderBy("user_id", "session_start_epoch")
+    with scratch_dir() as d:
+        table = os.path.join(d, "table")
+        stream_to_partitioned_table(sessions, table, os.path.join(d, "ckpt"))
+        back = spark.read.parquet(table).select(
+            "user_id",
+            "session_start_epoch",
+            "n_events",
+            "value_milli",
+            F.col("date").cast("date").alias("date"),
+        )
+        rows = back.collect()
+    return spark.createDataFrame(rows, back.schema).orderBy(
+        "user_id", "session_start_epoch"
+    )
 
 
 _ORACLE_SESSIONIZE_SINK = f"""
@@ -466,8 +466,6 @@ def q_streaming_kmv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5, the final synopsis equals the batch sketch of the
     whole log — so the streamed, incrementally-merged estimate is
     oracle-checked EXACTLY against the from-scratch SQL computation."""
-    import shutil
-
     from admob_data_pipeline_spark.operators.sketches import (
         _kmv_estimate,
         kmv_synopsis,
@@ -476,56 +474,26 @@ def q_streaming_kmv_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _event_stream(spark, sf_dir).select(
         F.col("event_type"), F.col("user_id").cast("string").alias("uid")
     )
-    table = tempfile.mkdtemp(prefix="kmv_table_")
-    checkpoint = tempfile.mkdtemp(prefix="kmv_ckpt_")
     k = 64
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        partial = kmv_synopsis(batch_df, "event_type", "uid", k)
-        # Merge prior state only when the synopsis table actually exists:
-        # a blanket except would treat a transient/corrupt read on batch N
-        # as "first batch" and silently discard the accumulated sketch —
-        # any real read error must fail the stream.
-        if any(
-            f.name.endswith(".parquet") or f.name == "_SUCCESS"
-            for f in os.scandir(table)
-        ):
-            prev = sp.read.parquet(table)
-            partial = partial.unionByName(prev)
-        merged = partial.groupBy("event_type").agg(
+    def merge(syn: DataFrame) -> DataFrame:
+        return syn.groupBy("event_type").agg(
             F.slice(
                 F.array_sort(F.array_distinct(F.flatten(F.collect_list("mins")))),
                 1,
                 k,
             ).alias("mins")
         )
-        # collect-then-rewrite: the synopsis table is k doubles per group
-        rows = merged.collect()
-        sp.createDataFrame(rows, merged.schema).write.mode("overwrite").parquet(
-            table
-        )
 
-    try:
-        q = (
-            events.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    with scratch_dir() as d:
+        syn = _merge_stream(
+            events, lambda b: kmv_synopsis(b, "event_type", "uid", k), merge, d
         )
-        q.awaitTermination()
-        syn = spark.read.parquet(table)
-        out = syn.select(
+        rows = syn.select(
             "event_type",
             _kmv_estimate(F.col("mins"), k).alias("ndv_est"),
             (F.size("mins") < k).alias("is_exact"),
-        ).orderBy("event_type")
-        rows = out.collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+        ).collect()
     return spark.createDataFrame(
         rows, "event_type string, ndv_est double, is_exact boolean"
     ).orderBy("event_type")
@@ -786,35 +754,41 @@ ORDER BY user_id, session_start_epoch
 """
 
 
-def _additive_merge_stream(
+def _merge_stream(
     stream_df: DataFrame,
-    keys: list[str],
-    sum_cols: list[str],
-    table: str,
-    checkpoint: str,
-) -> None:
-    """Shared read-merge-overwrite foreachBatch sink for ADDITIVE
-    rollups: each micro-batch is partial-aggregated on ``keys`` (SUM
-    over ``sum_cols``), unioned with the persistent parquet state,
-    re-summed and overwritten. SUM-merge is associative, so the
-    accumulated state equals the from-scratch batch rollup regardless
-    of batch boundaries or arrival order — which is what lets the
-    streaming top-k / PSI / EWMA queries share their batch oracles
-    verbatim. State stays rollup-sized by each caller's contract; a
-    micro-batch shuffles only its own distinct keys."""
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    d: str,
+) -> DataFrame:
+    """Shared read-merge-overwrite foreachBatch sink: each micro-batch is
+    reduced by ``partial(batch)``, unioned with the persistent parquet
+    state under ``d``, reduced again by ``merge`` and overwritten. The
+    stream drains with ``availableNow``; the final state is returned as a
+    frame over ``d``, so the caller collects it before ``d`` goes.
+
+    When ``merge`` is associative (a SUM, a k-smallest union) the state
+    equals the from-scratch batch rollup regardless of batch boundaries
+    or arrival order — which is what lets the streaming top-k / PSI /
+    EWMA / KMV queries share their batch oracles verbatim. State stays
+    rollup-sized by each caller's contract; a micro-batch shuffles only
+    its own distinct keys."""
+    table = os.path.join(d, "state")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        aggs = [F.sum(c).alias(c) for c in sum_cols]
-        partial = batch_df.groupBy(*keys).agg(*aggs)
-        if any(
+        state = partial(batch_df)
+        # Merge prior state only when the table has been written: a
+        # blanket except would treat a transient/corrupt read on batch N
+        # as "first batch" and silently discard the accumulated state —
+        # any real read error must fail the stream.
+        if os.path.isdir(table) and any(
             f.name.endswith(".parquet") or f.name == "_SUCCESS"
             for f in os.scandir(table)
         ):
-            partial = partial.unionByName(sp.read.parquet(table))
-        merged = partial.groupBy(*keys).agg(*aggs)
+            state = state.unionByName(sp.read.parquet(table))
+        merged = merge(state)
         rows = merged.collect()  # rollup-sized by caller contract
         sp.createDataFrame(rows, merged.schema).write.mode("overwrite").parquet(
             table
@@ -822,17 +796,24 @@ def _additive_merge_stream(
 
     q = (
         stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", os.path.join(d, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return stream_df.sparkSession.read.parquet(table)
+
+
+def _sums(keys: list[str], cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """``groupBy(keys)`` + SUM over ``cols``: the additive partial and
+    merge of :func:`_merge_stream`."""
+    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
 
 
 def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental top-k maintenance on a stream: each micro-batch's
     per-(app, user) counts MERGE additively into a persistent counts
-    table (shared ``_additive_merge_stream`` sink), and the final read
+    table (shared ``_merge_stream`` sink), and the final read
     ranks the top 3 users per app. Count merge is associative, so the
     streamed result is oracle-checked EXACTLY against the from-scratch
     batch ranking.
@@ -840,30 +821,18 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is the (app, user, n) table — partial-aggregated per
     batch before the merge read, so a micro-batch shuffles only its own
     distinct keys; ranking happens once at read time, not per batch."""
-    import shutil
-    import tempfile
-
     events = _event_stream(spark, sf_dir).select(
         "event_type", "user_id", F.lit(1).cast("long").alias("n")
     )
-    table = tempfile.mkdtemp(prefix="topk_table_")
-    checkpoint = tempfile.mkdtemp(prefix="topk_ckpt_")
-
-    try:
-        _additive_merge_stream(
-            events, ["event_type", "user_id"], ["n"], table, checkpoint
-        )
-        state = spark.read.parquet(table)
-        w = Window.partitionBy("event_type").orderBy(F.desc("n"), "user_id")
-        out = (
+    counts = _sums(["event_type", "user_id"], ["n"])
+    w = Window.partitionBy("event_type").orderBy(F.desc("n"), "user_id")
+    with scratch_dir() as d:
+        state = _merge_stream(events, counts, counts, d)
+        rows = (
             state.withColumn("rank", F.row_number().over(w).cast("int"))
             .where(F.col("rank") <= 3)
-            .orderBy("event_type", "rank")
+            .collect()
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.createDataFrame(
         rows, "event_type string, user_id long, n long, rank int"
     ).orderBy("event_type", "rank")
@@ -899,8 +868,6 @@ def q_streaming_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is the (user_id, n) rollup, partial-aggregated per
     batch; top-k scoring never runs per micro-batch."""
-    import shutil
-
     from admob_data_pipeline_spark.plans.analytics_ext import (
         skew_audit_from_counts,
     )
@@ -908,16 +875,10 @@ def q_streaming_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _event_stream(spark, sf_dir).select(
         "user_id", F.lit(1).cast("long").alias("n_events")
     )
-    table = tempfile.mkdtemp(prefix="skew_table_")
-    checkpoint = tempfile.mkdtemp(prefix="skew_ckpt_")
-    try:
-        _additive_merge_stream(
-            events, ["user_id"], ["n_events"], table, checkpoint
-        )
-        rows = skew_audit_from_counts(spark.read.parquet(table)).collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    counts = _sums(["user_id"], ["n_events"])
+    with scratch_dir() as d:
+        state = _merge_stream(events, counts, counts, d)
+        rows = skew_audit_from_counts(state).collect()
     return spark.createDataFrame(
         rows,
         "user_id long, n_events long, share_ppm long, skew_ratio_x1000 long",
@@ -939,8 +900,6 @@ def q_streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is |event types| rows; each micro-batch shuffles only
     its own partial counts before the tiny merge."""
-    import shutil
-
     from admob_data_pipeline_spark.plans.analytics_ext import (
         PSI_BASE_DAYS,
         psi_from_counts,
@@ -954,18 +913,10 @@ def q_streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(is_base, 1).otherwise(0).cast("long").alias("n_base"),
         F.when(~is_base, 1).otherwise(0).cast("long").alias("n_cur"),
     )
-    table = tempfile.mkdtemp(prefix="psi_table_")
-    checkpoint = tempfile.mkdtemp(prefix="psi_ckpt_")
-
-    try:
-        _additive_merge_stream(
-            events, ["event_type"], ["n_base", "n_cur"], table, checkpoint
-        )
-        out = psi_from_counts(spark.read.parquet(table))
-        rows = out.collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    counts = _sums(["event_type"], ["n_base", "n_cur"])
+    with scratch_dir() as d:
+        state = _merge_stream(events, counts, counts, d)
+        rows = psi_from_counts(state).collect()
     return spark.createDataFrame(
         rows, "event_type string, n_base long, n_cur long, psi_e6 long"
     ).orderBy("event_type")
@@ -983,8 +934,6 @@ def q_streaming_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is the (type, day) rollup — calendar-bounded; each
     micro-batch shuffles only its own partial sums before the tiny
     merge."""
-    import shutil
-
     from admob_data_pipeline_spark.operators.stats import (
         VALUE_SCALE,
         ewma_from_daily,
@@ -995,16 +944,10 @@ def q_streaming_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("d"),
         F.floor(F.col("value") * VALUE_SCALE).cast("long").alias("vm"),
     )
-    table = tempfile.mkdtemp(prefix="ewma_table_")
-    checkpoint = tempfile.mkdtemp(prefix="ewma_ckpt_")
-
-    try:
-        _additive_merge_stream(events, ["g", "d"], ["vm"], table, checkpoint)
-        out = ewma_from_daily(spark.read.parquet(table))
-        rows = out.collect()
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    daily = _sums(["g", "d"], ["vm"])
+    with scratch_dir() as d:
+        state = _merge_stream(events, daily, daily, d)
+        rows = ewma_from_daily(state).collect()
     return spark.createDataFrame(
         rows,
         "event_type string, d date, vm long, ewma_num long,"
@@ -1052,15 +995,9 @@ def q_streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the aggregation state is bounded by the watermark horizon
     (days within 47h of the max event time) — the property that makes
     windowed aggregation viable on an unbounded feed."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    d = tempfile.mkdtemp(prefix="late_audit_")
-    src, out, ck = (os.path.join(d, p) for p in ("src", "out", "ck"))
 
-    def run():
+    def run(src: str, out: str, ck: str) -> None:
         sch = spark.read.parquet(src).schema
         q = (
             spark.readStream.schema(sch)
@@ -1087,15 +1024,16 @@ def q_streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    try:
+    with scratch_dir() as d:
+        src, out, ck = (os.path.join(d, p) for p in ("src", "out", "ck"))
         ev.where(F.col("event_id") % LATE_MOD != 0).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        run()
+        run(src, out, ck)
         ev.where(F.col("event_id") % LATE_MOD == 0).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        run()
+        run(src, out, ck)
         # the sentinel: ts far past the log, value 0 — flushes every
         # real window, never emits itself
         ev.agg(
@@ -1103,10 +1041,8 @@ def q_streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.max("ts") + F.expr("INTERVAL 5 DAYS")).alias("ts"),
             F.lit(0.0).alias("value"),
         ).coalesce(1).write.mode("append").parquet(src)
-        run()
+        run(src, out, ck)
         rows = spark.read.parquet(out).orderBy("day").collect()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         rows, "day date, n_events bigint, value_milli bigint"
     )

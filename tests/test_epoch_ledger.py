@@ -24,9 +24,11 @@ from admob_data_pipeline_spark.sources.tables import load_table
 
 
 @pytest.fixture()
-def epoch_table(spark):
-    """A tiny epoch-partitioned bucketed table + cleanup."""
-    out = tempfile.mkdtemp(prefix="epoch_ledger_test_")
+def epoch_table(spark, tmp_path):
+    """A tiny epoch-partitioned bucketed table + cleanup. Its location is
+    a child of ``tmp_path``: compaction and the crash tests write
+    siblings of it."""
+    out = str(tmp_path / "t")
     table = "epoch_ledger_t"
     base = spark.range(0, 20).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
@@ -35,7 +37,6 @@ def epoch_table(spark):
     yield table
     for t in (table, f"{table}__old", f"{table}__compact"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(out, ignore_errors=True)
 
 
 def _delta(spark, lo, hi):

@@ -111,7 +111,6 @@ def test_stream_writer_commits_per_epoch_manifest(spark, tmp_path):
     import glob
     import json
     import os
-    import tempfile
 
     register_report_source(spark)
     out = str(tmp_path / "stream_sink")
@@ -122,7 +121,7 @@ def test_stream_writer_commits_per_epoch_manifest(spark, tmp_path):
     q = (
         stream.writeStream.format("admob_report")
         .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .outputMode("append")
         .trigger(availableNow=True)
         .start()

@@ -1,10 +1,14 @@
-"""Scratch lifecycles: the scratch-cache publish contract (sources/scratch.py)
-and the epoch-index scratch teardown (operators/epoch_index.py)."""
+"""Scratch lifecycles: the one scratch directory and the scratch-cache
+publish contract (sources/scratch.py), and the epoch-index scratch
+teardown (operators/epoch_index.py)."""
 
 from __future__ import annotations
 
 import glob
 import os
+import pathlib
+import re
+import subprocess
 import tempfile
 
 import pytest
@@ -18,6 +22,30 @@ from admob_data_pipeline_spark.operators import (
 from admob_data_pipeline_spark.operators.epoch_index import scratch_index
 from admob_data_pipeline_spark.sources.scratch import cached_parquet_dir
 from admob_data_pipeline_spark.sources.tables import load_table
+
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+
+def test_scratch_dir_is_the_only_mkdtemp():
+    """Package code gets temp dirs only from ``scratch_dir``, so the
+    remove-however-the-body-ends policy is written once."""
+    names = subprocess.run(
+        ["git", "ls-files", "admob_data_pipeline_spark/*.py"],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert names
+    sites = [
+        f"{n}:{i}"
+        for n in names
+        if n != "admob_data_pipeline_spark/sources/scratch.py"
+        for i, line in enumerate((ROOT / n).read_text().splitlines(), 1)
+        if re.search(r"\bmkdtemp\b", line)
+    ]
+    assert not sites, f"use sources.scratch.scratch_dir instead: {sites}"
 
 
 def _tmp_orphans(cache_name: str) -> list[str]:
@@ -41,7 +69,9 @@ def test_failed_write_reaps_partial_tmp_dir(tmp_path):
     assert not _tmp_orphans("reaptest")
 
 
-def test_retry_after_failure_publishes(tmp_path):
+def test_retry_after_failure_publishes(tmp_path, monkeypatch):
+    # publish under tmp_path: a real temp dir would keep one cache per run
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     src = tmp_path / "src.txt"
     src.write_text("x")
     calls = {"n": 0}

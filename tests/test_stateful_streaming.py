@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -31,7 +30,7 @@ def test_state_accumulates_across_microbatches(spark, sf_dir, tmp_path):
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

@@ -361,7 +361,7 @@ def test_equidepth_histogram_balanced_depths(spark):
     assert all(r.n_rows == 100 for r in out)
 
 
-def test_degenerate_denominators_emit_null_not_ansi_error(spark):
+def test_degenerate_denominators_emit_null_not_ansi_error(spark, tmp_path):
     # One empty class (KS / rank-sum) or all-zero revenue (Gini): the
     # statistic is undefined → NULL row, matching DuckDB's `x // 0 →
     # NULL` instead of Spark ANSI's DivideByZeroError. Build inputs that
@@ -374,9 +374,7 @@ def test_degenerate_denominators_emit_null_not_ansi_error(spark):
         q_revenue_gini,
     )
 
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="degen_sf_")
+    d = str(tmp_path)
     # every customer in one segment -> the non-segment class is empty
     spark.createDataFrame(
         [Row(c_custkey=i, c_mktsegment="BUILDING", c_nationkey=1) for i in (1, 2)]
