@@ -91,6 +91,7 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     EpochIndex,
     drain_stream,
     drop_index_tables,
+    index_autopilot,
     index_compact,
     index_delete,
     index_view,
@@ -1510,46 +1511,33 @@ DELETE_MOD, DELETE_REM = 10, 5  # deleted slice = vec_id % 10 == 5
 
 
 def ann_index_autopilot(
-    emb: DataFrame,
-    table_prefix: str,
-    max_epochs: int = 16,
-    split_topn: int = SPLIT_TOPN,
+    emb: DataFrame, table_prefix: str, max_epochs: int = 16
 ) -> list:
-    """ONE policy-driven maintenance cycle — the ops loop a deployed
-    index runs on a schedule, composed from this module's audits and
-    remedies so no operator ever eyeballs a dashboard:
-
-    1. drift audit → SPLIT the ``split_topn`` most delta-loaded lists
-       (cheapest remedy for quantizer drift; runs BEFORE compaction
-       because the audit reads the epoch layering that compaction
-       folds),
-    2. manifest → :func:`should_compact` → COMPACT (folds epochs,
-       purges tombstones, restores one-file-per-bucket).
-
-    Every step is individually crash-safe (split converges on re-run,
-    compaction swaps self-heal via recover_compaction), so the cycle
-    can simply be re-invoked after any failure. Returns the action log
-    (e.g. ``["split:12,37", "compact"]``) for the job scheduler."""
-    from admob_data_pipeline_spark.sinks.writers import should_compact
-
+    """The ANN maintenance cycle (:func:`index_autopilot`) with the
+    cheapest remedy for quantizer drift: the drift audit, then SPLIT the
+    ``SPLIT_TOPN`` most delta-loaded lists. The cycle reads the manifest
+    before the split, which leaves the epoch span compaction checks
+    unchanged: the split rewrites only existing epoch partitions of the
+    codes and appends to the unpartitioned centroids table. Returns the
+    action log (e.g. ``["split:12,37", "compact"]``)."""
     spark = emb.sparkSession
-    actions: list = []
-    drift_rows = ann_index_drift(spark, table_prefix).collect()
-    flagged = [
-        r["list_id"]
-        for r in sorted(
-            drift_rows, key=lambda r: (-r["n_delta"], r["list_id"])
-        )[:split_topn]
-        if r["n_delta"] > 0
-    ]
-    if flagged:
-        ann_index_split(emb, table_prefix, flagged)
-        actions.append("split:" + ",".join(str(x) for x in sorted(flagged)))
-    manifest_rows = ann_index_manifest(spark, table_prefix).collect()
-    if should_compact(manifest_rows, max_epochs=max_epochs):
-        ann_index_compact(spark, table_prefix)
-        actions.append("compact")
-    return actions
+
+    def split(_rows):
+        drift_rows = ann_index_drift(spark, table_prefix).collect()
+        flagged = [
+            r["list_id"]
+            for r in sorted(
+                drift_rows, key=lambda r: (-r["n_delta"], r["list_id"])
+            )[:SPLIT_TOPN]
+            if r["n_delta"] > 0
+        ]
+        if flagged:
+            ann_index_split(emb, table_prefix, flagged)
+            return "split:" + ",".join(str(x) for x in sorted(flagged))
+
+    return index_autopilot(
+        spark, ANN_INDEX, table_prefix, max_epochs, split, ann_index_compact
+    )
 
 
 AUTOPILOT_EPOCHS = 3  # the wrapper ingests the delta as three epochs
@@ -1596,6 +1584,7 @@ def q_ann_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         actions = ann_index_autopilot(emb, prefix, max_epochs=2)
         assert len(actions) == 2 and actions[0].startswith("split:"), actions
         assert actions[1] == "compact", actions
+        assert ann_index_autopilot(emb, prefix, max_epochs=2) == []
         rows = ann_index_drift(spark, prefix).collect()
     return spark.createDataFrame(
         rows,

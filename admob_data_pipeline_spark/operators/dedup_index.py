@@ -58,9 +58,11 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     EpochIndex,
     drain_stream,
     drop_index_tables,
+    index_autopilot,
     index_compact,
     index_delete,
     index_view,
+    ingested_since_build,
     keep_latest,
     latest_versions,
     scratch_index,
@@ -974,38 +976,25 @@ def q_dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_index_autopilot(
-    spark: SparkSession,
-    table_prefix: str,
-    max_epochs: int = 16,
-    trim_top_n: int = BAN_HOT_TOPN,
+    spark: SparkSession, table_prefix: str, max_epochs: int = 16
 ) -> list:
-    """ONE policy-driven maintenance cycle for the dedup index — the
-    family's analogue of ann_index_autopilot: (1) stop-list TRIM — if
-    ingest landed since build (manifest epoch span beyond the base
-    layer), re-census the stored table and ban the ``trim_top_n``
-    hottest shingles via :func:`dedup_index_ban_hot` (the PROACTIVE
-    variant of the drift remedy: the reactive ``df > MAX_DF`` signal
-    only fires after the candidate blow-up is already quadratic);
-    (2) manifest → :func:`should_compact` → COMPACT (fold epochs, purge
-    tombstones). Both steps are crash-convergent, so the cycle is
-    safely re-invocable. Returns the action log."""
-    from admob_data_pipeline_spark.sinks.writers import should_compact
+    """The dedup maintenance cycle (:func:`index_autopilot`) with a
+    stop-list TRIM as its remedy: if ingest landed since build,
+    re-census the stored table and ban the ``BAN_HOT_TOPN`` hottest
+    shingles via :func:`dedup_index_ban_hot` (the PROACTIVE variant of
+    the drift remedy: the reactive ``df > MAX_DF`` signal only fires
+    after the candidate blow-up is already quadratic). Returns the
+    action log."""
 
-    actions: list = []
-    manifest_rows = dedup_index_manifest(spark, table_prefix).collect()
-    n_epochs = max(
-        int(r["n_epochs"])
-        for r in manifest_rows
-        if r["n_epochs"] is not None and int(r["n_epochs"]) > 0
+    def ban_hot(rows):
+        if ingested_since_build(rows):
+            n = dedup_index_ban_hot(spark, table_prefix)
+            if n:
+                return f"ban_hot:{n}"
+
+    return index_autopilot(
+        spark, DEDUP_INDEX, table_prefix, max_epochs, ban_hot, dedup_index_compact
     )
-    if n_epochs > 1 and trim_top_n:
-        n = dedup_index_ban_hot(spark, table_prefix, top_n=trim_top_n)
-        if n:
-            actions.append(f"ban_hot:{n}")
-    if should_compact(manifest_rows, max_epochs=max_epochs):
-        dedup_index_compact(spark, table_prefix)
-        actions.append("compact")
-    return actions
 
 
 def q_dedup_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,6 +1031,7 @@ def q_dedup_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_index_delete(spark, doomed, prefix)
         actions = dedup_index_autopilot(spark, prefix, max_epochs=1)
         assert actions == [f"ban_hot:{BAN_HOT_TOPN}", "compact"], actions
+        assert dedup_index_autopilot(spark, prefix, max_epochs=1) == []
         rows = dedup_index_probe(batch, prefix).collect()
     return spark.createDataFrame(rows, _PROBE_SCHEMA)
 

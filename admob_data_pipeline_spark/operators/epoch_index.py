@@ -12,7 +12,8 @@ each family declares next to its own code: the write half (delete,
 compaction) and the read half every index read calls — the as-of view
 (:func:`index_view`), the epoch-aware tombstone mask
 (:func:`mask_deleted`) and the latest-version mask
-(:func:`latest_versions`, :func:`keep_latest`). The families keep only
+(:func:`latest_versions`, :func:`keep_latest`) — and the scheduled
+maintenance cycle (:func:`index_autopilot`). The families keep only
 what differs: build, encode, which table is their version manifest,
 drift and their remedies.
 """
@@ -31,8 +32,10 @@ from admob_data_pipeline_spark.sinks.writers import (
     BASE_EPOCH,
     burn_epoch_id,
     compact_bucketed_table,
+    index_manifest,
     next_epoch,
     purge_applied_tombstones,
+    should_compact,
 )
 from admob_data_pipeline_spark.sources.scratch import scratch_dir
 
@@ -241,6 +244,44 @@ def index_compact(
     out = par_ops(*thunks) if pin else [t() for t in thunks]
     purge_applied_tombstones(spark, f"{prefix}_tombstones", applied)
     return out
+
+
+def ingested_since_build(manifest_rows) -> bool:
+    """Whether any ingest landed since the build (or the last
+    compaction, which folds every epoch back into the base layer): an
+    epoch-carrying table of the :func:`index_manifest` rows spans more
+    than one epoch."""
+    return any(
+        r["n_epochs"] is not None and int(r["n_epochs"]) > 1
+        for r in manifest_rows
+    )
+
+
+def index_autopilot(
+    spark: SparkSession,
+    spec: EpochIndex,
+    prefix: str,
+    max_epochs: int,
+    remedy,
+    compact,
+) -> list:
+    """ONE policy-driven maintenance cycle — the ops loop a deployed
+    index runs on a schedule: collect the manifest once, run the
+    family's ``remedy(manifest_rows)`` (it returns its action string, or
+    nothing when it did not fire), then :func:`should_compact` →
+    ``compact(spark, prefix)``, the family's own wrapper (fold epochs,
+    purge tombstones, one file per bucket). The remedy runs BEFORE the
+    compaction because the drift it repairs lives in the epoch layering
+    that compaction folds. Every step is crash-convergent, so the cycle
+    can simply be re-invoked after any failure. Returns the action log
+    (e.g. ``["refresh_stats", "compact"]``) for the job scheduler."""
+    rows = index_manifest(spark, prefix, spec.tables).collect()
+    action = remedy(rows)
+    actions = [action] if action else []
+    if should_compact(rows, max_epochs=max_epochs):
+        compact(spark, prefix)
+        actions.append("compact")
+    return actions
 
 
 @contextmanager

@@ -60,9 +60,11 @@ from admob_data_pipeline_spark.operators.epoch_index import (
     EpochIndex,
     drain_stream,
     drop_index_tables,
+    index_autopilot,
     index_compact,
     index_delete,
     index_view,
+    ingested_since_build,
     keep_latest,
     latest_versions,
     mask_deleted,
@@ -921,30 +923,24 @@ ORDER BY rnk
 def bm25_index_autopilot(
     spark: SparkSession, table_prefix: str, max_epochs: int = 16
 ) -> list:
-    """ONE policy-driven maintenance cycle for the text index — the
-    family's analogue of ann_index_autopilot: (1) scalar REFRESH
-    whenever any ingest or delete happened since build (the drift the
-    frozen-scalar contract accumulates is erased by one O(index)
-    aggregate, so the policy is simply "refresh when the epoch span or
-    tombstone set is non-empty"), then (2) manifest →
-    :func:`should_compact` → COMPACT. Both steps are idempotent /
-    crash-convergent, so the cycle can be re-invoked after any failure.
+    """The text-index maintenance cycle (:func:`index_autopilot`) with a
+    scalar REFRESH as its remedy, run whenever any ingest or delete
+    happened since build: the drift the frozen-scalar contract
+    accumulates is erased by one O(index) aggregate, so the policy is
+    simply "refresh when the epoch span or tombstone set is non-empty".
     Returns the action log."""
-    from admob_data_pipeline_spark.sinks.writers import should_compact
 
-    actions: list = []
-    manifest_rows = bm25_index_manifest(spark, table_prefix).collect()
-    n_epochs = max(
-        int(r["n_epochs"]) for r in manifest_rows if r["n_epochs"] is not None
+    def refresh(rows):
+        n_tomb = next(
+            int(r["n_rows"]) for r in rows if r["table_name"] == "tombstones"
+        )
+        if ingested_since_build(rows) or n_tomb > 0:
+            bm25_index_refresh_stats(spark, table_prefix)
+            return "refresh_stats"
+
+    return index_autopilot(
+        spark, BM25_INDEX, table_prefix, max_epochs, refresh, bm25_index_compact
     )
-    n_tomb = spark.table(f"{table_prefix}_tombstones").count()
-    if n_epochs > 1 or n_tomb > 0:  # build alone is epoch -1 → 1 epoch
-        bm25_index_refresh_stats(spark, table_prefix)
-        actions.append("refresh_stats")
-    if should_compact(manifest_rows, max_epochs=max_epochs):
-        bm25_index_compact(spark, table_prefix)
-        actions.append("compact")
-    return actions
 
 
 def q_bm25_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,6 +971,7 @@ def q_bm25_index_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_index_delete(spark, doomed, prefix)
         actions = bm25_index_autopilot(spark, prefix, max_epochs=1)
         assert actions == ["refresh_stats", "compact"], actions
+        assert bm25_index_autopilot(spark, prefix, max_epochs=1) == []
         rows = bm25_index_search(spark, BM25_QUERY, prefix).collect()
     return spark.createDataFrame(rows, _SEARCH_SCHEMA)
 

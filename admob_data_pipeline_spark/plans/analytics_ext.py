@@ -4251,18 +4251,9 @@ def _report_source_df(spark: SparkSession, n_days: int):
 REPORT_SOURCE_DAYS = 14
 
 
-def q_report_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The report API read through the NATIVE PySpark DataSource
-    (sources/report_datasource.py) — the reference's fetch_report.py
-    surface as ``spark.read.format("admob_report")`` — rolled up to the
-    (date, app) grain with the exact integer two-stage-ppm match rate.
-    The payload is a deterministic formula, so the oracle re-derives it
-    from generate_series: the SOURCE itself is value-hash-gated.
-    (sf_dir is unused: the source is the fixture.)
-
-    Scale: one InputPartition per (date, app) = the API request grain —
-    the fetch fans out across executors with no coordinator state."""
-    df = _report_source_df(spark, REPORT_SOURCE_DAYS)
+def _report_rollup(df: DataFrame) -> DataFrame:
+    """The report rows rolled up to the (date, app) grain with the exact
+    integer two-stage-ppm match rate."""
     return (
         df.groupBy("date", "app_name")
         .agg(
@@ -4278,8 +4269,22 @@ def q_report_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "matched_requests * 1000000 DIV NULLIF(ad_requests, 0)"
             ).cast("long"),
         )
-        .orderBy("date", "app_name")
     )
+
+
+def q_report_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The report API read through the NATIVE PySpark DataSource
+    (sources/report_datasource.py) — the reference's fetch_report.py
+    surface as ``spark.read.format("admob_report")`` — rolled up to the
+    (date, app) grain with the exact integer two-stage-ppm match rate.
+    The payload is a deterministic formula, so the oracle re-derives it
+    from generate_series: the SOURCE itself is value-hash-gated.
+    (sf_dir is unused: the source is the fixture.)
+
+    Scale: one InputPartition per (date, app) = the API request grain —
+    the fetch fans out across executors with no coordinator state."""
+    df = _report_source_df(spark, REPORT_SOURCE_DAYS)
+    return _report_rollup(df).orderBy("date", "app_name")
 
 
 def q_report_source_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4330,23 +4335,7 @@ def q_streaming_report_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     out = run_available_now(stream, output_mode="append")
-    return (
-        out.groupBy("date", "app_name")
-        .agg(
-            F.sum("ad_requests").alias("ad_requests"),
-            F.sum("matched_requests").alias("matched_requests"),
-            F.sum("impressions").alias("impressions"),
-            F.sum("clicks").alias("clicks"),
-            F.sum("earn_micros").alias("earn_micros"),
-        )
-        .withColumn(
-            "match_rate_ppm",
-            F.expr(
-                "matched_requests * 1000000 DIV NULLIF(ad_requests, 0)"
-            ).cast("long"),
-        )
-        .orderBy("date", "app_name")
-    )
+    return _report_rollup(out).orderBy("date", "app_name")
 
 
 def q_report_sink_python_roundtrip(
@@ -4427,9 +4416,8 @@ def q_streaming_report_sink_roundtrip(
                     os.path.join(out, f["file"])
                     for f in json.load(fh)["files"]
                 )
-        back = (
-            spark.read.json(files)
-            .select(
+        back = _report_rollup(
+            spark.read.json(files).select(
                 F.col("date").cast("date").alias("date"),
                 "app_name",
                 F.col("ad_requests").cast("long").alias("ad_requests"),
@@ -4437,20 +4425,6 @@ def q_streaming_report_sink_roundtrip(
                 F.col("impressions").cast("long").alias("impressions"),
                 F.col("clicks").cast("long").alias("clicks"),
                 F.col("earn_micros").cast("long").alias("earn_micros"),
-            )
-            .groupBy("date", "app_name")
-            .agg(
-                F.sum("ad_requests").alias("ad_requests"),
-                F.sum("matched_requests").alias("matched_requests"),
-                F.sum("impressions").alias("impressions"),
-                F.sum("clicks").alias("clicks"),
-                F.sum("earn_micros").alias("earn_micros"),
-            )
-            .withColumn(
-                "match_rate_ppm",
-                F.expr(
-                    "matched_requests * 1000000 DIV NULLIF(ad_requests, 0)"
-                ).cast("long"),
             )
         )
         rows = back.collect()

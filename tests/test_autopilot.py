@@ -2,7 +2,8 @@
 freshly built index (no ingest → no drift to remedy, one epoch → no
 compaction debt). The fired-path behavior is pinned by the registered
 oracles (ann/bm25/dedup `_index_autopilot`); this file pins the quiet
-path, which the oracles never exercise."""
+path, which the oracles never exercise, and BM25's delete-only
+trigger, which they never isolate."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from admob_data_pipeline_spark.operators import (
     dedup_index,
     retrieval_index,
 )
+from admob_data_pipeline_spark.operators.epoch_index import scratch_index
 from admob_data_pipeline_spark.sources.tables import load_table
 
 
@@ -64,3 +66,17 @@ def test_dedup_autopilot_is_noop_on_fresh_index(spark, sf_dir):
         for t in ("bands", "shingles", "shsizes", "banned", "tombstones"):
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_bm25_autopilot_refreshes_after_delete_only(spark, sf_dir):
+    """A delete with no ingest leaves one epoch, so only the manifest's
+    tombstone row can trigger the scalar refresh."""
+    docs = load_table(spark, sf_dir, "documents")
+    with scratch_index(spark, retrieval_index.BM25_INDEX) as (out, prefix):
+        retrieval_index.bm25_index_build(docs, prefix, out)
+        retrieval_index.bm25_index_delete(
+            spark, docs.where(F.col("doc_id") % 10 == 5).select("doc_id"), prefix
+        )
+        assert retrieval_index.bm25_index_autopilot(spark, prefix) == [
+            "refresh_stats"
+        ]

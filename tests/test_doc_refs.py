@@ -25,13 +25,17 @@ REMOVED_ARTIFACT = re.compile(
 
 
 def _tracked_py() -> dict[str, str]:
-    names = subprocess.run(
-        ["git", "ls-files", "*.py"],
-        cwd=ROOT,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout.split()
+    git = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True
+    )
+    if git.returncode == 0:
+        names = git.stdout.split()
+    else:  # not a work tree (e.g. a ``git archive`` copy): walk it
+        names = [
+            p.relative_to(ROOT).as_posix()
+            for p in ROOT.rglob("*.py")
+            if not {".git", "spark-warehouse"} & set(p.relative_to(ROOT).parts)
+        ]
     return {
         n: (ROOT / n).read_text(encoding="utf-8")
         for n in names

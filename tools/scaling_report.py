@@ -60,45 +60,6 @@ def _leg(
     return out
 
 
-def _maintenance_section() -> list[str]:
-    """Steady-state autopilot costs measured by
-    tools/autopilot_maintenance_probe.py (AUTOPILOT_PROBE.json). The
-    registered ``*_index_autopilot`` rows above time build+ingest+cycle;
-    the 100 TB story rests on the MAINTENANCE phase alone, so the probe
-    rows are reported beside them."""
-    import json
-    import os
-
-    path = os.path.join(REPO, "AUTOPILOT_PROBE.json")
-    if not os.path.exists(path):
-        return []
-    store = json.load(open(path))
-    lines = [
-        "",
-        "## Autopilot maintenance-only scaling "
-        "(tools/autopilot_maintenance_probe.py)",
-        "",
-        "Cycle cost against an already-persisted index (build/ingest "
-        "excluded): `cycle1` = remedies fire (split/refresh/ban-hot + "
-        "compact), `steady` = the quiet audit-only cycle a daily "
-        "schedule pays. The steady cycle must stay audit-bounded — "
-        "metadata + pruned aggregate reads, no rewrites.",
-        "",
-        "| family | sf | remedy cycle (s) | steady cycle (s) | steady actions |",
-        "| --- | --- | --- | --- | --- |",
-    ]
-    for sf_dir in sorted(store):
-        sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-        for fam, row in sorted(store[sf_dir]["families"].items()):
-            acts = row["steady_actions"]
-            lines.append(
-                f"| `{fam}` | {sf} | {row['cycle1_sec']:.2f} "
-                f"| {row['steady_sec']:.2f} "
-                f"| {acts[0] if acts else '(none)'} |"
-            )
-    return lines
-
-
 def main() -> None:
     import __spark_entry__ as e
 
@@ -164,7 +125,6 @@ def main() -> None:
             f"| {tb if tb is None else f'{tb:.2f}'} "
             f"| {ratio if ratio is None else f'{ratio:.1f}'} | {flag} |"
         )
-    lines += _maintenance_section()
     with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote SCALING.md ({len(rows)} queries, {len(flagged)} flagged)")
