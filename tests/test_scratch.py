@@ -8,7 +8,6 @@ import glob
 import os
 import pathlib
 import re
-import subprocess
 import tempfile
 
 import pytest
@@ -30,19 +29,10 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 def test_scratch_dir_is_the_only_mkdtemp():
     """Package code gets temp dirs only from ``scratch_dir``, so the
     remove-however-the-body-ends policy is written once."""
-    git = subprocess.run(
-        ["git", "ls-files", "admob_data_pipeline_spark/*.py"],
-        cwd=ROOT,
-        capture_output=True,
-        text=True,
-    )
-    if git.returncode == 0:
-        names = git.stdout.split()
-    else:  # not a work tree (e.g. a ``git archive`` copy): walk it
-        names = [
-            p.relative_to(ROOT).as_posix()
-            for p in ROOT.glob("admob_data_pipeline_spark/**/*.py")
-        ]
+    names = [
+        p.relative_to(ROOT).as_posix()
+        for p in ROOT.glob("admob_data_pipeline_spark/**/*.py")
+    ]
     assert names
     sites = [
         f"{n}:{i}"
