@@ -31,12 +31,11 @@ assign+quantize kernel — ``_pq_codebooks`` and the serving core
   UDF anywhere in the search plan (test-pinned): probe selection (a
   broadcast of |C| centroids) and the per-query ADC LUT are collected
   in one bounded job; the candidate cut is an IN-list filter that
-  prunes the bucketed code table to the probed lists plus a broadcast
-  of the literal (list_id, qid) probe pairs, with ZERO Exchange on the
-  index side (pinned in tests/test_ann_index.py); and the ADC distance
-  is m literal-map lookups summed map-side — the only remaining
-  Exchange is the per-query top-k window on the candidate set
-  (~nprobe/|C| of the corpus).
+  prunes the bucketed code table to the probed lists plus a literal
+  list_id → qids fan-out map, with ZERO Exchange on the index side;
+  and the ADC distance is m literal-map lookups summed map-side — the
+  only remaining Exchange is the per-query top-k window on the
+  candidate set (~nprobe/|C| of the corpus).
 
 Lifecycle (round 9): exactly-once ingest (epoch partition overwrite),
 compaction (one file per bucket, epoch fold, tombstone purge), logical
@@ -66,6 +65,7 @@ from admob_data_pipeline_spark.operators.similarity import (
     PQ_SLOTS,
     QUERY_IDS,
     _DUCK_BASE,
+    _by,
     _centroid_frame,
     _codebook_frame,
     _pq_codebooks,
@@ -73,6 +73,7 @@ from admob_data_pipeline_spark.operators.similarity import (
     _sampled_centroids,
     dot,
     fused_assign_code_kernel,
+    point_vec,
     serve_ivfpq,
     with_vec,
 )
@@ -147,7 +148,7 @@ def ann_index_build(
     # §2.6) so the codebook scan back-fills cores under the centroid
     # scan's tail instead of serializing behind it.
     cent_rows, book_mats = par_ops(
-        lambda: _sampled_centroids(base, centroid_mod).orderBy("cid").collect(),
+        lambda: _by(_sampled_centroids(base, centroid_mod).collect(), "cid"),
         lambda: _pq_codebooks(base, sub, m, kc),
     )
     kern, code_schema = fused_assign_code_kernel(
@@ -201,7 +202,7 @@ def _persisted_codebooks(spark: SparkSession, table_prefix: str) -> list:
     """Reload the PQ codebooks from the persisted table into the
     list-of-matrices shape the quantizer kernel broadcasts — one bounded
     collect of m·kc rows."""
-    rows = spark.table(f"{table_prefix}_codebooks").orderBy("s", "code").collect()
+    rows = _by(spark.table(f"{table_prefix}_codebooks").collect(), "s", "code")
     books: dict[int, list] = {}
     for r in rows:
         books.setdefault(int(r["s"]), []).append(list(r["cv"]))
@@ -226,9 +227,7 @@ def load_ann_quantizers(spark: SparkSession, table_prefix: str) -> tuple:
     invalidates it, so scope it to one build→ingest span."""
 
     def _cents():
-        rows = (
-            spark.table(f"{table_prefix}_centroids").orderBy("cid").collect()
-        )
+        rows = _by(spark.table(f"{table_prefix}_centroids").collect(), "cid")
         return (
             [int(r["cid"]) for r in rows],
             [list(r["cv"]) for r in rows],
@@ -318,7 +317,7 @@ def ann_index_upsert(
             spark.table(table)
             .where(F.col("epoch") != int(epoch))
             .select("vec_id")
-            .join(delta.select("vec_id").distinct(), "vec_id", "left_semi")
+            .join(delta.select("vec_id"), "vec_id", "left_semi")
             .distinct()
             .localCheckpoint()  # ≤ |delta| rows; read by the count + append
         )
@@ -396,7 +395,7 @@ def ann_index_search(
     """
     spark = emb.sparkSession
     codes, tomb = index_view(spark, table_prefix, "codes", as_of_epoch=as_of_epoch)
-    qbase, dim = with_vec(emb)
+    qbase, dim = point_vec(emb)
     return serve_ivfpq(
         qbase,
         query_ids,
@@ -487,18 +486,31 @@ def ann_index_search_rerank(
     error affects which candidates make the shortlist but never the
     final ordering — the rank a user sees is exact.
 
-    Scale: the rerank reads R·|Q| full vectors (a broadcast-semi point
-    lookup against the corpus store), not the corpus; everything
+    Scale: the rerank reads R·|Q| full vectors (the broadcast shortlist
+    joined against the corpus store), not the corpus; everything
     upstream is the persisted-index probe. One extra top-k window."""
+    return _reranked(emb, query_ids, table_prefix, k, rerank_r, nprobe).orderBy(
+        "qid", "rank"
+    )
+
+
+def _reranked(
+    emb: DataFrame,
+    query_ids: list[int],
+    table_prefix: str,
+    k: int = DEFAULT_K,
+    rerank_r: int = RERANK_R,
+    nprobe: int = 4,
+) -> DataFrame:
+    """The rows of :func:`ann_index_search_rerank` in no order: a caller
+    that joins or rolls them up skips the global sort, whose range
+    partitioning costs two Spark jobs."""
     shortlist = ann_index_search(
         emb, query_ids, table_prefix, k=rerank_r, nprobe=nprobe
     ).select("qid", "vec_id")
-    base, dim = with_vec(emb)
+    base, dim = point_vec(emb)
     q = _query_vectors(base, query_ids)
-    cand_vecs = base.join(
-        F.broadcast(shortlist.select("vec_id").distinct()), "vec_id", "left_semi"
-    )
-    scored = shortlist.join(cand_vecs, "vec_id").join(
+    scored = base.join(F.broadcast(shortlist), "vec_id").join(
         F.broadcast(q), "qid"
     ).select(
         "qid",
@@ -511,10 +523,8 @@ def ann_index_search_rerank(
         ).alias("cos_sim"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .orderBy("qid", "rank")
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
     )
 
 

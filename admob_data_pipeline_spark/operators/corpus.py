@@ -795,7 +795,7 @@ def _bm25_rank_postings(
     require_all_n: int | None = None,
     exclude_doc: int | None = None,
     doclen: DataFrame | None = None,
-    stats: DataFrame | None = None,
+    stats: DataFrame | tuple | None = None,
 ) -> DataFrame:
     """The posting-bounded BM25 ranking core shared by the term-query
     retrieval ops, the hybrid search's lexical leg, and the PERSISTED
@@ -805,33 +805,46 @@ def _bm25_rank_postings(
     (the persisted-index tables, operators/retrieval_index.py) and are
     derived from the checkpointed ``tf`` table otherwise — ONE ranking
     definition either way, so the persisted path can never drift from
-    the inline one. ``exclude_doc`` drops one doc from the CANDIDATES
-    only, AFTER df is taken from the postings — a more-like-this query
-    must not count the probe out of its terms' dfs."""
-    # df per query term == posting rows per term (tf is doc-distinct)
-    df_q = postings.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    the inline one. Postings that already carry their term's ``df`` or
+    their doc's ``dl`` column skip that lookup, and ``stats`` may be the
+    collected ``(n_docs, avgdl)`` pair, attached as literals.
+    ``exclude_doc`` drops one doc from the CANDIDATES only, AFTER df is
+    taken from the postings — a more-like-this query must not count the
+    probe out of its terms' dfs."""
+    all_postings = postings  # df counts the excluded doc too
     if exclude_doc is not None:
         postings = postings.where(F.col("doc_id") != exclude_doc)
-    cand = postings.select("doc_id").distinct()
-    # dl over ALL the candidate docs' terms — but only theirs: the
-    # broadcast semi-join filters FIRST (map-side), so the rollup
-    # shuffles just the matching docs' tf rows — or, on the persisted
-    # path, reads just their precomputed doclen rows
-    if doclen is not None:
-        dl_cand = doclen.join(F.broadcast(cand), "doc_id", "left_semi")
-    else:
-        dl_cand = (
-            tf.join(F.broadcast(cand), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.sum("tf").alias("dl"))
+    scored = postings
+    if "df" not in postings.columns:
+        # df per query term == posting rows per term (tf is doc-distinct)
+        df_q = all_postings.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+        scored = scored.join(F.broadcast(df_q), "token")
+    if "dl" not in postings.columns:
+        cand = postings.select("doc_id").distinct()
+        # dl over ALL the candidate docs' terms — but only theirs: the
+        # broadcast semi-join filters FIRST (map-side), so the rollup
+        # shuffles just the matching docs' tf rows — or, on the
+        # persisted path, reads just their precomputed doclen rows
+        if doclen is not None:
+            dl_cand = doclen.join(F.broadcast(cand), "doc_id", "left_semi")
+        else:
+            dl_cand = (
+                tf.join(F.broadcast(cand), "doc_id", "left_semi")
+                .groupBy("doc_id")
+                .agg(F.sum("tf").alias("dl"))
+            )
+        scored = scored.join(dl_cand, "doc_id")
+    if isinstance(stats, tuple):
+        n_docs, avgdl = stats
+        scored = scored.select(
+            "*",
+            F.lit(n_docs).cast("long").alias("n_docs"),
+            F.lit(avgdl).cast("double").alias("avgdl"),
         )
-    scored = (
-        postings.join(F.broadcast(df_q), "token")
-        .join(dl_cand, "doc_id")
-        .crossJoin(
+    else:
+        scored = scored.crossJoin(
             F.broadcast(stats if stats is not None else _bm25_stats(tf))
         )
-    )
     per_term = scored.select(
         "doc_id",
         _bm25_score(k1, b).alias("s"),

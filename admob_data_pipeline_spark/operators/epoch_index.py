@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from admob_data_pipeline_spark.operators.util import par_ops
 from admob_data_pipeline_spark.sinks.writers import (
     BASE_EPOCH,
+    _epochs,
     burn_epoch_id,
     compact_bucketed_table,
     index_manifest,
@@ -149,13 +150,13 @@ def latest_versions(
     version ``manifest`` (one row per ingested version of a key) and that
     version's ``value``. ``among`` first restricts the manifest to its
     ``key`` set (broadcast semi-join), so the rollup reads only those
-    rows; ``tombstones`` keeps only LIVE keys, whose latest epoch is
-    newer than their newest stamp. The rollup groups on the key — the
+    rows; the semi-join's hash table drops repeated keys itself, so
+    ``among`` is broadcast without a distinct and its exchange job.
+    ``tombstones`` keeps only LIVE keys, whose latest epoch is newer
+    than their newest stamp. The rollup groups on the key — the
     manifests' bucket key, so no exchange."""
     if among is not None:
-        manifest = manifest.join(
-            F.broadcast(among.select(key).distinct()), key, "left_semi"
-        )
+        manifest = manifest.join(F.broadcast(among.select(key)), key, "left_semi")
     if value is None:
         latest = manifest.groupBy(key).agg(F.max("epoch").alias("epoch"))
     else:
@@ -195,31 +196,35 @@ def index_compact(
 
     The purge is EPOCH-AWARE like the serving masks: a tombstone
     stamped e kills only rows ingested at epoch ≤ e, so the file-pinned
-    tombstone snapshot is expanded against the table's (few) distinct
-    epochs into exact ``(key, epoch)`` pairs. With a version manifest,
+    tombstone snapshot is expanded against the table's (few) epochs —
+    literals from its catalog partition list, no scan — into exact
+    ``(key, epoch)`` pairs. With a version manifest,
     every ``(key, epoch)`` below the key's latest epoch is a STALE
     version and dies too: the fold moves every row into BASE_EPOCH,
     where no epoch could tell the versions apart any more, so it must
     leave exactly one version per key. Several rewrites run concurrently, and one of them may swap
-    out the manifest the purge sets read mid-pass, so those sets are
-    pinned (localCheckpoint — bounded by deletes × epochs and by
-    superseded versions, not by index size) whenever there is more than
-    one rewrite. A delete appended during the pass lands in files
+    out the manifest the stale-version set reads mid-pass, so that set
+    is pinned (localCheckpoint — bounded by superseded versions, not by
+    index size) whenever there is more than one rewrite; the tombstone
+    pairs read only the file-pinned snapshot and literal epochs, which
+    no rewrite touches. A delete appended during the pass lands in files
     created after the pin and survives to the next cycle."""
     snap, applied = tombstones
     pin = len(spec.rewrites) > 1
-
-    def pinned(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint() if pin else df
-
     key = spec.key
-    source = spark.table(f"{prefix}_{spec.versions or spec.ledger}")
+    source_table = f"{prefix}_{spec.versions or spec.ledger}"
+    source = spark.table(source_table)
+    epochs = F.array(*map(F.lit, sorted(set(_epochs(spark, source_table)))))
     pairs = (
-        snap.crossJoin(source.select("epoch").distinct())
+        snap.select(
+            key,
+            "deleted_at_epoch",
+            F.explode(epochs.cast("array<bigint>")).alias("epoch"),
+        )
         .where(F.col("epoch") <= F.col("deleted_at_epoch"))
         .select(key, "epoch")
     )
-    purge = [([key, "epoch"], pinned(pairs))]
+    purge = [([key, "epoch"], pairs)]
     if spec.versions is not None:
         stale = (
             source.join(
@@ -228,7 +233,7 @@ def index_compact(
             .where(F.col("epoch") < F.col("latest"))
             .select(key, "epoch")
         )
-        purge.append(([key, "epoch"], pinned(stale)))
+        purge.append(([key, "epoch"], stale.localCheckpoint() if pin else stale))
 
     def rewrite(suffix: str, bucket_key: str | None, n_buckets: int | None):
         return lambda: compact_bucketed_table(

@@ -27,10 +27,10 @@ from pyspark.sql import functions as F
 from admob_data_pipeline_spark.operators.ann_index import (
     _ORACLE_INDEX_UPSERT,
     ANN_INDEX,
+    _reranked,
     ann_index_build,
     ann_index_compact,
     ann_index_delete,
-    ann_index_search_rerank,
     ann_index_upsert,
     load_ann_quantizers,
 )
@@ -50,7 +50,6 @@ from admob_data_pipeline_spark.operators.corpus import (
 from admob_data_pipeline_spark.operators.epoch_index import (
     drain_stream,
     index_view,
-    keep_latest,
     latest_versions,
     mask_deleted,
     scratch_index,
@@ -89,6 +88,59 @@ def _build_both(docs, bp: str, bm25_path: str, emb, ap: str, ann_path: str) -> N
     )
 
 
+def _probe_profile(spark: SparkSession, bm25_prefix: str, probe: int):
+    """``({token: tf}, dl, n_docs, avgdl)``: the probe's term profile at
+    its LATEST version, with the index's frozen scalars — ``({}, ...)``
+    when the probe is not live. ONE bounded collect, a tagged union of
+    the probe's posting, doclen and tombstone rows and the stats row,
+    resolved here by the families' LSM rules (operators/epoch_index.py):
+    the latest version is the newest doclen epoch (a re-upserted probe
+    profiles and normalizes by its current text, not a blend of
+    versions), and a tombstone stamped at or after it kills it."""
+    postings, doclen, tomb = index_view(spark, bm25_prefix, "postings", "doclen")
+    me = F.col("doc_id") == probe
+    none = F.lit(None)
+
+    def part(df, tag, token, n, epoch, avgdl):
+        return df.select(
+            F.lit(tag).alias("tag"),
+            token.cast("string").alias("token"),
+            n.cast("long").alias("n"),
+            epoch.cast("long").alias("epoch"),
+            avgdl.cast("double").alias("avgdl"),
+        )
+
+    rows = (
+        part(postings.where(me), 0, F.col("token"), F.col("tf"), F.col("epoch"), none)
+        .union(part(doclen.where(me), 1, none, F.col("dl"), F.col("epoch"), none))
+        .union(part(tomb.where(me), 2, none, none, F.col("deleted_at_epoch"), none))
+        .union(
+            part(
+                spark.table(f"{bm25_prefix}_stats"),
+                3,
+                none,
+                F.col("n_docs"),
+                none,
+                F.col("avgdl"),
+            )
+        )
+        .collect()
+    )
+    n_docs, avgdl = next(
+        ((r["n"], r["avgdl"]) for r in rows if r["tag"] == 3), (None, None)
+    )
+    dls = {r["epoch"]: r["n"] for r in rows if r["tag"] == 1}
+    latest = max(dls, default=None)
+    if (
+        latest is None
+        or n_docs is None
+        or any(r["tag"] == 2 and r["epoch"] >= latest for r in rows)
+    ):
+        return {}, None, n_docs, avgdl
+    terms = {r["token"]: r["n"] for r in rows if r["tag"] == 0 and r["epoch"] == latest}
+    return terms, dls[latest], n_docs, avgdl
+
+
 def hybrid_index_search(
     spark: SparkSession,
     emb: DataFrame,
@@ -106,56 +158,46 @@ def hybrid_index_search(
     from the index tables (probe excluded from candidates AFTER df).
     Vector leg (index-only): two-stage persisted ANN serving — ADC
     shortlist of ``VEC_SHORTLIST`` from the bucketed code table, exact
-    cosine rerank to the pool. Fusion: integer RRF, full-outer over two
+    cosine rerank to the pool. Fusion: integer RRF, one rollup of the two
     ≤ pool-row lists."""
     postings_all, doclen, tomb = index_view(spark, bm25_prefix, "postings", "doclen")
     postings_all = mask_deleted(postings_all, tomb, "doc_id")
-    stats = spark.table(f"{bm25_prefix}_stats").select("n_docs", "avgdl")
 
     def _lex() -> DataFrame:
-        # probe term profile: its posting rows + per-term df + its
-        # doclen — all at the probe's LATEST version (a re-upserted probe
-        # must profile and normalize by its current text, not a blend of
-        # versions)
-        probe_latest = latest_versions(
-            doclen.where(F.col("doc_id") == probe), "doc_id", "dl"
-        ).localCheckpoint()  # ≤ one row; read by the ptf mask + qscored
-        ptf = keep_latest(
-            postings_all.where(F.col("doc_id") == probe), probe_latest, "doc_id"
-        ).localCheckpoint()
-        # df per probe term: countDistinct so a re-upserted doc holding
-        # the term in both its versions counts once. (A doc whose LATEST
-        # version dropped the term still counts here until compaction
-        # purges the stale row — bounded drift in the probe's
-        # TERM-SELECTION score only; the ranking df downstream is
-        # computed over the latest-masked postings.)
-        df_t = (
-            postings_all.join(
-                F.broadcast(ptf.select("token")), "token", "left_semi"
-            )
-            .groupBy("token")
-            .agg(F.countDistinct("doc_id").alias("df"))
-        )
-        probe_dl = probe_latest.select("dl")
-        qscored = (
-            ptf.join(F.broadcast(df_t), "token")
-            .crossJoin(F.broadcast(probe_dl))
-            .crossJoin(F.broadcast(stats))
-            .select("token", _bm25_score(BM25_K1, BM25_B).alias("s"))
-        )
-        qterms = (
-            qscored.orderBy(F.desc("s"), "token")
-            .limit(HYBRID_QTERMS)
-            .select("token")
-            .localCheckpoint()
-        )
-        postings_sel = postings_all.join(
-            F.broadcast(qterms), "token", "left_semi"
-        ).localCheckpoint()
+        terms, dl, n_docs, avgdl = _probe_profile(spark, bm25_prefix, probe)
+        # The probe's top terms by BM25 against index-derived dfs: one
+        # bounded collect over its own terms' postings, its profile fed
+        # in as literals. df per probe term is a countDistinct so a
+        # re-upserted doc holding the term in both its versions counts
+        # once. (A doc whose LATEST version dropped the term still counts
+        # here until compaction purges the stale row — bounded drift in
+        # the probe's TERM-SELECTION score only; the ranking df
+        # downstream is computed over the latest-masked postings.)
+        qterms = []
+        if terms:
+            tf = F.create_map(*[F.lit(x) for kv in terms.items() for x in kv])
+            qterms = [
+                r["token"]
+                for r in postings_all.where(F.col("token").isin(list(terms)))
+                .groupBy("token")
+                .agg(F.countDistinct("doc_id").alias("df"))
+                .select(
+                    "token",
+                    "df",
+                    F.element_at(tf, F.col("token")).alias("tf"),
+                    F.lit(dl).cast("long").alias("dl"),
+                    F.lit(n_docs).cast("long").alias("n_docs"),
+                    F.lit(avgdl).cast("double").alias("avgdl"),
+                )
+                .select("token", _bm25_score(BM25_K1, BM25_B).alias("s"))
+                .orderBy(F.desc("s"), "token")
+                .limit(HYBRID_QTERMS)
+                .collect()
+            ]
         return _bm25_rank_latest(
-            postings_sel,
+            postings_all.where(F.col("token").isin(qterms)),
             doclen,
-            stats,
+            (n_docs, avgdl),
             RRF_POOL,
             BM25_K1,
             BM25_B,
@@ -163,7 +205,7 @@ def hybrid_index_search(
         ).select("doc_id", F.col("rnk").alias("lex_rank"))
 
     def _vec() -> DataFrame:
-        return ann_index_search_rerank(
+        return _reranked(
             emb, [probe], ann_prefix, k=RRF_POOL, rerank_r=VEC_SHORTLIST
         ).select(
             F.col("vec_id").alias("doc_id"),
@@ -172,12 +214,20 @@ def hybrid_index_search(
 
     # The two legs read DISJOINT index families (bm25 tables vs ann
     # tables) and each runs eager steps while being built — the lexical
-    # leg its probe/term-selection checkpoint chain, the vector leg the
+    # leg its profile and term-selection collects, the vector leg the
     # bounded probe/LUT collect inside ann_index_search — so construct
     # them CONCURRENTLY (guide §2.6); the fused plan below is identical
     # either way.
     lex, vec = par_ops(_lex, _vec)
-    fused = lex.join(vec, "doc_id", "full_outer").select(
+    # each leg ranks a doc at most once, so one rollup of the two lists
+    # is their full outer join on doc_id — one exchange, not two
+    none = F.lit(None).cast("int")
+    fused = (
+        lex.select("doc_id", "lex_rank", none.alias("vec_rank"))
+        .unionByName(vec.select("doc_id", none.alias("lex_rank"), "vec_rank"))
+        .groupBy("doc_id")
+        .agg(F.max("lex_rank").alias("lex_rank"), F.max("vec_rank").alias("vec_rank"))
+    ).select(
         "doc_id",
         "lex_rank",
         "vec_rank",

@@ -54,7 +54,6 @@ from admob_data_pipeline_spark.operators.corpus import (
     _bm25_rank_postings,
     _bm25_score,
     _bm25_stats,
-    _bm25_tf,
 )
 from admob_data_pipeline_spark.operators.epoch_index import (
     EpochIndex,
@@ -112,14 +111,20 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
     bucketed postings table, the bucketed doc-length table, and the
     one-row frozen corpus scalars. Ingest pays one corpus pass + two
     bucketed writes; every subsequent query touches only its terms'
-    postings."""
+    postings.
+
+    The one pass is the positional postings, checkpointed: tf, doclen
+    and the scalars derive from it exactly as :func:`bm25_index_upsert`
+    derives them (tf = occurrences per (doc_id, token), dl = occurrences
+    per doc ≡ Σtf)."""
     spark = docs.sparkSession
-    tf = _bm25_tf(docs, "text")
+    pos = _bm25_positions(docs).localCheckpoint()
+    tf = _tf_of(pos)
     drop_index_tables(spark, BM25_INDEX, table_prefix)
 
     def _write_postings() -> None:
         write_epoch_bucketed(
-            tf.select("token", "doc_id", "tf"),
+            tf,
             f"{table_prefix}_postings",
             key="token",
             n_buckets=POSTINGS_BUCKETS,
@@ -128,7 +133,7 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
 
     def _write_doclen() -> None:
         write_epoch_bucketed(
-            tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
+            _dl_of(pos),
             f"{table_prefix}_doclen",
             key="doc_id",
             n_buckets=POSTINGS_BUCKETS,
@@ -137,7 +142,7 @@ def bm25_index_build(docs: DataFrame, table_prefix: str, path: str) -> None:
 
     def _write_positions() -> None:
         write_epoch_bucketed(
-            _bm25_positions(docs),
+            pos,
             f"{table_prefix}_positions",
             key="token",
             n_buckets=POSTINGS_BUCKETS,
@@ -199,7 +204,7 @@ def bm25_index_search(
 def _bm25_rank_latest(
     postings: DataFrame,
     doclen: DataFrame,
-    stats: DataFrame,
+    stats: DataFrame | tuple,
     top: int,
     k1: float,
     b: float,
@@ -216,25 +221,30 @@ def _bm25_rank_latest(
     duplicates. The doclen table is the version manifest (exactly one
     row per ingested version of a doc), so one bucketed doclen scan
     (broadcast-semi filtered to the tiny candidate set, rollup on the
-    bucket key: no exchange) yields BOTH the mask and the latest dl,
-    replacing the dl lookup _bm25_rank_postings would have done anyway.
-    A term dropped by the new version scores zero even though no new
-    posting row replaced the old one. Stale versions purge physically
-    at the next compaction (stale-version anti in bm25_index_compact),
-    which keeps this mask a no-op-cost broadcast join in steady
-    state."""
-    dl_latest = latest_versions(
-        doclen, "doc_id", "dl", among=postings
-    ).localCheckpoint()  # ≤ candidate rows; read by mask + dl join
+    bucket key: no exchange) yields BOTH the mask and the latest dl: one
+    broadcast join on ``(doc_id, epoch)`` keeps the latest-version
+    postings and attaches their dl, so _bm25_rank_postings needs no
+    length lookup of its own. A term dropped by the new version scores
+    zero even though no new posting row replaced the old one. Stale
+    versions purge physically at the next compaction (stale-version
+    anti in bm25_index_compact), which keeps this mask a no-op-cost
+    broadcast join in steady state. ``stats``: the stats table, or its
+    collected ``(n_docs, avgdl)`` pair."""
+    dl_latest = latest_versions(doclen, "doc_id", "dl", among=postings)
+    latest = postings.join(F.broadcast(dl_latest), ["doc_id", "epoch"])
+    # df per term over the latest postings: a window on token — the
+    # postings' bucket key, so no exchange when they come straight from
+    # the bucketed scan — not an aggregate joined back, which re-plans
+    # the latest-version join a second time
+    df = F.count(F.lit(1)).over(Window.partitionBy("token"))
     return _bm25_rank_postings(
         None,
-        keep_latest(postings, dl_latest, "doc_id"),
+        latest.withColumn("df", df),
         top,
         k1,
         b,
         require_all_n,
         exclude_doc=exclude_doc,
-        doclen=dl_latest.select("doc_id", "dl"),
         stats=stats,
     )
 
@@ -249,6 +259,21 @@ def _bm25_positions(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return widen_if_narrow(docs).select(
         "doc_id", F.posexplode(tokens(F.col(text_col))).alias("pos", "token")
     ).select("token", "doc_id", "pos")
+
+
+def _tf_of(pos: DataFrame) -> DataFrame:
+    """(token, doc_id, tf) postings from positional postings: a count of
+    occurrences per (doc_id, token), bit-identical to ``_bm25_tf``."""
+    return (
+        pos.groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .select("token", "doc_id", "tf")
+    )
+
+
+def _dl_of(pos: DataFrame) -> DataFrame:
+    """(doc_id, dl) from positional postings: Σtf per doc ≡ its row count."""
+    return pos.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
 
 
 def bm25_index_phrase(
@@ -365,16 +390,14 @@ def bm25_index_upsert(
     # floor for streaming_bm25_* and every hybrid/autopilot re-ingest.
     par_ops(
         lambda: overwrite_epoch_partition(
-            pos.groupBy("doc_id", "token")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .select("token", "doc_id", "tf"),
+            _tf_of(pos),
             f"{table_prefix}_postings",
             key="token",
             n_buckets=POSTINGS_BUCKETS,
             epoch=epoch,
         ),
         lambda: overwrite_epoch_partition(
-            pos.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
+            _dl_of(pos),
             f"{table_prefix}_doclen",
             key="doc_id",
             n_buckets=POSTINGS_BUCKETS,

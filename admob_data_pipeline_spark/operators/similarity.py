@@ -87,14 +87,19 @@ def infer_dim(df: DataFrame) -> int:
     return int(row.d) if row else EMBED_DIM
 
 
-def with_vec(df: DataFrame) -> DataFrame:
+def with_vec(df: DataFrame) -> tuple[DataFrame, int]:
+    # per-vector fold arithmetic is CPU-bound: don't inherit a small
+    # file's single split (no-op on real multi-split scans)
+    return point_vec(widen_if_narrow(df))
+
+
+def point_vec(df: DataFrame) -> tuple[DataFrame, int]:
+    """:func:`with_vec` for a point lookup (a few ``vec_id``s): no
+    repartition of the whole table to fold a handful of vectors."""
     # EMBED_DIM is advisory: every consumer of the returned dim ignores it
     # at execution time, so no per-query infer_dim() driver job is spent
     dim = EMBED_DIM
     v = as_double(F.col("embedding"))
-    # per-vector fold arithmetic is CPU-bound: don't inherit a small
-    # file's single split (no-op on real multi-split scans)
-    df = widen_if_narrow(df)
     return df.select("vec_id", v.alias("v"), norm(v, dim).alias("nrm")), dim
 
 
@@ -109,6 +114,13 @@ def _query_vectors(base: DataFrame, query_ids) -> DataFrame:
     return base.where(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
+
+
+def _by(rows: list, *keys: str) -> list:
+    """Collected ``rows`` ordered by ``keys`` on the driver: a bounded
+    collect needs no global sort, whose range-partitioning sample and
+    shuffle cost two extra Spark jobs."""
+    return sorted(rows, key=lambda r: tuple(r[k] for k in keys))
 
 
 def _top_k(scored: DataFrame, k: int, *order: Column) -> DataFrame:
@@ -380,9 +392,7 @@ def assign_lists(base: DataFrame, cents: DataFrame) -> DataFrame:
     so the argmax (raw cosine DESC, cid ASC on exact ties) is bit-identical
     to the SQL oracle's ROW_NUMBER ordering.
     """
-    cent_rows = (
-        cents if isinstance(cents, list) else cents.orderBy("cid").collect()
-    )
+    cent_rows = cents if isinstance(cents, list) else _by(cents.collect(), "cid")
     cent_ids = [int(r["cid"]) for r in cent_rows]
     cent_mat = [list(r["cv"]) for r in cent_rows]
     _, nearest, _ = _numpy_folds()
@@ -514,11 +524,10 @@ def _pq_codebooks(
         .select(
             "s", "rn", F.expr(f"slice(v, s * {sub} + 1, {sub})").alias("sv")
         )
-        .orderBy("s", "rn")
         .collect()
     )
     books: dict[int, list[list[float]]] = {s: [] for s in range(m)}
-    for r in cb_rows:
+    for r in _by(cb_rows, "s", "rn"):
         books[int(r["s"])].append(list(r["sv"]))
     return [books[s] for s in range(m)]
 
@@ -749,10 +758,10 @@ def serve_ivfpq(
     cells) are bounded by the query batch, so both are evaluated in ONE
     tagged-union job (all float math in JVM expressions) and collected.
     The serving plan is then literal: an IN-list filter prunes the codes
-    scan to the probed lists, a broadcast join of the literal
-    (list_id, qid) pairs fans each row out to its queries (zero Exchange
-    on either side), and ADC is m literal-map lookups summed map-side;
-    the only Exchange is the per-query top-k window.
+    scan to the probed lists, a literal list_id → qids map fans each row
+    out to its queries (no join, zero Exchange), and ADC is m
+    literal-map lookups summed map-side; the only Exchange is the
+    per-query top-k window.
 
     The plan embeds |Q|·(nprobe + m·kc) literals, so batches above
     ``SERVE_QID_BATCH`` are served in chunks and unioned (row-identical:
@@ -794,16 +803,24 @@ def serve_ivfpq(
             s, code = divmod(int(r["x"]), _STRIDE)
             slot_maps[s][int(r["qid"]) * kc + code] = int(r["y"])
 
-        probes_lit = spark.createDataFrame(
-            [(lid, qid) for qid, lid in probe_pairs], "list_id bigint, qid bigint"
-        )
-        probe_lists = sorted({lid for _, lid in probe_pairs})
+        # each probed list fans its rows out to the queries probing it
+        # through a literal list_id → qids map: no join, no broadcast job.
         # No distinct: `codes` holds exactly ONE list per vec_id (argmax
-        # assignment) and `probes_lit` one row per (qid, list), so the join
+        # assignment) and a query probes a list once, so the fan-out
         # cannot produce duplicate (qid, vec_id) pairs.
+        fan: dict[int, list[int]] = {}
+        for qid, lid in probe_pairs:
+            fan.setdefault(lid, []).append(qid)
+        fan_map = ",".join(
+            f"{lid}L,array({','.join(f'{q}L' for q in qids)})"
+            for lid, qids in sorted(fan.items())
+        )
         cand = (
-            codes.where(F.col("list_id").isin(probe_lists))
-            .join(F.broadcast(probes_lit), "list_id")
+            codes.where(F.col("list_id").isin(sorted(fan)))
+            .select(
+                "*",
+                F.explode(F.expr(f"element_at(map({fan_map}), list_id)")).alias("qid"),
+            )
             .where(F.col("vec_id") != F.col("qid"))
         )
         if tombstones is not None:
@@ -868,7 +885,7 @@ def ivfpq_topk(
     spark = emb.sparkSession
     base, dim = with_vec(emb)
     sub = dim // m
-    cent_rows = _sampled_centroids(base, centroid_mod).orderBy("cid").collect()
+    cent_rows = _by(_sampled_centroids(base, centroid_mod).collect(), "cid")
     book_mats = _pq_codebooks(base, sub, m, kc)
     kern, code_schema = fused_assign_code_kernel(
         [int(r["cid"]) for r in cent_rows],

@@ -91,6 +91,13 @@ def get_spark(
         # event-time operators rely on, and DuckDB's epoch() of the same
         # naive value agrees with the UTC interpretation bit-for-bit.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # lower()/upper() through the JVM's own case mapping, not ICU's.
+        # ICU's one-time set-up (CollationAwareUTF8String, UCaseProps) is
+        # paid in every fresh JVM by the first tokens() job: on 4 cores,
+        # that job over the sf0.001 documents took 2.3 CPU-s with ICU and
+        # 0.55 CPU-s without (three fresh sessions each). The tokens are
+        # the same either way (tests/test_text.py pins a non-ASCII set).
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -28,6 +28,7 @@ file set per date partition (partition pruning on read for free).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import threading
 import urllib.request
@@ -322,6 +323,13 @@ def overwrite_epoch_partitions(
         rows.write.mode("overwrite").insertInto(table)
 
 
+def _epochs(spark, table: str) -> list[int]:
+    """The ``epoch`` values in ``table``'s catalog PARTITION LIST
+    (``SHOW PARTITIONS`` — no data file is listed or scanned)."""
+    parts = [r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()]
+    return [int(p.split("=", 1)[1]) for p in parts if p.startswith("epoch=")]
+
+
 def next_epoch(spark, table: str) -> int:
     """Auto-assign the next ingest epoch: max(existing)+1, read from the
     catalog's PARTITION LIST (``SHOW PARTITIONS`` — no data files are
@@ -333,19 +341,16 @@ def next_epoch(spark, table: str) -> int:
     streaming callers must pass the foreachBatch batch id instead, and
     auto-epoch batch ingest goes through :func:`claim_epoch`, which
     turns the same read into a conditional commit."""
-    parts = [r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()]
-    epochs = [int(p.split("=", 1)[1]) for p in parts if p.startswith("epoch=")]
-    return (max(epochs) if epochs else BASE_EPOCH) + 1
+    return max(_epochs(spark, table), default=BASE_EPOCH) + 1
 
 
 def table_location(spark, table: str) -> str:
     """Storage location of a catalog table (DESC FORMATTED — metadata
-    only, no file listing)."""
-    return (
-        spark.sql(f"DESC FORMATTED {table}")
-        .where(F.col("col_name") == "Location")
-        .first()["data_type"]
-    )
+    only, no file listing). The command's rows are already on the
+    driver, so the ``Location`` row is picked here: filtering them as a
+    DataFrame ran two Spark jobs per call."""
+    rows = spark.sql(f"DESC FORMATTED {table}").collect()
+    return next(r["data_type"] for r in rows if r["col_name"] == "Location")
 
 
 def _fs_and_path(spark, path_str: str):
@@ -628,15 +633,16 @@ def purge_applied_tombstones(spark, tomb_table: str, snapshot_files) -> int:
     and the two commute. Crash mid-purge converges too: already-deleted
     files just vanish from the next snapshot, still-present ones are
     re-purged by the next compaction (re-anti-joining an
-    already-applied tombstone is a no-op). Returns the survivor row
-    count."""
+    already-applied tombstone is a no-op). Returns the number of files
+    it deleted (0 on a re-purge of the same list) — no Spark job."""
+    deleted = 0
     if snapshot_files:
         fs, _ = _fs_and_path(spark, snapshot_files[0])
         jvm = spark._jvm
         for f in snapshot_files:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
+            deleted += bool(fs.delete(jvm.org.apache.hadoop.fs.Path(f), False))
     spark.catalog.refreshTable(tomb_table)
-    return spark.table(tomb_table).count()
+    return deleted
 
 
 def _finalize_swap(spark, table: str, old_table: str) -> None:
@@ -719,30 +725,41 @@ def index_manifest(spark, table_prefix: str, tables) -> DataFrame:
     an on-call reads before deciding compaction (epoch count climbing)
     or rebuild (drift audits). ``tables`` is ``[(name, has_epoch),
     ...]``; shared by all three persisted-index families so the
-    manifest schema can never desynchronize between them."""
-    import functools
+    manifest schema can never desynchronize between them.
 
-    def row(t: str, has_epoch: bool) -> DataFrame:
-        df = spark.table(f"{table_prefix}_{t}")
-        if has_epoch:
-            agg = df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("epoch").alias("n_epochs"),
-                F.min("epoch").alias("min_epoch"),
-                F.max("epoch").alias("max_epoch"),
+    Every row count comes from ONE pass over the union of the tables (a
+    tagged count per table), the epoch span from the catalog partition
+    list (:func:`_epochs`), and the few rows are ordered on the driver:
+    two Spark jobs in all, however many tables and epochs."""
+    names = [f"{table_prefix}_{t}" for t, _ in tables]
+    tagged = functools.reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.table(n).select(F.lit(i).alias("i")) for i, n in enumerate(names)],
+    )
+    n_rows = dict(tagged.groupBy("i").count().collect())
+    rows = []
+    for i, (t, has_epoch) in enumerate(tables):
+        n = n_rows.get(i, 0)
+        epochs = _epochs(spark, names[i]) if has_epoch and n else []
+        rows.append(
+            (
+                t,
+                n,
+                len(set(epochs)),
+                min(epochs, default=None),
+                max(epochs, default=None),
             )
-        else:
-            agg = df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.lit(0).cast("long").alias("n_epochs"),
-                F.lit(None).cast("long").alias("min_epoch"),
-                F.lit(None).cast("long").alias("max_epoch"),
-            )
-        return agg.select(F.lit(t).alias("table_name"), "*")
-
-    parts = [row(t, he) for t, he in tables]
-    return functools.reduce(lambda a, b: a.unionByName(b), parts).orderBy(
-        "table_name"
+        )
+    # a VALUES relation: collecting it runs no job, unlike a
+    # createDataFrame of the same rows
+    values = ", ".join(
+        "(" + ", ".join("NULL" if v is None else repr(v) for v in r) + ")"
+        for r in sorted(rows)
+    )
+    return spark.sql(
+        "SELECT CAST(col1 AS STRING) AS table_name, CAST(col2 AS BIGINT) AS n_rows,"
+        " CAST(col3 AS BIGINT) AS n_epochs, CAST(col4 AS BIGINT) AS min_epoch,"
+        f" CAST(col5 AS BIGINT) AS max_epoch FROM VALUES {values}"
     )
 
 
@@ -830,18 +847,14 @@ def compact_bucketed_table(
     LSM/snapshot-expiry trade: compaction reclaims space by discarding
     the history that made as-of reads possible.
 
-    Returns ``(files_before, files_after)`` counted via
-    ``input_file_name`` — distributed, storage-agnostic.
+    Returns ``(files_before, files_after)``: the length of the table's
+    file index (``inputFiles()``), which the scan lists anyway — no
+    Spark job, storage-agnostic.
     """
     import uuid
 
     def n_files() -> int:
-        return (
-            spark.table(table)
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
+        return len(spark.table(table).inputFiles())
 
     recover_compaction(spark, table)
     files_before = n_files()

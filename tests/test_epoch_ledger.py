@@ -120,12 +120,13 @@ def test_purge_applied_tombstones_keeps_late_deletes(spark):
         ).write.mode("append").format("parquet").saveAsTable(tomb)
         # the pinned snapshot is immutable: it still reads 2 rows
         assert snap.count() == 2
-        kept = writers.purge_applied_tombstones(spark, tomb, files)
-        assert kept == 1
+        assert writers.purge_applied_tombstones(spark, tomb, files) == len(files)
+        assert spark.table(tomb).count() == 1
         assert [r["doc_id"] for r in spark.table(tomb).collect()] == [3]
         # crash-retry convergence: re-purging the same file list is a
         # no-op (files already gone), survivors untouched
-        assert writers.purge_applied_tombstones(spark, tomb, files) == 1
+        assert writers.purge_applied_tombstones(spark, tomb, files) == 0
+        assert spark.table(tomb).count() == 1
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tomb}")
 

@@ -102,7 +102,7 @@ def test_upsert_appends_postings_and_keeps_layout(spark, sf_dir):
         stats_before = spark.table(f"{prefix}_stats").collect()
         retrieval_index.bm25_index_upsert(delta, prefix)
         got = spark.table(f"{prefix}_postings")
-        delta_tf = retrieval_index._bm25_tf(delta, "text")
+        delta_tf = corpus._bm25_tf(delta, "text")
         assert got.count() == n_post + delta_tf.count()
         assert spark.table(f"{prefix}_stats").collect() == stats_before
         probe = spark.createDataFrame([("spark",)], "token string")
