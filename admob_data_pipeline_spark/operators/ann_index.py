@@ -1815,52 +1815,6 @@ FROM counts ORDER BY table_name
 """
 
 
-def serving_plans(spark: SparkSession, sf_dir: str):
-    """Plan-audit hook (tools/plan_audit.py): the registered wrappers
-    collect internally so scratch tables can be dropped, which makes
-    their post-collect plan trivially empty — the REAL serving plans
-    must be audited against a prebuilt scratch index. Returns
-    ``(name → thunk-of-lazy-DataFrame, cleanup)``; the auditor explains
-    each thunk's frame and then calls cleanup."""
-    from contextlib import ExitStack
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with ExitStack() as scratch:
-        out, prefix = scratch.enter_context(
-            scratch_index(spark, ANN_INDEX)
-        )
-        ann_index_build(emb, prefix, out)
-        cleanup = scratch.pop_all().close
-
-    return {
-        "ann_index_search": lambda: ann_index_search(
-            emb, QUERY_IDS, prefix
-        ),
-        "ann_index_rerank": lambda: ann_index_search_rerank(
-            emb, QUERY_IDS, prefix
-        ),
-        "ann_index_asof": lambda: ann_index_search(
-            emb, QUERY_IDS, prefix, as_of_epoch=BASE_EPOCH
-        ),
-        "ann_index_drift": lambda: ann_index_drift(spark, prefix),
-    }, cleanup
-
-
-# registered wrappers that collect internally (scratch-table lifecycle);
-# their driver-gate plan is post-collect local — the serving-side plans
-# are audited via serving_plans, the write paths pinned in tests
-LIFECYCLE_WRITE = {
-    "ann_index_build",
-    "ann_index_upsert",
-    "ann_index_reupsert",
-    "ann_index_compact",
-    "ann_index_split",
-    "ann_index_autopilot",
-    "streaming_ann_ingest",
-    "streaming_ann_maintained",
-}
-
-
 QUERIES = {
     "ann_index_build": q_ann_index_build,
     "ann_index_search": q_ann_index_search,

@@ -1361,42 +1361,6 @@ FROM counts ORDER BY table_name
 """
 
 
-def serving_plans(spark: SparkSession, sf_dir: str):
-    """Plan-audit hook: the real index-serving plan (see
-    ann_index.serving_plans for the contract)."""
-    from contextlib import ExitStack
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.where(F.col("doc_id") % PROBE_MOD != 0)
-    batch = docs.where(F.col("doc_id") % PROBE_MOD == 0)
-    with ExitStack() as scratch:
-        out, prefix = scratch.enter_context(
-            scratch_index(spark, DEDUP_INDEX)
-        )
-        dedup_index_build(base, prefix, out)
-        cleanup = scratch.pop_all().close
-
-    return {
-        "dedup_index_probe": lambda: dedup_index_probe(batch, prefix),
-        "dedup_index_asof": lambda: dedup_index_probe(
-            batch, prefix, as_of_epoch=BASE_EPOCH
-        ),
-        "dedup_index_drift": lambda: dedup_index_drift(spark, prefix),
-    }, cleanup
-
-
-LIFECYCLE_WRITE = {
-    "dedup_index_build",
-    "dedup_index_upsert",
-    "dedup_index_reupsert",
-    "dedup_index_compact",
-    "dedup_index_ban_hot",
-    "dedup_index_autopilot",
-    "streaming_dedup_ingest",
-    "streaming_dedup_maintained",
-}
-
-
 QUERIES = {
     "dedup_index_build": q_dedup_index_build,
     "dedup_index_probe": q_dedup_index_probe,

@@ -1221,32 +1221,6 @@ assert _shortlist_sql_re in _ORACLE_HYBRID_REUPSERT
 assert "FROM embeddings" in _ORACLE_HYBRID_REUPSERT
 
 
-def serving_plans(spark: SparkSession, sf_dir: str):
-    """Plan-audit hook: the registered wrapper collects internally for
-    scratch cleanup; expose the real LAZY hybrid plan over prebuilt
-    scratch indexes (see ann_index.serving_plans for the contract)."""
-    from contextlib import ExitStack
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    with ExitStack() as scratch:
-        out, bp, ap = scratch.enter_context(
-            scratch_index(spark, BM25_INDEX, ANN_INDEX)
-        )
-        _build_both(docs, bp, f"{out}/bm25", emb, ap, f"{out}/ann")
-        cleanup = scratch.pop_all().close
-
-    return {
-        "hybrid_index_search": lambda: hybrid_index_search(
-            spark, emb, bp, ap
-        ),
-        # the parity audit is a pure read over the two indexes — its
-        # real reconciliation plan (two distincts + full-outer + agg)
-        # is what runs at maintenance cadence
-        "hybrid_index_parity": lambda: hybrid_index_parity(spark, bp, ap),
-    }, cleanup
-
-
 # the guarded-autopilot fixture: doc_id % 7 == 3 is the DECLARED
 # text-only slice (built into BM25, never into ANN) and
 # doc_id % 100 == 5 (outside that slice) is the injected operational
@@ -1335,18 +1309,6 @@ SELECT a.n - o.n          AS n_bm25_live,
        o.n                AS n_tomb_ann
 FROM a, t, o
 """
-
-
-# hybrid_index_repair mutates both indexes (tombstone appends) before
-# its final audit read — a write-path wrapper like the other families'
-LIFECYCLE_WRITE = {
-    "hybrid_index_repair",
-    "hybrid_index_autopilot",
-    "hybrid_index_autopilot_guarded",
-    "hybrid_index_reupsert",
-    "streaming_hybrid_ingest",
-    "streaming_hybrid_maintained",
-}
 
 
 QUERIES = {

@@ -1304,46 +1304,6 @@ FROM counts ORDER BY table_name
 """
 
 
-def serving_plans(spark: SparkSession, sf_dir: str):
-    """Plan-audit hook: the real index-serving plan (see
-    ann_index.serving_plans for the contract)."""
-    from contextlib import ExitStack
-
-    docs = load_table(spark, sf_dir, "documents")
-    with ExitStack() as scratch:
-        out, prefix = scratch.enter_context(
-            scratch_index(spark, BM25_INDEX)
-        )
-        bm25_index_build(docs, prefix, out)
-        cleanup = scratch.pop_all().close
-
-    return {
-        "bm25_index_search": lambda: bm25_index_search(
-            spark, BM25_QUERY, prefix
-        ),
-        "bm25_index_phrase": lambda: bm25_index_phrase(
-            spark, BM25_PHRASE, prefix
-        ),
-        "bm25_index_asof": lambda: bm25_index_search(
-            spark, BM25_QUERY, prefix, as_of_epoch=BASE_EPOCH
-        ),
-        "bm25_index_drift": lambda: bm25_index_drift(spark, prefix),
-    }, cleanup
-
-
-LIFECYCLE_WRITE = {
-    "bm25_index_build",
-    "bm25_index_upsert",
-    "bm25_index_upsert_arbiter",
-    "bm25_index_reupsert",
-    "bm25_index_compact",
-    "bm25_index_refresh",
-    "bm25_index_autopilot",
-    "streaming_bm25_ingest",
-    "streaming_bm25_maintained",
-}
-
-
 QUERIES = {
     "bm25_index_build": q_bm25_index_build,
     "bm25_index_search": q_bm25_index_search,

@@ -63,17 +63,3 @@ def _merged(attr: str) -> dict:
 
 QUERIES = _merged("QUERIES")
 ORACLES = _merged("ORACLES")
-
-# Plan-audit hooks: registered index-lifecycle wrappers collect
-# internally (scratch-table cleanup), so their post-collect plan is
-# trivially local. Each provider builds a scratch index and exposes the
-# REAL lazy serving plans; LIFECYCLE_WRITE names the wrappers whose plan
-# is a write path (audited in tests, serving side via the providers).
-SERVING_PLAN_PROVIDERS = [
-    mod.serving_plans
-    for mod in _MODULES
-    if hasattr(mod, "serving_plans")
-]
-LIFECYCLE_WRITE = frozenset().union(
-    *(getattr(mod, "LIFECYCLE_WRITE", set()) for mod in _MODULES)
-)

@@ -773,7 +773,7 @@ def should_compact(manifest_rows, max_epochs: int = 16) -> bool:
     each epoch adds up to one FILE per bucket, and files-per-bucket is
     what decays scans and forces the per-bucket Sort — post-compaction
     the same index served in 0.93 s from 8 files
-    (tools/epoch_scaling_probe.py). The default of 16
+    (``git show b689e6b:tools/epoch_scaling_probe.py``). The default of 16
     bounds the decay to ~17 files/bucket worst case while keeping an
     as-of history window (compaction voids time travel for the folded
     span)."""

@@ -1,4 +1,5 @@
-"""Shared oracle-comparison helpers (used by tests/ and tools/).
+"""Shared oracle-comparison and job-counting helpers (used by tests/ and
+tools/).
 
 Mirrors the driver's t2 gate: row count + column names + order-insensitive
 value comparison (rows sorted by all columns, columns sorted by name).
@@ -82,3 +83,33 @@ def diff_vs_oracle(spark_df, con, oracle: str) -> list[str]:
             f"{n_diff} cell diffs, max_float_diff={max_float}, first={first}"
         )
     return problems
+
+
+def _job_ids(store) -> list[int]:
+    ids = []
+    it = store.jobsList(None).iterator()
+    while it.hasNext():
+        ids.append(it.next().jobId())
+    return ids
+
+
+def new_jobs(spark, fn):
+    """``(fn(), job_ids)``: the ids, ascending, of every Spark job ``fn``
+    started, in any job group (``par_ops`` legs and streaming
+    micro-batches run under their own), read from the status store once
+    the listener bus has delivered every event. Raises if the store
+    dropped any of them: job ids are minted consecutively, so the new ids
+    must run on from the last id seen before the call without a gap."""
+    sc = spark.sparkContext._jsc.sc()
+    bus, store = sc.listenerBus(), sc.statusStore()
+    bus.waitUntilEmpty()
+    last = max(_job_ids(store), default=-1)
+    out = fn()
+    bus.waitUntilEmpty()
+    ids = sorted(j for j in _job_ids(store) if j > last)
+    if ids != list(range(last + 1, last + 1 + len(ids))):
+        raise RuntimeError(
+            f"status store dropped job ids after {last}: kept {ids[:5]}..."
+            " (raise spark.ui.retainedJobs)"
+        )
+    return out, ids

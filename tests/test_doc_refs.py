@@ -20,7 +20,9 @@ CITATION = re.compile(
 )
 REMOVED_ARTIFACT = re.compile(
     r"(git\s+show\s+[0-9a-f]+:)?"
-    r"(?:ROUND_NOTES r\d+|OPTIMIZATION_r\d|plans/r1\d/|CORRECTNESS_r\d|SCALE_SWEEP_r\d)"
+    r"(?:ROUND_NOTES r\d+|OPTIMIZATION_r\d|plans/r1\d/|CORRECTNESS_r\d|SCALE_SWEEP_r\d"
+    r"|(?:tools/)?(?:plan_audit|scale_sweep|scaling_report|epoch_scaling_probe"
+    r"|profile_query)\.py|PLAN_AUDIT\.md|SCALING\.md)"
 )
 
 

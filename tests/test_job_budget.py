@@ -1,7 +1,7 @@
 """Job budgets of an index lifecycle's fixed-cost steps.
 
 At index-serving sizes the fixed cost of a Spark job outweighs its work,
-so these pins count jobs — from the status tracker, a structural counter
+so these pins count jobs — from the status store, a structural counter
 that host load cannot fake — on one seeded BM25 + ANN pair shaped like
 the ``index_lifecycle`` benchmark: a build over three quarters of the
 corpus, two upsert epochs with the held-out quarter, and one delete.
@@ -30,17 +30,14 @@ from admob_data_pipeline_spark.operators.retrieval_index import (
     bm25_index_upsert,
 )
 from admob_data_pipeline_spark.sources.tables import load_table
+from admob_data_pipeline_spark.testing import new_jobs
 
 
 def _jobs(spark, fn):
-    """``(result, jobs)``: ``fn()`` and the number of Spark jobs it ran."""
-    tracker = spark.sparkContext.statusTracker()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    last = max(tracker.getJobIdsForGroup(), default=-1)
-    out = fn()
-    bus.waitUntilEmpty()
-    return out, sum(j > last for j in tracker.getJobIdsForGroup())
+    """``(result, jobs)``: ``fn()`` and the number of Spark jobs it ran,
+    in any job group."""
+    out, ids = new_jobs(spark, fn)
+    return out, len(ids)
 
 
 def _arrival(col: str, epoch: int):
